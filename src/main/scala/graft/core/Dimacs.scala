@@ -45,7 +45,23 @@ final class DigestSink extends ByteSink {
 
   def hex: String = {
     flush()
-    val d = md.digest()
+    DigestSink.toHex(md.digest())
+  }
+}
+
+object DigestSink {
+  private val local: ThreadLocal[MessageDigest] =
+    ThreadLocal.withInitial(() => MessageDigest.getInstance("MD5"))
+
+  /** MD5 hex of `bytes(off until off + len)` with one update call. */
+  def md5Hex(bytes: Array[Byte], off: Int, len: Int): String = {
+    val md = local.get()
+    md.reset()
+    md.update(bytes, off, len)
+    toHex(md.digest())
+  }
+
+  private def toHex(d: Array[Byte]): String = {
     val out = new Array[Char](32)
     val hexd = "0123456789abcdef".toCharArray
     var i = 0
@@ -56,11 +72,6 @@ final class DigestSink extends ByteSink {
     }
     new String(out)
   }
-}
-
-object DigestSink {
-  private val local: ThreadLocal[MessageDigest] =
-    ThreadLocal.withInitial(() => MessageDigest.getInstance("MD5"))
 }
 
 final class BufferSink(initial: Int = 1024) extends ByteSink {
@@ -109,8 +120,18 @@ object Dimacs {
     }
   }
 
-  /** Exact-content instance id: MD5 of the hash-form normalization. */
+  /** Exact-content instance id: MD5 of the hash-form normalization, staged
+    * by the single-pass [[CnfScan]]. A doc that scan rejects (the hash form
+    * tolerates `- 4`, a dangling sign and int overflow; the clause parse
+    * does not) streams through `normalizeCnf` instead.
+    */
   def gbdHashCnf(buf: Array[Byte]): String = {
+    val scan = try new CnfScan(buf, hash = true) catch { case _: DocParseException => null }
+    if (scan != null) scan.gbdHash else gbdHashCnfStreamed(buf)
+  }
+
+  /** MD5 of `normalizeCnf` streamed through a [[DigestSink]]. */
+  private[core] def gbdHashCnfStreamed(buf: Array[Byte]): String = {
     val sink = new DigestSink
     normalizeCnf(buf, sink)
     sink.hex

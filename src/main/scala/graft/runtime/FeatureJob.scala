@@ -48,7 +48,10 @@ object FeatureJob {
       keepPayload: Boolean = false,
       /** per-document resource envelope (ResourceLimits.h contract): a doc
         * over this byte budget gets status="limit" instead of stalling a
-        * task — deterministic, so resume checksums are stable
+        * task — deterministic, so resume checksums are stable. Bytes alone
+        * do not bound memory (the 13-byte `2147483647 0` names a 2^31-entry
+        * variable range), so for cnf a doc whose variable-indexed arrays
+        * would pass the same budget (CnfExtract.overVarBudget) is "limit" too
         */
       maxDocBytes: Int = graft.functions.CnfExtract.DefaultMaxBytes,
       /** the TIME half of the envelope: deterministic op-count budget
