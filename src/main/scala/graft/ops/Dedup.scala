@@ -541,84 +541,54 @@ object Dedup {
     * path length — the same doubling that makes large-star/small-star
     * converge in O(log diameter) instead of O(diameter) on chain-shaped dup
     * graphs; ClustersSpec proves a 64-node path converges in <= 7 rounds).
+    * Both paths below stop after `maxIters` rounds, so a graph the cap
+    * cannot close gets the same partial labels from either.
     *
-    * Cost shape per round: two label-sized joins + ONE Spark job — the
-    * convergence flag rides the same aggregate action that materializes the
-    * round's persist (the previous formulation ran an extra join +
-    * limit(1).count() job per round just to test convergence).
+    * Shape: the pair list is materialized ONCE (eager, pair-sized) and one
+    * bounded collect decides the path. SIZE-ADAPTIVE DISPATCH: the dup GRAPH
+    * is pair-sized, not corpus-sized. When it has at most
+    * `spark.graft.cc.localEdgeThreshold` directed edges (each pair row
+    * counts as two; default 4M) and integral, non-null ids, the driver
+    * replays the same rounds on primitive arrays ([[localClusters]]); the
+    * collect stops at the bound, so no more than that reaches the driver.
+    * Otherwise the distributed rounds run over the distinct edge list,
+    * materialized once: two label-sized joins + ONE Spark job per round (the
+    * convergence flag rides the aggregate over the round's checkpoint).
+    * OptR06Spec and DedupIdentitySpec pin local ≡ distributed, the latter
+    * also under the round cap.
     */
   def clusters(pairs: DataFrame, idA: String = "id_a", idB: String = "id_b",
                maxIters: Int = 10): DataFrame = {
-    val edges = pairs.select(col(idA).as("a"), col(idB).as("b"))
-      .unionByName(pairs.select(col(idB).as("a"), col(idA).as("b")))
-      .distinct()
-      .persist()
-    // SIZE-ADAPTIVE DISPATCH (the bpeTrain localization-probe pattern): the
-    // dup GRAPH is pair-sized, not corpus-sized — after banding/verify it is
-    // typically orders of magnitude smaller than the corpus. When it fits
-    // the documented driver bound, a driver-local union-find computes the
-    // identical min-label-per-component answer in one pass instead of
-    // O(log diameter) join rounds; past the bound the distributed
-    // pointer-jumping path below runs unchanged (the 100-TB shape). The
-    // count() action doubles as the cache materialization the first
-    // distributed round would have paid anyway, so the probe is free.
-    // ClustersSpec pins local-vs-distributed equality on random graphs.
-    val localMax = pairs.sparkSession.conf
-      .getOption("spark.graft.cc.localEdgeThreshold").map(_.toLong)
-      .getOrElse(4L << 20)
-    val integralIds = edges.schema("a").dataType match {
+    val p = pairs.select(col(idA).as("a"), col(idB).as("b")).localCheckpoint()
+    val directed = p.unionByName(p.select(col("b").as("a"), col("a").as("b"))).distinct()
+    val idType = directed.schema("a").dataType
+    val integralIds = Seq(p.schema("a").dataType, p.schema("b").dataType).forall {
       case org.apache.spark.sql.types.LongType |
            org.apache.spark.sql.types.IntegerType |
            org.apache.spark.sql.types.ShortType => true
       case _ => false
     }
-    // one aggregate both counts rows and proves no null endpoint (a null id
-    // would not survive a long-getter; the distributed path handles it)
-    val probe = edges.agg(count(lit(1)), count(col("a")), count(col("b"))).head()
-    val (nEdges, nonNullOk) =
-      (probe.getLong(0), probe.getLong(0) == probe.getLong(1) &&
-        probe.getLong(0) == probe.getLong(2))
-    if (integralIds && nonNullOk && nEdges <= localMax) {
-      val idType = edges.schema("a").dataType
-      val es = edges.select(col("a").cast("long"), col("b").cast("long"))
-        .collect()
-      edges.unpersist()
-      // union-find with path compression; final label = min node id per root
-      val parent = new java.util.HashMap[Long, Long](es.length * 2)
-      def find(x0: Long): Long = {
-        var x = x0
-        var p = parent.getOrDefault(x, x)
-        while (p != x) { x = p; p = parent.getOrDefault(x, x) }
-        var y = x0 // path compression
-        while (y != x) { val n = parent.get(y); parent.put(y, x); y = n }
-        x
+    if (integralIds) {
+      val localMax = pairs.sparkSession.conf
+        .getOption("spark.graft.cc.localEdgeThreshold").map(_.toLong)
+        .getOrElse(4L << 20)
+      val maxRows = math.min(math.max(localMax / 2, 0L), Int.MaxValue - 1L).toInt
+      // one task reads the pair partitions in turn and stops one row past
+      // the bound: a graph over it never reaches the driver whole
+      val rows = p.select(col("a").cast("long"), col("b").cast("long"))
+        .coalesce(1).limit(maxRows + 1).collect()
+      if (rows.length <= maxRows && rows.forall(r => !r.isNullAt(0) && !r.isNullAt(1))) {
+        val (ids, labels) = localClusters(rows.map(_.getLong(0)), rows.map(_.getLong(1)), maxIters)
+        val spark = pairs.sparkSession
+        import spark.implicits._
+        return ids.indices.map(i => (ids(i), ids(labels(i)))).toDF("id", "cluster_id")
+          .select(col("id").cast(idType).as("id"),
+            col("cluster_id").cast(idType).as("cluster_id"))
       }
-      var i = 0
-      while (i < es.length) {
-        val r = es(i)
-        val (ra, rb) = (find(r.getLong(0)), find(r.getLong(1)))
-        if (ra != rb) parent.put(ra, rb)
-        i = i + 1
-      }
-      val minOfRoot = new java.util.HashMap[Long, Long]()
-      val nodes = new java.util.TreeSet[java.lang.Long]()
-      i = 0
-      while (i < es.length) {
-        val a = es(i).getLong(0) // both directions present: a covers all nodes
-        nodes.add(a)
-        val r = find(a)
-        val m = minOfRoot.getOrDefault(r, Long.MaxValue)
-        if (a < m) minOfRoot.put(r, a)
-        i = i + 1
-      }
-      val out = new scala.collection.mutable.ArrayBuffer[(Long, Long)](nodes.size)
-      nodes.forEach(n => out += ((n.longValue(), minOfRoot.get(find(n.longValue())))))
-      val spark = pairs.sparkSession
-      import spark.implicits._
-      return out.toSeq.toDF("id", "cluster_id")
-        .select(col("id").cast(idType).as("id"),
-          col("cluster_id").cast(idType).as("cluster_id"))
     }
+    // over the bound, or null / non-integral ids: the distributed rounds
+    // over the distinct edge list, materialized once for all of them
+    val edges = directed.localCheckpoint()
     var labels = edges.select(col("a").as("id"))
       .distinct()
       .withColumn("cluster_id", col("id"))
@@ -652,19 +622,73 @@ object Dedup {
       converged = !changed
       iter += 1
     }
-    edges.unpersist()
     labels
   }
 
+  /** The rounds of [[clusters]] on the driver: `a(i)`-`b(i)` are the
+    * undirected edges. Returns the sorted distinct node ids and, per node,
+    * the index of its label. Ids sort like the index, so min over labels is
+    * min over indexes, and each round is the distributed one: neighbour
+    * minimum, then one pointer-jumping hop through the previous round's
+    * labels; stop when no label changes or after `maxIters` rounds.
+    */
+  private def localClusters(a: Array[Long], b: Array[Long],
+                            maxIters: Int): (Array[Long], Array[Int]) = {
+    val all = new Array[Long](a.length * 2)
+    System.arraycopy(a, 0, all, 0, a.length)
+    System.arraycopy(b, 0, all, a.length, b.length)
+    java.util.Arrays.sort(all)
+    var n = 0
+    var r = 0
+    while (r < all.length) {
+      if (n == 0 || all(r) != all(n - 1)) { all(n) = all(r); n += 1 }
+      r += 1
+    }
+    val ids = java.util.Arrays.copyOf(all, n)
+    val ia = a.map(java.util.Arrays.binarySearch(ids, _))
+    val ib = b.map(java.util.Arrays.binarySearch(ids, _))
+    var label = Array.tabulate(n)(identity)
+    var next = new Array[Int](n)
+    val nmin = new Array[Int](n)
+    var iter = 0
+    var changed = true
+    while (iter < maxIters && changed) {
+      System.arraycopy(label, 0, nmin, 0, n)
+      var e = 0
+      while (e < ia.length) {
+        val (u, v) = (ia(e), ib(e))
+        if (label(v) < nmin(u)) nmin(u) = label(v)
+        if (label(u) < nmin(v)) nmin(v) = label(u)
+        e += 1
+      }
+      changed = false
+      var i = 0
+      while (i < n) {
+        next(i) = math.min(nmin(i), label(nmin(i)))
+        if (next(i) != label(i)) changed = true
+        i += 1
+      }
+      val t = label; label = next; next = t
+      iter += 1
+    }
+    (ids, label)
+  }
+
   /** The END-TO-END near-duplicate dedup pipeline — the flagship corpus op
-    * assembled from this module's stages in one DAG:
+    * assembled from this module's stages, each run once per call:
     *
-    *   MinHash-LSH candidates ([[minHashPairs]] at banding threshold 0)
+    *   ONE shingling pass, materialized as (_sid, _sh)
+    *     -> MinHash-LSH candidates ([[candidatePairsPre]]: one signature per
+    *        document, one shuffle of the banded rows read by both sides of
+    *        the bucket self-join; docs with no shingle never enter a bucket)
     *     -> EXACT shingle-Jaccard verify at `jaccard` (LSH recall is a
     *        probabilistic 1 at sane banding; the verify makes the pair set
     *        exactly {J >= jaccard}, so downstream is deterministic)
-    *     -> connected components over the dup graph ([[clusters]])
-    *     -> canonical selection: min id per component, or — when
+    *     -> connected components over the dup graph ([[clusters]]: the pair
+    *        list materialized once, one bounded collect picks the driver or
+    *        the distributed rounds)
+    *     -> labels attached to the ids of the shingle projection, then
+    *        canonical selection: min id per component, or — when
     *        `keepByCol` names a score column on `df` — the component's
     *        best row by (score desc NULLS LAST, id asc), the production
     *        policy of keeping the longest/highest-quality variant instead
@@ -674,7 +698,7 @@ object Dedup {
     *        window, so a pathological giant cluster (one template
     *        replicated across a crawl) spreads across tasks like any
     *        other aggregate instead of concentrating in one sort
-    *        partition.
+    *        partition. Only this path reads `df` again (for the score).
     *
     * Output: one row PER INPUT ROW — (idCol, cluster_id, cluster_size,
     * kept). Singletons are their own cluster of size 1; `kept` marks the
@@ -682,10 +706,9 @@ object Dedup {
     * the deduplicated corpus and the rest is the audit trail.
     *
     * Scale shape: the text reduces to signatures/shingle arrays before
-    * anything wide; pairs are bucket-join-bounded; CC runs on the
-    * pair-graph (dup-sized, not corpus-sized); the final join-back
-    * attaches labels to the corpus by id only. The cluster-size aggregate
-    * is label-sized.
+    * anything wide; pairs are bucket-bounded; CC runs on the pair-graph
+    * (dup-sized, not corpus-sized); the labelling joins carry ids only.
+    * The cluster-size aggregate is label-sized.
     */
   def nearDupDedup(df: DataFrame, idCol: String, textCol: String,
                    numHashes: Int = 128, numBands: Int = 32,
@@ -695,60 +718,81 @@ object Dedup {
     // ONE tokenization/shingling pass over the corpus: the banding
     // signature is DERIVED from the shingle array (TextKernels factoring,
     // bit-identical to minhash_signature(text)), and the materialized
-    // (id, shingles) projection feeds banding AND both sides of the exact
-    // verify. The previous shape ran the signature kernel once and the
-    // shingle kernel twice more (once per verify join side) over the text.
+    // (id, shingles) projection feeds banding, both sides of the exact
+    // verify and the labelling.
     val pre = Fanout.ensure(df).select(col(idCol).as("_sid"),
       shingles(col(textCol), shingleSize).as("_sh"))
       .localCheckpoint()
     nearDupDedupPre(df, pre, idCol, numHashes, numBands, jaccard, keepByCol)
   }
 
-  /** [[nearDupDedup]] from a PRE-materialized (_sid, _sh) shingle
-    * projection — the entry point [[nearDupIncremental]] uses so the
-    * within-shard dedup reuses the shard's one shingling pass instead of
-    * re-tokenizing (round-5 verdict item 1). Semantics identical to
-    * [[nearDupDedup]]: banding signatures derive from `_sh` exactly as
-    * `minhash_signature` derives from the text, and the LSH candidate set
-    * at banding threshold 0 is the set of pairs sharing any
-    * (band, bucket) — the est_jaccard >= 0 filter the old path applied
-    * was vacuous there (the estimate is a non-null fraction whenever both
-    * signatures exist, and a null signature never enters a bucket).
+  /** Rows of a (_sid, _sh) projection that can verify against anything:
+    * a doc under `shingleSize` words (or with null text) has no shingle, so
+    * its signature is all Long.MaxValue and every such doc would share one
+    * bucket in every band — k of them a k(k-1)/2-pair hot spot that the
+    * verify then rejects whole. Banding and verify both read this.
     */
+  private def withShingles(pre: DataFrame): DataFrame = pre.where(size(col("_sh")) > 0)
+
+  /** Banded (band, bucket, _id) rows of a (_sid, _sh) projection: one
+    * signature per row, derived from the shingles.
+    */
+  private def bandedPre(pre: DataFrame, numHashes: Int, numBands: Int): DataFrame =
+    bandedFromSigs(
+      withShingles(pre).select(col("_sid").as("_id"),
+        minhash_from_shingles(col("_sh"), numHashes).as("_sig")),
+      numBands, numHashes / numBands)
+
+  /** LSH candidates of a pre-materialized (_sid, _sh) projection: the
+    * distinct (id_a < id_b) pairs sharing any (band, bucket). The banded
+    * frame is computed and shuffled ONCE: both sides of the bucket
+    * self-join read the same exchange (Spark reuses an exchange whose
+    * subtree is identical), so each signature is computed once — a
+    * broadcast self-join evaluates it on both of its sides. The sort-merge
+    * hint keeps the planner from broadcasting one side and keeps the join
+    * streaming at any size.
+    */
+  private[graft] def candidatePairsPre(pre: DataFrame, numHashes: Int,
+                                       numBands: Int): DataFrame = {
+    val banded = bandedPre(pre, numHashes, numBands).hint("merge")
+    banded.as("_x").join(banded.as("_y"),
+        col("_x._band") === col("_y._band") && col("_x._bucket") === col("_y._bucket") &&
+          col("_x._id") < col("_y._id"))
+      .select(col("_x._id").as("id_a"), col("_y._id").as("id_b"))
+      .distinct()
+  }
+
   /** LSH candidate generation + exact shingle-Jaccard verify from a
     * pre-materialized (_sid, _sh) projection — the shared pair stage of
-    * [[nearDupDedupPre]] and the q48 dup-cluster query (which previously
-    * re-ran the shingle kernel three times: once inside minHashPairs and
-    * once per verify join side). Output: verified (id_a, id_b).
+    * [[nearDupDedupPre]] and the q48 dup-cluster query. The LSH candidate
+    * set at banding threshold 0 is the set of pairs sharing any
+    * (band, bucket). Output: verified (id_a, id_b), one row per matching
+    * pair of projection rows (a duplicated id can repeat a pair).
     */
   private[graft] def verifiedPairsPre(pre: DataFrame, numHashes: Int,
                                       numBands: Int, jaccard: Double): DataFrame = {
-    val rowsPerBand = numHashes / numBands
-    val banded = bandedFromSigs(
-      pre.select(col("_sid").as("_id"),
-        minhash_from_shingles(col("_sh"), numHashes).as("_sig")),
-      numBands, rowsPerBand)
-    val a = banded.select(col("_band"), col("_bucket"), col("_id").as("id_a"))
-    val b = banded.select(col("_band"), col("_bucket"), col("_id").as("id_b"))
-    val cands = a.join(b, Seq("_band", "_bucket"))
-      .where(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"))
-      .distinct()
-    cands
-      .join(pre.select(col("_sid").as("id_a"), col("_sh").as("_sa")), Seq("id_a"))
-      .join(pre.select(col("_sid").as("id_b"), col("_sh").as("_sb")), Seq("id_b"))
-      .where(size(col("_sa")) > 0 && size(col("_sb")) > 0 &&
-        jaccard_sorted(col("_sa"), col("_sb")) >= jaccard)
+    val sh = withShingles(pre)
+    candidatePairsPre(pre, numHashes, numBands)
+      .join(sh.select(col("_sid").as("id_a"), col("_sh").as("_sa")), Seq("id_a"))
+      .join(sh.select(col("_sid").as("id_b"), col("_sh").as("_sb")), Seq("id_b"))
+      .where(jaccard_sorted(col("_sa"), col("_sb")) >= jaccard)
       .select(col("id_a"), col("id_b"))
   }
 
+  /** [[nearDupDedup]] from a PRE-materialized (_sid, _sh) shingle
+    * projection of `df` (one row per `df` row) — the entry point
+    * [[nearDupIncremental]] uses so the within-shard dedup reuses the
+    * shard's one shingling pass instead of re-tokenizing. Semantics
+    * identical to [[nearDupDedup]]; the labels attach to `pre`'s ids, and
+    * `df` is read only for `keepByCol`.
+    */
   private[ops] def nearDupDedupPre(df: DataFrame, pre: DataFrame,
                                    idCol: String, numHashes: Int,
                                    numBands: Int, jaccard: Double,
                                    keepByCol: Option[String]): DataFrame = {
     val pairs = verifiedPairsPre(pre, numHashes, numBands, jaccard)
     val labels = clusters(pairs)
-    val labeled = df.select(col(idCol))
+    val labeled = pre.select(col("_sid").as(idCol))
       .join(labels.withColumnRenamed("id", idCol), Seq(idCol), "left")
       .select(col(idCol),
         coalesce(col("cluster_id"), col(idCol)).as("cluster_id"))
@@ -871,7 +915,6 @@ object Dedup {
                          numHashes: Int = 128, numBands: Int = 32,
                          shingleSize: Int = 5, jaccard: Double = 0.8): DataFrame = {
     require(numHashes % numBands == 0, "numBands must divide numHashes")
-    val rowsPerBand = numHashes / numBands
     // ONE tokenization/shingling pass over the SHARD, materialized
     // (localCheckpoint, shard-sized (id, shingles)): banding signatures
     // derive from the shingle array (bit-identical TextKernels factoring),
@@ -886,18 +929,16 @@ object Dedup {
     val preIn = Fanout.ensure(incoming).select(col(idCol).as("_sid"),
       shingles(col(textCol), shingleSize).as("_sh"))
       .localCheckpoint()
-    def bandedPre(pre: DataFrame) = bandedFromSigs(
-      pre.select(col("_sid").as("_id"),
-        minhash_from_shingles(col("_sh"), numHashes).as("_sig")),
-      numBands, rowsPerBand)
     val fanLedger = Fanout.ensure(ledger)
     val preLedBand = fanLedger.select(col(idCol).as("_sid"),
       shingles(col(textCol), shingleSize).as("_sh"))
     // candidate (shard, ledger) id pairs — shard-bounded; materialized
     // because BOTH the verify-side semi-join below and the verify join
-    // itself consume it (one banding pass over the ledger, not two)
-    val cands = bandedPre(preIn).withColumnRenamed("_id", "_in")
-      .join(bandedPre(preLedBand).withColumnRenamed("_id", "_led"), Seq("_band", "_bucket"))
+    // itself consume it (one banding pass over the ledger, not two).
+    // Shingle-less docs enter neither banding pass (see withShingles).
+    val cands = bandedPre(preIn, numHashes, numBands).withColumnRenamed("_id", "_in")
+      .join(bandedPre(preLedBand, numHashes, numBands).withColumnRenamed("_id", "_led"),
+        Seq("_band", "_bucket"))
       .select(col("_in"), col("_led")).distinct()
       .localCheckpoint()
     // the exact verify needs ledger SHINGLES only for CANDIDATE ledger
