@@ -205,7 +205,12 @@ case class ExtractFeatures(child: Expression, format: String) extends DocKernelE
     val buf = docBytes(input)
     try {
       val values = format match {
-        case DocFormat.Cnf => CnfBase.extract(buf)
+        case DocFormat.Cnf =>
+          // the variable-array budget of cnf_extract, at the default byte
+          // budget: `2147483647 0` must not size a 2^31-entry array
+          val scan = new CnfScan(buf, hash = false)
+          if (CnfExtract.overVarBudget(scan.nVars, CnfExtract.DefaultMaxBytes)) return null
+          CnfBase.extract(scan)
         case DocFormat.Wcnf => WcnfBase.extract(buf)
         case _ => OpbBase.extract(buf)
       }

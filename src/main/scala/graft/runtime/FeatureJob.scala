@@ -16,8 +16,10 @@ import graft.temporal.Windows
   *     -> instance_id = gbd_hash(text)            [N2, streaming md5]
   *     -> features    = cnf_features(text)        [A1-A4 fused, one pass/row]
   *     -> status      = ok | parse_error | null_text
-  *     -> ONE range repartition on (url, warc_ts) feeds the whole window
-  *        stage exchange-free: sessionize [W4], lag/delta [W1], backfill [W2]
+  *     -> ONE hash repartition on url, sorted within partitions by
+  *        (url, warc_ts), feeds the whole window stage: sessionize [W4]
+  *        with the lag/delta features [W1] — one Exchange, one Sort, two
+  *        Windows (the lags, then the running session count)
   *     -> per-shard parquet + atomic lineage manifest + metrics
   *
   * Scale design: work is split into `shards` by url hash; ONE job processes
@@ -143,7 +145,8 @@ object FeatureJob {
     * repartition on url serves every window below it (all window specs are
     * partitionBy(url) orderBy(warc_ts)), and the sortWithinPartitions
     * satisfies their sort order — check with .explain: a single Exchange,
-    * a single Sort, shared by the whole window stage. Payload columns are
+    * a single Sort, and two Windows (every lag, then the running session
+    * count), shared by the whole window stage. Payload columns are
     * dropped first unless keepPayload: shuffling multi-KB html/text through
     * the window exchange would dominate the stage.
     */
@@ -154,19 +157,18 @@ object FeatureJob {
     val partitioned = slim
       .repartition(col("url"))
       .sortWithinPartitions(col("url"), col("warc_ts"))
-    val sessionized = Windows.sessionize(partitioned, Seq("url"), "warc_ts", cfg.sessionGapSeconds)
     // revisit deltas over selected features (limited to fields the format's
-    // schema actually has); lag carries the previous snapshot value
-    // (leakage-free: trailing frame)
+    // schema actually has): sessionize lags each feature in the same window
+    // as the previous timestamp (leakage-free: trailing frame)
     val available = extracted.schema("features").dataType
       .asInstanceOf[org.apache.spark.sql.types.StructType].fieldNames.toSet
-    cfg.lagFeatures.filter(available.contains).foldLeft(sessionized) { (df, f) =>
-      val c = col(s"features.$f")
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("url")).orderBy(col("warc_ts").asc)
-      df.withColumn(s"${f}_prev", lag(c, 1).over(w))
-        .withColumn(s"${f}_delta", c - lag(c, 1).over(w))
-    }
+    val lagged = cfg.lagFeatures.filter(available.contains).distinct
+    val sessionized = Windows.sessionize(partitioned, Seq("url"), "warc_ts",
+      cfg.sessionGapSeconds, lagged.map(f => s"${f}_prev" -> col(s"features.$f")))
+    val deltas = lagged.flatMap(f => Seq(col(s"${f}_prev"),
+      (col(s"features.$f") - col(s"${f}_prev")).as(s"${f}_delta")))
+    val kept = partitioned.columns.map(c => col(s"`$c`")) :+ col("session_no") :+ col("session_id")
+    sessionized.select(kept ++ deltas: _*)
   }
 
   def pipeline(pages: DataFrame, cfg: Config): DataFrame =
@@ -325,7 +327,7 @@ object FeatureJob {
     val pages =
       if (args(0).startsWith("gen:"))
         PageGen.pages(spark, PageGen.Config(urls = args(0).stripPrefix("gen:").toInt)).toDF()
-      else spark.read.parquet(args(0))
+      else graft.sources.PageTable.read(spark, args(0))
     val cfg = Config(
       outDir = args(1),
       shards = if (args.length > 2) args(2).toInt else 8,

@@ -1,7 +1,12 @@
 package graft.sources
 
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Paths, StandardCopyOption}
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.InMemoryFileIndex
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 /** Iceberg-style pages-table facade (SURVEY.md §7): no Iceberg runtime jar
   * is available offline, so the engine works against a partitioned+bucketed
@@ -18,6 +23,16 @@ import org.apache.spark.sql.functions._
   * Both are derived, so readers prune by path (partition pruning) and
   * repeated runs get co-located url access — the plain-Parquet stand-in for
   * storage-partitioned joins.
+  *
+  * Schema: like Iceberg table metadata, the writer records the table's
+  * schema in a `_schema.json` sidecar at the table root (and in each
+  * snapshot data directory), and readers pass it to `spark.read.schema`
+  * instead of running a Spark job to infer it from a Parquet footer. The
+  * recorded schema is exactly the inferred one: data columns in written
+  * order, then the partition columns, all nullable. A missing sidecar
+  * (tables from older builds, or dropped by an append that changed the
+  * schema) falls back to inference. Spark's file listing skips
+  * `_`-prefixed names, so scans and `FeatureJob.fingerprint` never see it.
   */
 object PageTable {
 
@@ -29,20 +44,38 @@ object PageTable {
       .withColumn(DayCol, datediff(col("warc_ts").cast("date"), lit("1970-01-01").cast("date")))
       .withColumn(BucketCol, pmod(xxhash64(col("url")), lit(nBuckets)).cast("int"))
 
-  /** Write the pages table in the Iceberg-style layout. */
+  /** Write the pages table in the Iceberg-style layout and record its
+    * schema. An append keeps the sidecar only when the table's schema is
+    * unchanged by it.
+    */
   def write(pages: DataFrame, path: String, nBuckets: Int = 16,
-            mode: String = "overwrite", compression: String = "zstd"): Unit =
-    withLayoutColumns(pages, nBuckets)
+            mode: String = "overwrite", compression: String = "zstd"): Unit = {
+    val laid = withLayoutColumns(pages, nBuckets)
+    // a static overwrite (or a first write) replaces the whole table; any
+    // other write that adds data is checked against the recorded schema;
+    // ignore/error on an existing table writes nothing
+    val existed = sidecar(path).exists(f => Files.exists(f.getParent))
+    val replaces = !existed || mode.equalsIgnoreCase("overwrite") &&
+      pages.sparkSession.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
+        .equalsIgnoreCase("static")
+    val commit =
+      if (replaces) () => recordSchema(laid, path)
+      else if (mode.equalsIgnoreCase("append") || mode.equalsIgnoreCase("overwrite"))
+        keepSchemaIfSame(laid, path)
+      else () => ()
+    laid
       .repartition(col(DayCol), col(BucketCol)) // one file per partition dir
       .write
       .partitionBy(DayCol, BucketCol)
       .option("compression", compression)
       .mode(mode)
       .parquet(path)
+    commit()
+  }
 
   /** Read the table; layout columns come back as partition columns. */
   def read(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    recordedSchema(path).fold(spark.read)(s => spark.read.schema(s)).parquet(path)
 
   /** Day-range + url-bucket pruned read: both predicates are on partition
     * columns, so they prune directories before any file is opened
@@ -116,7 +149,9 @@ object PageTable {
       .join(d.select(col("url"), col("warc_ts")), Seq("url", "warc_ts"),
         "left_anti")
       .localCheckpoint(true)
-    keep.unionByName(d.select(keep.columns.map(col): _*))
+    val merged = keep.unionByName(d.select(keep.columns.map(col): _*))
+    val commit = keepSchemaIfSame(merged, path)
+    merged
       .repartition(col(DayCol), col(BucketCol))
       .write
       .partitionBy(DayCol, BucketCol)
@@ -124,6 +159,80 @@ object PageTable {
       .option("partitionOverwriteMode", "dynamic")
       .mode("overwrite")
       .parquet(path)
+    commit()
+  }
+
+  // ---- schema sidecar ---------------------------------------------------
+
+  /** Name of the schema sidecar; Spark's file listing skips `_` names. */
+  val SchemaFile = "_schema.json"
+
+  /** The sidecar of the table (or snapshot data directory) at `dir`. None
+    * off the local file system: sidecar I/O uses java.nio like the
+    * snapshot manifests, so there no sidecar is written and reads infer.
+    */
+  private def sidecar(dir: String): Option[java.nio.file.Path] = {
+    val uri = new org.apache.hadoop.fs.Path(dir).toUri
+    if (uri.getScheme == null || uri.getScheme == "file") Some(Paths.get(uri.getPath, SchemaFile))
+    else None
+  }
+
+  /** The schema recorded at `dir` (a table root or a snapshot data
+    * directory); None when there is no readable sidecar.
+    */
+  def recordedSchema(dir: String): Option[StructType] =
+    sidecar(dir).filter(Files.isRegularFile(_))
+      .flatMap(f => scala.util.Try(DataType.fromJson(new String(Files.readAllBytes(f), UTF_8))).toOption)
+      .collect { case s: StructType => s }
+
+  /** What Spark infers for `written` once it sits at `dir`: the data
+    * columns made nullable (as a file source reads them), then the
+    * partition columns as Spark's partition discovery types them — one
+    * driver-side listing, no job. None when `dir` holds no data file
+    * (inference fails there, so no sidecar may claim a schema).
+    */
+  private def tableSchema(written: DataFrame, dir: String): Option[StructType] = {
+    val index = new InMemoryFileIndex(written.sparkSession,
+      Seq(new org.apache.hadoop.fs.Path(dir)), Map.empty, None)
+    if (index.allFiles().isEmpty) None
+    else {
+      val parts = index.partitionSchema
+      val data = written.schema.filterNot(f => parts.fieldNames.contains(f.name))
+      Some(StructType(data.map(f => f.copy(dataType = nullable(f.dataType), nullable = true)) ++ parts))
+    }
+  }
+
+  /** `t` with every field, array element and map value nullable. */
+  private def nullable(t: DataType): DataType = t match {
+    case s: StructType =>
+      StructType(s.fields.map(f => f.copy(dataType = nullable(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+    case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType), valueContainsNull = true)
+    case other => other
+  }
+
+  /** Record the schema of `written`, just written to `dir` as a whole. */
+  private def recordSchema(written: DataFrame, dir: String): Unit =
+    sidecar(dir).foreach(f => tableSchema(written, dir).foreach(s => atomicWrite(f, s.json)))
+
+  /** Before `written` is added to the table at `dir`: drop its sidecar, so
+    * a crash mid-write leaves none that could be stale. The returned commit
+    * step puts it back after the write only when the table's schema is
+    * unchanged; otherwise reads fall back to inference.
+    */
+  private def keepSchemaIfSame(written: DataFrame, dir: String): () => Unit = {
+    val before = recordedSchema(dir)
+    sidecar(dir).foreach(Files.deleteIfExists)
+    () => before.filter(tableSchema(written, dir).contains)
+      .foreach(s => sidecar(dir).foreach(atomicWrite(_, s.json)))
+  }
+
+  /** Write `text` to `f` via a dot-prefixed tmp file and an atomic move. */
+  private def atomicWrite(f: java.nio.file.Path, text: String): Unit = {
+    Files.createDirectories(f.getParent)
+    val tmp = f.resolveSibling(s".${f.getFileName}.tmp")
+    Files.write(tmp, text.getBytes(UTF_8))
+    Files.move(tmp, f, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
   }
 
   // ---- snapshot versioning (time travel) -------------------------------
@@ -180,18 +289,12 @@ object PageTable {
     val v = prev + 1
     val rel = s"data/v$v"
     pages.write.option("compression", compression).parquet(s"$path/$rel")
+    recordSchema(pages, s"$path/$rel")
     val dirs = (if (append && prev > 0) snapshotDirs(path, prev)
                 else Seq.empty) :+ rel
     val json = dirs.map("\"" + _ + "\"")
       .mkString(s"""{"version":$v,"dirs":[""", ",", "]}")
-    val dir = snapshotsDir(path)
-    java.nio.file.Files.createDirectories(dir)
-    val tmp = dir.resolve(s".v$v.json.tmp")
-    java.nio.file.Files.write(tmp,
-      json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    java.nio.file.Files.move(tmp, dir.resolve(s"v$v.json"),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    atomicWrite(snapshotsDir(path).resolve(s"v$v.json"), json)
     v
   }
 
@@ -201,7 +304,12 @@ object PageTable {
     val v = if (version > 0) version else latestSnapshotVersion(path)
     require(v > 0, s"no snapshots at $path")
     val dirs = snapshotDirs(path, v).map(d => s"$path/$d")
-    spark.read.parquet(dirs: _*)
+    // pinned only when every directory recorded the same schema
+    val reader = dirs.map(recordedSchema).distinct match {
+      case Seq(Some(s)) => spark.read.schema(s)
+      case _ => spark.read
+    }
+    reader.parquet(dirs: _*)
   }
 
   /** Driver-side bucket id of a url — must agree with xxhash64(url) % N.

@@ -8,8 +8,8 @@ import org.apache.spark.sql.functions._
   * Every window orders by the event timestamp with frames ending at the
   * current row — the zero-temporal-leakage rule: no frame ever contains a
   * row with a later timestamp. All five operators share one partitioning
-  * (key), so a `repartitionByRange(key, ts)` upstream serves them all with
-  * a single exchange (see FeatureJob).
+  * (key), so a hash repartition on key, sorted within partitions by
+  * (key, ts), serves them all with a single exchange (see FeatureJob).
   */
 object Windows {
 
@@ -61,19 +61,26 @@ object Windows {
   }
 
   /** W4: gap-based sessionization of crawl revisits — a new session starts
-    * when the gap to the previous revisit exceeds `gapSeconds`. Adds
-    * `session_no` (0-based per key) and a deterministic `session_id`.
+    * when the gap to the previous revisit exceeds `gapSeconds`. Adds one
+    * new column per `lagged` (name -> column): that column's value at the
+    * key's previous revisit, then `session_no` (0-based per key) and a
+    * deterministic `session_id`. The previous timestamp and every lagged
+    * column come from ONE window select; the running session count is the
+    * second and last window over the same (keys, ts) spec.
     */
-  def sessionize(df: DataFrame, keys: Seq[String], ts: String, gapSeconds: Long): DataFrame = {
+  def sessionize(df: DataFrame, keys: Seq[String], ts: String, gapSeconds: Long,
+                 lagged: Seq[(String, Column)] = Nil): DataFrame = {
     val w = byKey(keys, ts)
-    val cum = byKey(keys, ts).rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val gap = epochSeconds(col(ts)) - lag(epochSeconds(col(ts)), 1).over(w)
-    df.withColumn("_new_session", when(gap.isNull || gap > gapSeconds, 1).otherwise(0))
+    val cum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val gap = epochSeconds(col(ts)) - col("_prev_ts")
+    df.select(col("*") +: lag(epochSeconds(col(ts)), 1).over(w).as("_prev_ts") +:
+        lagged.map { case (name, c) => lag(c, 1).over(w).as(name) }: _*)
+      .withColumn("_new_session", when(gap.isNull || gap > gapSeconds, 1).otherwise(0))
       .withColumn("session_no", sum(col("_new_session")).over(cum) - 1)
       // exact composite id: no per-row crypto hash in the hot path; callers
       // wanting a fixed-width key can md5 this column themselves
       .withColumn("session_id", concat_ws("#", keys.map(col) :+ col("session_no"): _*))
-      .drop("_new_session")
+      .drop("_prev_ts", "_new_session")
   }
 
   /** Session-level rollup: bounds, length, and revisit count per session. */

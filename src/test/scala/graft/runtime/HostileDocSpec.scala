@@ -40,14 +40,31 @@ class HostileDocSpec extends SparkSpec {
     assert(small == Map("sparse" -> ("ok", 638.0), "big" -> ("limit", -1.0)))
   }
 
+  private lazy val golden = Seq("/gbdc/cnf_test.cnf.xz", "/gbdc/scrambled_simple/clique_notchanged.cnf")
+    .map(p => p -> new String(Fixtures.resourceBytes(p), "UTF-8"))
+
   test("golden and PageGen docs all stay ok") {
-    val golden = Seq("/gbdc/cnf_test.cnf.xz", "/gbdc/scrambled_simple/clique_notchanged.cnf")
-      .map(p => p -> new String(Fixtures.resourceBytes(p), "UTF-8"))
     val pages = (1 to 16).flatMap { scale =>
       val cfg = PageGen.Config(seed = scale.toLong, docScale = scale)
       (0 until 8).map(u => s"s$scale-u$u" -> PageGen.textOf(cfg, u, u % 3))
     }
     val bad = statuses(golden ++ pages).filter(_._2._1 != "ok")
     assert(bad.isEmpty, bad)
+  }
+
+  test("cnf_features alone: variable ids past the default budget give null, not a failed task") {
+    import org.apache.spark.sql.functions.col
+    val docs = Seq("max" -> "2147483647 0", "big" -> "100000000 0", "fine" -> "1 -2 0\n2 0\n") ++ golden
+    val got = docs.toDF("url", "text")
+      .select(col("url"), graft.functions.cnf_features(col("text")).as("f")).collect()
+      .map(r => r.getString(0) -> Option(r.getStruct(1))).toMap
+    assert(got("max").isEmpty && got("big").isEmpty)
+    // every other doc gets exactly the kernel's feature vector
+    (Seq("fine" -> "1 -2 0\n2 0\n") ++ golden).foreach { case (name, text) =>
+      val want = graft.core.CnfBase.extract(text.getBytes("UTF-8"))
+      val f = got(name).getOrElse(fail(s"$name: null features"))
+      assert(want.indices.forall(i => java.lang.Double.doubleToRawLongBits(f.getDouble(i)) ==
+        java.lang.Double.doubleToRawLongBits(want(i))), name)
+    }
   }
 }
