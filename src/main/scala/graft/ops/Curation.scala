@@ -285,30 +285,15 @@ object Curation {
     require(maxIters >= 1 && maxIters <= 20, "need 1 <= maxIters <= 20")
     val base = edges.select(col(fromCol).as("u"), col(toCol).as("v"))
       .groupBy(col("u")).agg(min(col("v")).as("v"))
-      .persist()
-    // SIZE-ADAPTIVE DISPATCH (the Dedup.clusters probe pattern): the
-    // pointer table is url-graph-sized; under the driver bound the SAME
-    // maxIters pointer-jumping rounds replay locally in one pass (integral
-    // keys only — the distributed path is type-generic and unchanged)
-    val ccLocalMax = edges.sparkSession.conf
-      .getOption("spark.graft.cc.localEdgeThreshold").map(_.toLong)
-      .getOrElse(4L << 20)
-    val integral = Seq(base.schema("u").dataType, base.schema("v").dataType)
-      .forall {
-        case org.apache.spark.sql.types.LongType |
-             org.apache.spark.sql.types.IntegerType |
-             org.apache.spark.sql.types.ShortType => true
-        case _ => false
-      }
-    val ccProbe = base.agg(count(lit(1)), count(col("u")), count(col("v"))).head()
-    if (integral && ccProbe.getLong(0) <= ccLocalMax && (1 to 2).forall(i =>
-        ccProbe.getLong(i) == ccProbe.getLong(0))) {
+      .localCheckpoint()
+    // small integral pointer table: the same rounds on the driver ([[LocalDispatch]])
+    val local = LocalDispatch.longRows(base, LocalDispatch.CcKey)
+    if (local.nonEmpty) {
       val uType = base.schema("u").dataType
       val vType = base.schema("v").dataType
       val spark = edges.sparkSession
       import spark.implicits._
-      val rows = base.select(col("u").cast("long"), col("v").cast("long")).collect()
-      base.unpersist()
+      val rows = local.get
       val ptrM = new java.util.HashMap[java.lang.Long, java.lang.Long](rows.length * 2)
       rows.foreach(r => ptrM.put(r.getLong(0), r.getLong(1)))
       val keys = rows.map(_.getLong(0))
@@ -335,13 +320,11 @@ object Curation {
         .select(col("u"), coalesce(col("_w"), col("v")).as("v"))
         .localCheckpoint()
     }
-    val out = ptr
+    ptr
       .join(base.select(col("u").as("_t")), col("v") === col("_t"),
         "left")
       .select(col("u").as("url"), col("v").as("canonical"),
         col("_t").isNull.as("resolved"))
-    base.unpersist()
-    out
   }
 
   /** Entity-safe deterministic train/val/test split assignment. The split

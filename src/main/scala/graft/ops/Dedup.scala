@@ -545,13 +545,12 @@ object Dedup {
     * cannot close gets the same partial labels from either.
     *
     * Shape: the pair list is materialized ONCE (eager, pair-sized) and one
-    * bounded collect decides the path. SIZE-ADAPTIVE DISPATCH: the dup GRAPH
-    * is pair-sized, not corpus-sized. When it has at most
-    * `spark.graft.cc.localEdgeThreshold` directed edges (each pair row
-    * counts as two; default 4M) and integral, non-null ids, the driver
-    * replays the same rounds on primitive arrays ([[localClusters]]); the
-    * collect stops at the bound, so no more than that reaches the driver.
-    * Otherwise the distributed rounds run over the distinct edge list,
+    * bounded collect ([[LocalDispatch]]) decides the path: the dup GRAPH is
+    * pair-sized, not corpus-sized. When it has at most
+    * [[LocalDispatch.CcKey]] directed edges (each pair row counts as two)
+    * and integral, non-null ids, the driver replays the same rounds on
+    * primitive arrays ([[localClusters]]); the collect stops at the bound,
+    * so no more than that reaches the driver. Otherwise the distributed rounds run over the distinct edge list,
     * materialized once: two label-sized joins + ONE Spark job per round (the
     * convergence flag rides the aggregate over the round's checkpoint).
     * OptR06Spec and DedupIdentitySpec pin local ≡ distributed, the latter
@@ -562,29 +561,16 @@ object Dedup {
     val p = pairs.select(col(idA).as("a"), col(idB).as("b")).localCheckpoint()
     val directed = p.unionByName(p.select(col("b").as("a"), col("a").as("b"))).distinct()
     val idType = directed.schema("a").dataType
-    val integralIds = Seq(p.schema("a").dataType, p.schema("b").dataType).forall {
-      case org.apache.spark.sql.types.LongType |
-           org.apache.spark.sql.types.IntegerType |
-           org.apache.spark.sql.types.ShortType => true
-      case _ => false
-    }
-    if (integralIds) {
-      val localMax = pairs.sparkSession.conf
-        .getOption("spark.graft.cc.localEdgeThreshold").map(_.toLong)
-        .getOrElse(4L << 20)
-      val maxRows = math.min(math.max(localMax / 2, 0L), Int.MaxValue - 1L).toInt
-      // one task reads the pair partitions in turn and stops one row past
-      // the bound: a graph over it never reaches the driver whole
-      val rows = p.select(col("a").cast("long"), col("b").cast("long"))
-        .coalesce(1).limit(maxRows + 1).collect()
-      if (rows.length <= maxRows && rows.forall(r => !r.isNullAt(0) && !r.isNullAt(1))) {
-        val (ids, labels) = localClusters(rows.map(_.getLong(0)), rows.map(_.getLong(1)), maxIters)
-        val spark = pairs.sparkSession
-        import spark.implicits._
-        return ids.indices.map(i => (ids(i), ids(labels(i)))).toDF("id", "cluster_id")
-          .select(col("id").cast(idType).as("id"),
-            col("cluster_id").cast(idType).as("cluster_id"))
-      }
+    // small dup graph: the same rounds on the driver ([[LocalDispatch]])
+    val local = LocalDispatch.longRows(p, LocalDispatch.CcKey, edgesPerRow = 2)
+    if (local.nonEmpty) {
+      val rows = local.get
+      val (ids, labels) = localClusters(rows.map(_.getLong(0)), rows.map(_.getLong(1)), maxIters)
+      val spark = pairs.sparkSession
+      import spark.implicits._
+      return ids.indices.map(i => (ids(i), ids(labels(i)))).toDF("id", "cluster_id")
+        .select(col("id").cast(idType).as("id"),
+          col("cluster_id").cast(idType).as("cluster_id"))
     }
     // over the bound, or null / non-integral ids: the distributed rounds
     // over the distinct edge list, materialized once for all of them

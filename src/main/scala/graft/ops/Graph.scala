@@ -20,33 +20,6 @@ object Graph {
   /** Fixed-point scale: ranks are integers in units of 1e-9. */
   val Scale: Long = 1000000000L
 
-  /** Deterministic damped PageRank over `iters` synchronous iterations.
-    *
-    * Input: an edge list (srcCol, dstCol); duplicate edges are collapsed
-    * (the graph is simple). Nodes = src ∪ dst. Every node starts at
-    * SCALE (1.0 fixed-point; PageRank is defined up to a constant factor,
-    * so the un-normalized start avoids a SCALE div n remainder that an
-    * oracle would have to replicate). Per iteration, with damping d =
-    * dampNum/dampDen (default 85/100):
-    *
-    *   contrib(e) = rank(src) div outdeg(src)          — exact integer
-    *   rank'(v)   = (SCALE * (dampDen - dampNum)) div dampDen
-    *              + (dampNum * sum(contrib over in-edges)) div dampDen
-    *
-    * Dangling mass (nodes with no out-edges) is dropped, the standard
-    * simplification. Overflow headroom: sum(contrib) <= n * SCALE, so
-    * dampNum * sum stays within int64 for n < ~1e8 nodes per the default
-    * scale; at web scale callers lower Scale accordingly.
-    *
-    * Scale shape: the rank table is NODE-sized (tiny next to the corpus);
-    * each iteration is one join of edges->ranks on src (broadcastable if
-    * ranks fit, else a hash join co-partitioned with the edge list) + one
-    * shuffle aggregating contributions by dst. Lineage is truncated with
-    * localCheckpoint every 5 iterations (same discipline as
-    * [[Dedup.clusters]]).
-    *
-    * Returns (node, rank_int).
-    */
   /** Host of a URL: the authority between `://` and the first `/?#` —
     * the grouping key for site-level link analytics. Empty string when
     * the URL has no scheme://host prefix.
@@ -84,34 +57,47 @@ object Graph {
         sum(when(col("_src_host") =!= col("host"), 1L).otherwise(0L))
           .as("external_inlinks"))
 
+  /** Deterministic damped PageRank over `iters` synchronous iterations.
+    *
+    * Input: an edge list (srcCol, dstCol); duplicate edges are collapsed
+    * (the graph is simple). Nodes = src ∪ dst. Every node starts at
+    * SCALE (1.0 fixed-point; PageRank is defined up to a constant factor,
+    * so the un-normalized start avoids a SCALE div n remainder that an
+    * oracle would have to replicate). Per iteration, with damping d =
+    * dampNum/dampDen (default 85/100):
+    *
+    *   contrib(e) = rank(src) div outdeg(src)          — exact integer
+    *   rank'(v)   = (SCALE * (dampDen - dampNum)) div dampDen
+    *              + (dampNum * sum(contrib over in-edges)) div dampDen
+    *
+    * Dangling mass (nodes with no out-edges) is dropped, the standard
+    * simplification. Overflow headroom: sum(contrib) <= n * SCALE, so
+    * dampNum * sum stays within int64 for n < ~1e8 nodes per the default
+    * scale; at web scale callers lower Scale accordingly.
+    *
+    * Scale shape: the rank table is NODE-sized (tiny next to the corpus);
+    * each iteration is one join of edges->ranks on src (broadcastable if
+    * ranks fit, else a hash join co-partitioned with the edge list) + one
+    * shuffle aggregating contributions by dst. Lineage is truncated with
+    * localCheckpoint every 5 iterations (same discipline as
+    * [[Dedup.clusters]]).
+    *
+    * Returns (node, rank_int).
+    */
   def pageRankInt(edges: DataFrame, srcCol: String, dstCol: String,
                   iters: Int = 4, dampNum: Long = 85, dampDen: Long = 100): DataFrame = {
     require(iters >= 0 && dampNum >= 0 && dampNum <= dampDen && dampDen > 0)
     val e = edges.select(col(srcCol).cast("long").as("src"),
         col(dstCol).cast("long").as("dst"))
       .distinct()
-      .persist()
-    val nodes = e.select(col("src").as("node"))
-      .unionByName(e.select(col("dst").as("node")))
-      .distinct()
-      .persist()
-    val outdeg = e.groupBy(col("src").as("node")).agg(count(lit(1)).as("outdeg"))
+      .localCheckpoint()
     val baseTerm = Scale * (dampDen - dampNum) / dampDen // exact: driver-side longs
-    // SIZE-ADAPTIVE DISPATCH (the Dedup.clusters probe pattern): exact
-    // integer arithmetic replays identically on the driver — per iteration
-    // contrib(dst) = Σ rank(src) div outdeg(src) over DISTINCT edges, then
-    // base + (damp·contrib) div den, zero in-links → coalesce 0. The count
-    // doubles as the cache materialization. GraphSpec pins equality.
-    val prLocalMax = edges.sparkSession.conf
-      .getOption("spark.graft.graph.localEdgeThreshold").map(_.toLong)
-      .getOrElse(4L << 20)
-    val prProbe = e.agg(count(lit(1)), count(col("src")), count(col("dst"))).head()
-    if (prProbe.getLong(0) <= prLocalMax && (1 to 2).forall(i =>
-        prProbe.getLong(i) == prProbe.getLong(0))) {
+    // small graph: the same integer schedule on the driver ([[LocalDispatch]])
+    val local = LocalDispatch.rows(e, LocalDispatch.GraphKey)
+    if (local.nonEmpty) {
       val spark = edges.sparkSession
       import spark.implicits._
-      val es = e.collect().map(r => (r.getLong(0), r.getLong(1)))
-      e.unpersist(); nodes.unpersist()
+      val es = local.get.map(r => (r.getLong(0), r.getLong(1)))
       val deg = new java.util.HashMap[java.lang.Long, java.lang.Long]()
       val rank = new java.util.HashMap[java.lang.Long, java.lang.Long]()
       es.foreach { case (s, d) =>
@@ -133,6 +119,11 @@ object Graph {
       rank.forEach((k, v) => out += ((k.longValue(), v.longValue())))
       return out.toSeq.toDF("node", "rank_int")
     }
+    val nodes = e.select(col("src").as("node"))
+      .unionByName(e.select(col("dst").as("node")))
+      .distinct()
+      .persist()
+    val outdeg = e.groupBy(col("src").as("node")).agg(count(lit(1)).as("outdeg"))
     var ranks = nodes.withColumn("rank_int", lit(Scale))
     // eager localCheckpoint per iteration: materializes AND cuts lineage
     // to an RDD leaf in one job — without it AQE recompiles a plan that
@@ -149,7 +140,6 @@ object Graph {
             expr(s"(${dampNum}L * coalesce(_in, 0L)) div ${dampDen}L")).as("rank_int"))
         .localCheckpoint()
     }
-    e.unpersist()
     nodes.unpersist()
     ranks
   }
@@ -177,26 +167,14 @@ object Graph {
     val e = edges.select(col(srcCol).cast("long").as("src"),
         col(dstCol).cast("long").as("dst"))
       .distinct()
-      .persist()
-    val nodes = e.select(col("src").as("node"))
-      .unionByName(e.select(col("dst").as("node")))
-      .distinct()
-      .withColumn("_seed", col("node").isin(seeds.map(Long.box): _*))
-      .persist()
-    val outdeg = e.groupBy(col("src").as("node")).agg(count(lit(1)).as("outdeg"))
+      .localCheckpoint()
     val baseTerm = Scale * (dampDen - dampNum) / dampDen
-    // SIZE-ADAPTIVE DISPATCH — identical integer schedule to the
-    // pageRankInt local path, with teleport mass restricted to the seeds
-    val pprLocalMax = edges.sparkSession.conf
-      .getOption("spark.graft.graph.localEdgeThreshold").map(_.toLong)
-      .getOrElse(4L << 20)
-    val pprProbe = e.agg(count(lit(1)), count(col("src")), count(col("dst"))).head()
-    if (pprProbe.getLong(0) <= pprLocalMax && (1 to 2).forall(i =>
-        pprProbe.getLong(i) == pprProbe.getLong(0))) {
+    // small graph: the same integer schedule on the driver ([[LocalDispatch]])
+    val local = LocalDispatch.rows(e, LocalDispatch.GraphKey)
+    if (local.nonEmpty) {
       val spark = edges.sparkSession
       import spark.implicits._
-      val es = e.collect().map(r => (r.getLong(0), r.getLong(1)))
-      e.unpersist(); nodes.unpersist()
+      val es = local.get.map(r => (r.getLong(0), r.getLong(1)))
       val seedSet = seeds.toSet
       val deg = new java.util.HashMap[java.lang.Long, java.lang.Long]()
       val rank = new java.util.HashMap[java.lang.Long, java.lang.Long]()
@@ -221,6 +199,12 @@ object Graph {
       rank.forEach((k, v) => out += ((k.longValue(), v.longValue())))
       return out.toSeq.toDF("node", "rank_int")
     }
+    val nodes = e.select(col("src").as("node"))
+      .unionByName(e.select(col("dst").as("node")))
+      .distinct()
+      .withColumn("_seed", col("node").isin(seeds.map(Long.box): _*))
+      .persist()
+    val outdeg = e.groupBy(col("src").as("node")).agg(count(lit(1)).as("outdeg"))
     var ranks = nodes.withColumn("rank_int",
       when(col("_seed"), lit(Scale)).otherwise(lit(0L)))
     for (_ <- 0 until iters) {
@@ -236,7 +220,6 @@ object Graph {
             .as("rank_int"))
         .localCheckpoint()
     }
-    e.unpersist()
     nodes.unpersist()
     ranks.select(col("node"), col("rank_int"))
   }
@@ -280,34 +263,13 @@ object Graph {
     val e = edges.select(col(srcCol).cast("long").as("src"),
         col(dstCol).cast("long").as("dst"))
       .distinct()
-      .persist()
-    val nodes = e.select(col("src").as("node"))
-      .unionByName(e.select(col("dst").as("node")))
-      .distinct()
-      .persist()
-    // rescale raw scores so the max becomes `scale` (empty graph guard: 1)
-    def rescaled(raw: DataFrame, outCol: String): DataFrame = {
-      val m = raw.agg(greatest(max(col("_s")), lit(1L)).as("_m"))
-      nodes.join(raw, Seq("node"), "left")
-        .crossJoin(broadcast(m))
-        .select(col("node"),
-          expr(s"(${scale}L * coalesce(_s, 0L)) div _m").as(outCol))
-    }
-    // SIZE-ADAPTIVE DISPATCH — the fixed-point rescale schedule is pure
-    // int64 arithmetic, replayed locally under the driver bound: per
-    // iteration rawAuth(v) = Σ hub(u) over distinct in-edges, every node's
-    // auth = (scale·coalesce(raw,0)) div max(max(raw),1), then the hub
-    // side from the fresh auths. GraphSpec pins equality.
-    val hLocalMax = edges.sparkSession.conf
-      .getOption("spark.graft.graph.localEdgeThreshold").map(_.toLong)
-      .getOrElse(4L << 20)
-    val hProbe = e.agg(count(lit(1)), count(col("src")), count(col("dst"))).head()
-    if (hProbe.getLong(0) <= hLocalMax && (1 to 2).forall(i =>
-        hProbe.getLong(i) == hProbe.getLong(0))) {
+      .localCheckpoint()
+    // small graph: the same int64 rescale schedule on the driver ([[LocalDispatch]])
+    val local = LocalDispatch.rows(e, LocalDispatch.GraphKey)
+    if (local.nonEmpty) {
       val spark = edges.sparkSession
       import spark.implicits._
-      val es = e.collect().map(r => (r.getLong(0), r.getLong(1)))
-      e.unpersist(); nodes.unpersist()
+      val es = local.get.map(r => (r.getLong(0), r.getLong(1)))
       val ns = (es.map(_._1) ++ es.map(_._2)).distinct
       val hub = new java.util.HashMap[java.lang.Long, java.lang.Long]()
       val auth = new java.util.HashMap[java.lang.Long, java.lang.Long]()
@@ -338,6 +300,18 @@ object Graph {
       ns.foreach(n => out += ((n, hub.get(n).longValue(), auth.get(n).longValue())))
       return out.toSeq.toDF("node", "hub_int", "auth_int")
     }
+    val nodes = e.select(col("src").as("node"))
+      .unionByName(e.select(col("dst").as("node")))
+      .distinct()
+      .persist()
+    // rescale raw scores so the max becomes `scale` (empty graph guard: 1)
+    def rescaled(raw: DataFrame, outCol: String): DataFrame = {
+      val m = raw.agg(greatest(max(col("_s")), lit(1L)).as("_m"))
+      nodes.join(raw, Seq("node"), "left")
+        .crossJoin(broadcast(m))
+        .select(col("node"),
+          expr(s"(${scale}L * coalesce(_s, 0L)) div _m").as(outCol))
+    }
     var hubs = nodes.withColumn("hub_int", lit(scale))
     var auths: DataFrame = null
     // each side becomes an RDD LEAF per iteration (eager localCheckpoint):
@@ -355,7 +329,6 @@ object Graph {
     }
     val out = hubs.join(auths, Seq("node"))
       .select(col("node"), col("hub_int"), col("auth_int"))
-    e.unpersist()
     nodes.unpersist()
     out
   }
@@ -455,29 +428,24 @@ object Graph {
   def bfsDepth(edges: DataFrame, srcCol: String, dstCol: String,
                seeds: DataFrame, seedCol: String, maxDepth: Int): DataFrame = {
     require(maxDepth >= 0, "maxDepth must be >= 0")
-    val e = edges.select(col(srcCol).cast("long").as("src"),
-      col(dstCol).cast("long").as("dst")).distinct().persist()
     // eager localCheckpoint: materializes AND cuts lineage to an RDD leaf
+    val e = edges.select(col(srcCol).cast("long").as("src"),
+      col(dstCol).cast("long").as("dst")).distinct().localCheckpoint()
     val seed = seeds.select(col(seedCol).cast("long").as("node"))
       .distinct().localCheckpoint()
-    // SIZE-ADAPTIVE DISPATCH (the Dedup.clusters probe pattern): same
-    // layered BFS with the same depth cap, one driver pass
-    val bfsLocalMax = edges.sparkSession.conf
-      .getOption("spark.graft.graph.localEdgeThreshold").map(_.toLong)
-      .getOrElse(4L << 20)
-    val bfsProbe = e.agg(count(lit(1)), count(col("src")), count(col("dst"))).head()
-    if (bfsProbe.getLong(0) <= bfsLocalMax && (1 to 2).forall(i =>
-        bfsProbe.getLong(i) == bfsProbe.getLong(0))) {
+    // small graph and seed set: the same layered BFS on the driver ([[LocalDispatch]])
+    val local = LocalDispatch.rows(e, LocalDispatch.GraphKey)
+    val localSeeds = if (local.isEmpty) None else LocalDispatch.rows(seed, LocalDispatch.GraphKey)
+    if (localSeeds.nonEmpty) {
       val spark = edges.sparkSession
       import spark.implicits._
       val adj = new java.util.HashMap[java.lang.Long, scala.collection.mutable.ArrayBuffer[Long]]()
-      e.collect().foreach { r =>
+      local.get.foreach { r =>
         adj.computeIfAbsent(r.getLong(0),
           _ => new scala.collection.mutable.ArrayBuffer[Long]()) += r.getLong(1)
       }
-      e.unpersist()
       val depthOf = new java.util.HashMap[java.lang.Long, java.lang.Long]()
-      var front = seed.collect().map(_.getLong(0)).toSeq.distinct
+      var front = localSeeds.get.map(_.getLong(0)).toSeq.distinct
       front.foreach(n => depthOf.put(n, 0L))
       var d = 0L
       while (d < maxDepth && front.nonEmpty) {
@@ -513,32 +481,9 @@ object Graph {
         done = depth >= maxDepth
       }
     }
-    val out = visited.localCheckpoint()
-    e.unpersist()
-    out
+    visited.localCheckpoint()
   }
 
-  /** k-core of the UNDIRECTED simple graph under `edges` (direction and
-    * duplicate/self edges dropped): iteratively peel every node whose
-    * degree in the surviving subgraph is < k until fixpoint — the classic
-    * link-farm / well-connectedness signal (spam rings and boilerplate
-    * nav clusters live in high cores; genuine long-tail content in low
-    * ones). Returns the surviving nodes with their WITHIN-CORE degree.
-    *
-    * Each peel round is deterministic (drop ALL underdegree nodes
-    * simultaneously), so round i's subgraph is a pure function of the
-    * input — an external engine unrolling the same peels reproduces the
-    * result exactly; extra rounds after fixpoint are identity, so any
-    * unroll depth >= the convergence round matches.
-    *
-    * Scale shape: rounds are edge-sized joins against the (node-bounded)
-    * keep-list — one degree aggregate + two semi-joins each —
-    * `localCheckpoint`ed per round to cut lineage; the convergence test
-    * rides the checkpointed leaf (a cheap count, not a recompute).
-    * Peeling needs at most |V| rounds; real web graphs converge in tens.
-    * `maxRounds` caps the cost — stopping early yields the same rows an
-    * equally-deep unroll produces (document the depth when comparing).
-    */
   /** Newman modularity Q of a node→community assignment over the
     * undirected simple graph:
     *
@@ -655,6 +600,27 @@ object Graph {
       when(dx > 0 && dy > 0, num / (sqrt(dx) * sqrt(dy))).as("r"))
   }
 
+  /** k-core of the UNDIRECTED simple graph under `edges` (direction and
+    * duplicate/self edges dropped): iteratively peel every node whose
+    * degree in the surviving subgraph is < k until fixpoint — the classic
+    * link-farm / well-connectedness signal (spam rings and boilerplate
+    * nav clusters live in high cores; genuine long-tail content in low
+    * ones). Returns the surviving nodes with their WITHIN-CORE degree.
+    *
+    * Each peel round is deterministic (drop ALL underdegree nodes
+    * simultaneously), so round i's subgraph is a pure function of the
+    * input — an external engine unrolling the same peels reproduces the
+    * result exactly; extra rounds after fixpoint are identity, so any
+    * unroll depth >= the convergence round matches.
+    *
+    * Scale shape: rounds are edge-sized joins against the (node-bounded)
+    * keep-list — one degree aggregate + two semi-joins each —
+    * `localCheckpoint`ed per round to cut lineage; the convergence test
+    * rides the checkpointed leaf (a cheap count, not a recompute).
+    * Peeling needs at most |V| rounds; real web graphs converge in tens.
+    * `maxRounds` caps the cost — stopping early yields the same rows an
+    * equally-deep unroll produces (document the depth when comparing).
+    */
   def kCore(edges: DataFrame, srcCol: String, dstCol: String, k: Int,
             maxRounds: Int = 50): DataFrame = {
     require(k >= 1, "k must be >= 1")
@@ -667,18 +633,12 @@ object Graph {
     var cur = simple
       .unionByName(simple.select(col("b").as("a"), col("a").as("b")))
       .localCheckpoint()
-    var prevEdges = cur.count()
-    // SIZE-ADAPTIVE DISPATCH — same simultaneous peel with the same
-    // round cap and stop condition, one driver pass
-    val kcLocalMax = edges.sparkSession.conf
-      .getOption("spark.graft.graph.localEdgeThreshold").map(_.toLong)
-      .getOrElse(4L << 20)
-    val kcProbe = cur.agg(count(col("a")), count(col("b"))).head()
-    if (prevEdges <= kcLocalMax && kcProbe.getLong(0) == prevEdges &&
-        kcProbe.getLong(1) == prevEdges) {
+    // small graph: the same simultaneous peel on the driver ([[LocalDispatch]])
+    val local = LocalDispatch.rows(cur, LocalDispatch.GraphKey)
+    if (local.nonEmpty) {
       val spark = edges.sparkSession
       import spark.implicits._
-      var es = cur.collect().map(r => (r.getLong(0), r.getLong(1)))
+      var es = local.get.map(r => (r.getLong(0), r.getLong(1)))
       var prev = es.length.toLong
       var rd = 0
       var dn = prev == 0L
@@ -696,6 +656,7 @@ object Graph {
         .map { case (n, o) => (n, o.length.toLong) }
         .toDF("node", "core_degree")
     }
+    var prevEdges = cur.count()
     var round = 0
     var done = prevEdges == 0L
     while (!done && round < maxRounds) {
@@ -740,21 +701,10 @@ object Graph {
         col(dstCol).cast("long").as("dst"), col(wCol).cast("long").as("w"))
       .groupBy(col("src"), col("dst")).agg(min(col("w")).as("w"))
       .localCheckpoint()
-    // SIZE-ADAPTIVE DISPATCH (the Dedup.clusters probe pattern): the edge
-    // table is already a materialized leaf, so the count is a cheap scan.
-    // Under the driver bound, the SAME synchronous capped-round relaxation
-    // runs locally (identical math: per round every edge relaxes off the
-    // previous round's distances, min-merge, early exit on no change) —
-    // one driver pass instead of maxRounds join jobs. Past the bound the
-    // distributed loop below is unchanged. GraphSpec pins equality.
-    val localMax = spark.conf
-      .getOption("spark.graft.graph.localEdgeThreshold").map(_.toLong)
-      .getOrElse(4L << 20)
-    val eProbe = e.agg(count(lit(1)), count(col("src")), count(col("dst")),
-      count(col("w"))).head()
-    if (eProbe.getLong(0) <= localMax && (1 to 3).forall(i =>
-        eProbe.getLong(i) == eProbe.getLong(0))) {
-      val es = e.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+    // small graph: the same capped-round relaxation on the driver ([[LocalDispatch]])
+    val local = LocalDispatch.rows(e, LocalDispatch.GraphKey)
+    if (local.nonEmpty) {
+      val es = local.get.map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       // boxed maps on purpose: absence must read as null, never unbox to 0
       val d = new java.util.HashMap[java.lang.Long, java.lang.Long]()
       sources.distinct.foreach(s => d.put(s, 0L))
@@ -830,24 +780,12 @@ object Graph {
       .where(col("u") =!= col("v"))
       .groupBy(col("u"), col("v")).agg(min(col("w")).as("w"))
       .localCheckpoint()
-    // SIZE-ADAPTIVE DISPATCH (the Dedup.clusters probe pattern): e0 is a
-    // materialized leaf, the count a cheap scan. Under the driver bound the
-    // SAME round structure runs locally — per round each component's
-    // lightest (w, u, v)-ordered outgoing edge is chosen, components
-    // contract, capped at maxRounds — so the selected forest is identical
-    // edge-for-edge (including the tie-ordering and cap semantics). Past
-    // the bound the distributed loop below is unchanged. GraphSpec pins
-    // equality.
-    val localMaxB = edges.sparkSession.conf
-      .getOption("spark.graft.graph.localEdgeThreshold").map(_.toLong)
-      .getOrElse(4L << 20)
-    val bProbe = e0.agg(count(lit(1)), count(col("u")), count(col("v")),
-      count(col("w"))).head()
-    if (bProbe.getLong(0) <= localMaxB && (1 to 3).forall(i =>
-        bProbe.getLong(i) == bProbe.getLong(0))) {
+    // small graph: the same (w, u, v)-ordered rounds on the driver ([[LocalDispatch]])
+    val local = LocalDispatch.rows(e0, LocalDispatch.GraphKey)
+    if (local.nonEmpty) {
       val spark2 = edges.sparkSession
       import spark2.implicits._
-      val es = e0.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+      val es = local.get.map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       val compM = new java.util.HashMap[Long, Long]()
       es.foreach { case (u, v, _) =>
         compM.putIfAbsent(u, u); compM.putIfAbsent(v, v)

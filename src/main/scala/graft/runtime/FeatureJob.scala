@@ -5,6 +5,7 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DecimalType, IntegerType}
 
 import graft.functions._
 import graft.pages.PageGen
@@ -85,7 +86,7 @@ object FeatureJob {
 
   /** Deterministic shard of a url. */
   def shardCol(shards: Int): org.apache.spark.sql.Column =
-    pmod(xxhash64(col("url")), lit(shards)).cast("int")
+    pmod(xxhash64(col("url")), lit(shards)).cast(IntegerType)
 
   /** The per-row feature stage — no shuffle, fully parallel. */
   def extractStage(pages: DataFrame): DataFrame = extractStage(pages, "cnf")
@@ -181,7 +182,7 @@ object FeatureJob {
     */
   private def checksumTerm: org.apache.spark.sql.Column =
     xxhash64(col("url"), col("warc_ts"), coalesce(col("instance_id"), lit("")))
-      .cast("decimal(20,0)")
+      .cast(DecimalType(20, 0))
 
   /** Fingerprint of the input relation from METADATA only — no input scan
     * (the previous count() was a full corpus pass). File-backed inputs

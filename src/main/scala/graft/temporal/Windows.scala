@@ -3,6 +3,7 @@ package graft.temporal
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, TimestampType}
 
 /** Windowed feature engineering over crawl revisits (SURVEY.md §2.6 W1-W5).
   * Every window orders by the event timestamp with frames ending at the
@@ -19,7 +20,7 @@ object Windows {
   /** Epoch seconds of a timestamp-ish column; works for TIMESTAMP,
     * TIMESTAMP_NTZ (via the session-tz cast) and numeric columns.
     */
-  private[temporal] def epochSeconds(c: Column): Column = c.cast("timestamp").cast("long")
+  private[temporal] def epochSeconds(c: Column): Column = c.cast(TimestampType).cast(LongType)
 
   /** W1: previous/next snapshot values and revisit deltas. `lead` looks at
     * FUTURE rows — legitimate only for training-label construction, so lead

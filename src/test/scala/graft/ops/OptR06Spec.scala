@@ -370,6 +370,40 @@ class OptR06Spec extends SparkSpec {
     assert(l == d)
   }
 
+  private def optLong(r: org.apache.spark.sql.Row, i: Int): Option[Long] =
+    if (r.isNullAt(i)) None else Some(r.getLong(i))
+
+  test("bfsDepth: seeds containing a null give local ≡ forced-distributed") {
+    val rnd = new scala.util.Random(19)
+    val edges = Seq.fill(50)((rnd.nextInt(20).toLong, rnd.nextInt(20).toLong))
+      .toDF("src", "dst")
+    val seeds = Seq(Some(0L), None, Some(4L)).toDF("node")
+    for (cap <- Seq(1, 5)) {
+      def run() = Graph.bfsDepth(edges, "src", "dst", seeds, "node", maxDepth = cap)
+        .collect().map(r => (optLong(r, 0), r.getLong(1))).toSet
+      val l = run()
+      val d = forcedDistributed(run())
+      assert(l == d, s"cap=$cap")
+      assert(l.contains((None, 0L)) && l.contains((Some(0L), 0L)), s"cap=$cap")
+    }
+  }
+
+  test("pageRankInt / resolveCanonicalChains: null-bearing edges give local ≡ forced-distributed") {
+    val rnd = new scala.util.Random(37)
+    val edges = (Seq.fill(60)((Option(rnd.nextInt(25).toLong), Option(rnd.nextInt(25).toLong))) ++
+      Seq((None, Some(3L)), (Some(4L), None), (None, None)))
+      .toDF("src", "dst")
+    def pr() = Graph.pageRankInt(edges, "src", "dst", iters = 3).collect()
+      .map(r => (optLong(r, 0), r.getLong(1))).toSet
+    assert(pr() == forcedDistributed(pr()), "pageRankInt")
+    val chains = (Seq.tabulate(12)(i => (Option(i.toLong + 1), Option(i.toLong))) ++
+      Seq((Some(40L), None), (None, Some(5L)), (Some(41L), Some(40L))))
+      .toDF("f", "t")
+    def rc() = Curation.resolveCanonicalChains(chains, "f", "t").collect()
+      .map(r => (optLong(r, 0), optLong(r, 1), r.getBoolean(2))).toSet
+    assert(rc() == forcedDistributed(rc()), "resolveCanonicalChains")
+  }
+
   // ---- prefix-filtered candidate rewrite ≡ brute force (round-6) ----
 
   test("ngramJaccardPairs: prefix+positional candidates ≡ pruned brute force, any cap") {
