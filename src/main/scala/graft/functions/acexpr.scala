@@ -1,9 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.trees.UnaryLike
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -102,6 +102,20 @@ object AhoCorasick {
   }
 }
 
+/** The model literal of [[MultiPatternCount]]: the pattern set, whose
+  * automaton is built once per task (model-sized).
+  */
+final class PatternSet(patterns: Seq[String], lowercase: Boolean) extends KernelModel {
+  protected def state: Array[AnyRef] = Array(patterns, Boolean.box(lowercase))
+  @transient private lazy val automaton = new AhoCorasick.Automaton(patterns.toIndexedSeq)
+
+  def multi_pattern_count(text: UTF8String): ArrayData = {
+    val raw = text.toString
+    UnsafeArrayData.fromPrimitiveArray(
+      automaton.count(if (lowercase) raw.toLowerCase(java.util.Locale.ROOT) else raw))
+  }
+}
+
 /** MultiPatternCount — string → array<bigint> of per-pattern occurrence
   * counts under ONE Aho–Corasick automaton (see [[AhoCorasick]]). When
   * `lowercase` is set the text is lowercased first (patterns must then be
@@ -109,17 +123,16 @@ object AhoCorasick {
   *
   * Scale shape: narrow per-row work, cost O(|text| + matches) independent
   * of pattern count; the automaton is built lazily once per task from the
-  * serialized pattern list (model-sized).
+  * serialized pattern list ([[PatternSet]]).
   */
 case class MultiPatternCount(child: Expression, patterns: Seq[String],
                              lowercase: Boolean = true)
-    extends UnaryExpression with KernelCallCodegen {
+    extends KernelExpression with UnaryLike[Expression] {
   require(patterns.nonEmpty && patterns.forall(_.nonEmpty),
     "patterns must be non-empty strings")
   require(!lowercase || patterns.forall(p => p == p.toLowerCase(java.util.Locale.ROOT)),
     "lowercase matching requires lowercase patterns")
 
-  override def nullable: Boolean = true
   override def prettyName: String = "multi_pattern_count"
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
@@ -129,14 +142,8 @@ case class MultiPatternCount(child: Expression, patterns: Seq[String],
       s"$prettyName expects string input, got ${t.simpleString}")
   }
 
-  @transient private lazy val automaton =
-    new AhoCorasick.Automaton(patterns.toIndexedSeq)
-
-  protected override def nullSafeEval(input: Any): Any = {
-    val raw = input.asInstanceOf[UTF8String].toString
-    val text = if (lowercase) raw.toLowerCase(java.util.Locale.ROOT) else raw
-    new GenericArrayData(automaton.count(text))
-  }
+  override lazy val replacement: Expression = invokeModel(new PatternSet(patterns, lowercase),
+    prettyName, Seq(KernelExpression.typed(child, StringType)))
 
   override protected def withNewChildInternal(newChild: Expression): MultiPatternCount =
     copy(child = newChild)

@@ -1,8 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -126,38 +126,18 @@ object BpeKernel {
   }
 }
 
-/** BpeSegmentWords — array<string> of words → array<array<string>> of BPE
-  * subword segmentations under a FIXED training-ordered merge list (held in
-  * the expression; see [[BpeKernel]] for semantics and cost). Null words
-  * map to empty segmentations; a null array maps to null.
-  *
-  * Scale shape: narrow per-row work with the merge-rank table broadcast
-  * inside the serialized expression (model-sized — 100k merges ≈ a few MB);
-  * no join, no shuffle, cost independent of the merge count.
+/** The model literal of [[BpeSegmentWords]]: the merge list, whose rank
+  * table is built once per task (model-sized).
   */
-case class BpeSegmentWords(child: Expression, merges: Seq[(String, String)])
-    extends UnaryExpression with KernelCallCodegen {
-  BpeKernel.requireTrainingOrdered(merges)
-
-  override def nullable: Boolean = true
-  override def prettyName: String = "bpe_segment_words"
-  override def dataType: DataType =
-    ArrayType(ArrayType(StringType, containsNull = false), containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) | NullType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects array<string> input, got ${t.simpleString}")
-  }
-
+final class BpeMerges(merges: Seq[(String, String)]) extends KernelModel {
+  protected def state: Array[AnyRef] = Array(merges)
   @transient private lazy val rank = BpeKernel.rankTable(merges)
 
-  protected override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    val out = new Array[Any](arr.numElements())
+  def bpe_segment_words(words: ArrayData): ArrayData = {
+    val out = new Array[Any](words.numElements())
     var i = 0
     while (i < out.length) {
-      val w = arr.getUTF8String(i)
+      val w = words.getUTF8String(i)
       val segs =
         if (w == null) Array.empty[String]
         else BpeKernel.segment(w.toString, rank)
@@ -169,6 +149,33 @@ case class BpeSegmentWords(child: Expression, merges: Seq[(String, String)])
     }
     new GenericArrayData(out)
   }
+}
+
+/** BpeSegmentWords — array<string> of words → array<array<string>> of BPE
+  * subword segmentations under a FIXED training-ordered merge list (held in
+  * the expression; see [[BpeKernel]] for semantics and cost). Null words
+  * map to empty segmentations; a null array maps to null.
+  *
+  * Scale shape: narrow per-row work with the merge-rank table broadcast
+  * inside the serialized expression (model-sized — 100k merges ≈ a few MB);
+  * no join, no shuffle, cost independent of the merge count.
+  */
+case class BpeSegmentWords(child: Expression, merges: Seq[(String, String)])
+    extends KernelExpression with UnaryLike[Expression] {
+  BpeKernel.requireTrainingOrdered(merges)
+
+  override def prettyName: String = "bpe_segment_words"
+  override def dataType: DataType =
+    ArrayType(ArrayType(StringType, containsNull = false), containsNull = false)
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(StringType, _) | NullType => TypeCheckResult.TypeCheckSuccess
+    case t => TypeCheckResult.TypeCheckFailure(
+      s"$prettyName expects array<string> input, got ${t.simpleString}")
+  }
+
+  override lazy val replacement: Expression = invokeModel(new BpeMerges(merges), prettyName,
+    Seq(KernelExpression.typed(child, ArrayType(StringType))))
 
   override protected def withNewChildInternal(newChild: Expression): BpeSegmentWords =
     copy(child = newChild)

@@ -2,42 +2,38 @@ package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, Literal}
+import org.apache.spark.sql.catalyst.trees.UnaryLike
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.core._
 
 /** Shared plumbing for the doc-local kernel expressions: accepts a string or
   * binary child (the pages table carries both `text:string` and
-  * `html:binary`), evaluates a pure kernel over the raw bytes, and maps a
+  * `html:binary`) and calls a pure kernel over the raw bytes, which maps a
   * malformed document to null instead of failing the task — at 10^12-doc
   * scale one bad page must not kill a stage; the pipeline derives a `status`
-  * column from the null.
-  *
-  * These are deterministic, null-intolerant unary expressions riding
-  * [[KernelCallCodegen]]: the kernels are hundreds of ops per row, so
-  * generating their bodies buys nothing — but a CodegenFallback marker
-  * would make the whole enclosing operator codegen-unsupported and push
-  * every co-resident expression (md5s, struct assembly) onto interpreted
-  * eval, so the generated stage calls the kernel through a reference
-  * instead (round-5 verdict item 2).
+  * column from the null. The entry methods take the doc as `Array[Byte]`:
+  * a string child is cast to binary, which is the `getBytes` the kernels
+  * always ran on.
   */
-trait DocKernelExpression extends UnaryExpression with KernelCallCodegen {
-  override def nullable: Boolean = true
-
+trait DocKernelExpression extends KernelExpression with UnaryLike[Expression] {
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case StringType | BinaryType | NullType => TypeCheckResult.TypeCheckSuccess
     case t => TypeCheckResult.TypeCheckFailure(
       s"$prettyName expects string or binary input, got ${t.simpleString}")
   }
 
-  @inline protected final def docBytes(input: Any): Array[Byte] = input match {
-    case s: UTF8String => s.getBytes
-    case b: Array[Byte] => b
-  }
+  /** `entries.entry(doc bytes, params...)`; params become literals. A
+    * kernel declared non-nullable also receives null docs: it maps them to
+    * a status row.
+    */
+  protected final def docCall(entries: AnyRef, entry: String, params: Any*): Expression =
+    call(entries, entry,
+      (if (child.dataType == BinaryType) child else Cast(child, BinaryType)) +: params.map(Literal(_)),
+      propagateNull = nullable)
 }
 
 /** Document formats understood by the normalization/identity expressions. */
@@ -47,6 +43,141 @@ object DocFormat {
   val Opb = "opb"
   val Pqbf = "pqbf"
   val all: Seq[String] = Seq(Cnf, Wcnf, Opb, Pqbf)
+}
+
+/** Entry methods of the doc kernels, one per SQL function (see
+  * [[KernelExpression]]). A malformed doc maps to null, or to its status
+  * row for the kernels that never return null.
+  */
+object DocKernels {
+  private def orNull[T <: AnyRef](f: => T): T =
+    try f catch { case _: DocParseException => null.asInstanceOf[T] }
+  private def str(s: => String): UTF8String = orNull(UTF8String.fromString(s))
+  private def normalized(doc: Array[Byte], normalize: (Array[Byte], BufferSink) => Unit): UTF8String =
+    str { val sink = new BufferSink(doc.length + 16); normalize(doc, sink); sink.result }
+  // non-copying wrap: fromSeq(array) would defensively copy the 58-79
+  // element feature vector ONCE PER ROW through the implicit conversion
+  private def row(values: Array[Double]): InternalRow =
+    InternalRow.fromSeq(scala.collection.immutable.ArraySeq.unsafeWrapArray(values))
+
+  def normalize_cnf(doc: Array[Byte]): UTF8String = normalized(doc, Dimacs.normalizeCnf)
+  def normalize_wcnf(doc: Array[Byte]): UTF8String = normalized(doc, Dimacs.normalizeWcnf)
+  def normalize_opb(doc: Array[Byte]): UTF8String = normalized(doc, Dimacs.normalizeOpb)
+  def normalize_pqbf(doc: Array[Byte]): UTF8String = normalized(doc, Dimacs.normalizePqbf)
+  def normalize_cnf_file(doc: Array[Byte]): UTF8String = str(Dimacs.normalizeCnfFile(doc))
+  def sanitize_cnf(doc: Array[Byte]): UTF8String = str(Dimacs.sanitizeCnfFile(doc))
+
+  def gbd_hash(doc: Array[Byte]): UTF8String = str(Dimacs.gbdHashCnf(doc))
+  def gbd_hash_wcnf(doc: Array[Byte]): UTF8String = str(Dimacs.gbdHashWcnf(doc))
+  def gbd_hash_opb(doc: Array[Byte]): UTF8String = str(Dimacs.gbdHashOpb(doc))
+  def gbd_hash_pqbf(doc: Array[Byte]): UTF8String = str(Dimacs.gbdHashPqbf(doc))
+  def iso_hash(doc: Array[Byte]): UTF8String = str(Dimacs.isoHashCnf(doc))
+  def iso_hash_wcnf(doc: Array[Byte]): UTF8String = str(Dimacs.isoHashWcnf(doc))
+  def iso_hash2(doc: Array[Byte]): UTF8String = str(IsoHash2.isoHash2(doc))
+
+  def cnf_features(doc: Array[Byte]): InternalRow = orNull {
+    // the variable-array budget of cnf_extract, at the default byte
+    // budget: `2147483647 0` must not size a 2^31-entry array
+    val scan = new CnfScan(doc, hash = false)
+    if (CnfExtract.overVarBudget(scan.nVars, CnfExtract.DefaultMaxBytes)) null
+    else row(CnfBase.extract(scan))
+  }
+  def wcnf_features(doc: Array[Byte]): InternalRow = orNull(row(WcnfBase.extract(doc)))
+  def opb_features(doc: Array[Byte]): InternalRow = orNull(row(OpbBase.extract(doc)))
+
+  private val NoCodec = UTF8String.fromString(Compression.None)
+  private def status(parseOk: Boolean, limited: Boolean, timedOut: Boolean,
+                     decodeFailed: Boolean): InternalRow =
+    InternalRow(null, null, parseOk, limited, timedOut, decodeFailed)
+
+  /** See [[CnfExtract]]; a null doc is a row of all-false flags. */
+  def cnf_extract(raw: Array[Byte], maxBytes: Int, maxOps: Long, codec: UTF8String): InternalRow =
+    if (raw == null) status(false, false, false, false)
+    else if (raw.length > maxBytes) status(false, true, false, false)
+    else {
+      val doc =
+        if (codec == NoCodec) raw
+        else try Compression.decompress(raw, codec.toString, maxBytes)
+        catch { case _: DocParseException => return status(false, false, false, true) }
+      if (doc.length > maxBytes) status(false, true, false, false)
+      else try {
+        // tokenize once; the literal count IS the op count of the linear
+        // kernel loops that follow, so the time budget is checked before any
+        // of them, and the variable-array budget before they allocate
+        val scan = new CnfScan(doc, hash = true)
+        if (scan.nLits.toLong > maxOps) status(true, false, true, false)
+        else {
+          val hash = scan.gbdHash
+          if (CnfExtract.overVarBudget(scan.nVars, maxBytes)) status(true, true, false, false)
+          else InternalRow(UTF8String.fromString(hash), row(CnfBase.extract(scan)),
+            true, false, false, false)
+        }
+      } catch {
+        case _: DocParseException => status(false, false, false, false)
+      }
+    }
+
+  def cnf_gate_features(doc: Array[Byte], maxOps: Long): InternalRow =
+    try row(Gates.extract(doc, maxOps))
+    catch {
+      case _: DocParseException => null
+      // resource envelope: a doc whose semantic gate checks blow the solver
+      // budget — or whose blocked-set structure blows the op budget —
+      // yields null features instead of stalling the task
+      case _: graft.core.Sat.BudgetExceeded => null
+      case _: KernelBudget.KernelTimeout => null
+    }
+
+  /** See [[GateExtract]]; a null doc has status `null_text`. */
+  def cnf_gate_extract(doc: Array[Byte], maxOps: Long): InternalRow = {
+    def out(features: InternalRow, status: String) = InternalRow(features, UTF8String.fromString(status))
+    if (doc == null) out(null, "null_text")
+    else try out(row(Gates.extract(doc, maxOps)), "ok")
+    catch {
+      case _: DocParseException => out(null, "parse_error")
+      case _: graft.core.Sat.BudgetExceeded => out(null, "timeout")
+      case _: KernelBudget.KernelTimeout => out(null, "timeout")
+    }
+  }
+
+  def kis_transform(doc: Array[Byte]): InternalRow = orNull {
+    val k = Transforms.cnf2kis(doc)
+    InternalRow(UTF8String.fromString(k.text), k.nodes, k.edges, k.k)
+  }
+  def bip_transform(doc: Array[Byte]): InternalRow = orNull {
+    val b = Transforms.cnf2bip(doc)
+    InternalRow(UTF8String.fromString(b.text), b.nodes, b.edges)
+  }
+
+  private def decompress(payload: Array[Byte], codec: String, maxBytes: Int): Array[Byte] =
+    orNull(Compression.decompress(payload, codec, maxBytes))
+  def decompress_auto(p: Array[Byte], maxBytes: Int): Array[Byte] = decompress(p, Compression.Auto, maxBytes)
+  def decompress_xz(p: Array[Byte], maxBytes: Int): Array[Byte] = decompress(p, Compression.Xz, maxBytes)
+  def decompress_gzip(p: Array[Byte], maxBytes: Int): Array[Byte] = decompress(p, Compression.Gzip, maxBytes)
+  def decompress_bzip2(p: Array[Byte], maxBytes: Int): Array[Byte] = decompress(p, Compression.Bzip2, maxBytes)
+  def decompress_zstd(p: Array[Byte], maxBytes: Int): Array[Byte] = decompress(p, Compression.Zstd, maxBytes)
+  def decompress_none(p: Array[Byte], maxBytes: Int): Array[Byte] = decompress(p, Compression.None, maxBytes)
+
+  def cnf_sanicheck(doc: Array[Byte]): InternalRow = orNull {
+    val r = Dimacs.saniCheck(doc, sanitize = true)
+    @inline def b(x: Boolean): Double = if (x) 1.0 else 0.0
+    row(Array(
+      r.headVars.toDouble, r.headClauses.toDouble, r.normVars.toDouble, r.normClauses.toDouble,
+      b(r.whitespaceNormalised), b(r.hasComment),
+      r.saniVars.toDouble, r.saniClauses.toDouble,
+      b(r.hasTautologicalClause), b(r.hasDuplicateLiterals), b(r.hasEmptyClause)))
+  }
+
+  def cnf_clauses(doc: Array[Byte]): ArrayData = orNull {
+    val d = ClauseDoc.parse(doc)
+    val clauses = new Array[AnyRef](d.nClauses)
+    var c = 0
+    while (c < d.nClauses) {
+      clauses(c) = new GenericArrayData(java.util.Arrays.copyOfRange(d.lits, d.clauseStart(c), d.clauseEnd(c)))
+      c += 1
+    }
+    new GenericArrayData(clauses)
+  }
 }
 
 /** NormalizeText — the byte-identical extracted-text contract
@@ -66,29 +197,11 @@ case class NormalizeText(child: Expression, format: String, form: String)
 
   override def dataType: DataType = StringType
   override def prettyName: String = s"normalize_${format}_$form"
-
-  protected override def nullSafeEval(input: Any): Any = {
-    val buf = docBytes(input)
-    try {
-      val s = form match {
-        case "file" => Dimacs.normalizeCnfFile(buf)
-        case "sanitize" => Dimacs.sanitizeCnfFile(buf)
-        case _ =>
-          val sink = new BufferSink(buf.length + 16)
-          format match {
-            case DocFormat.Cnf => Dimacs.normalizeCnf(buf, sink)
-            case DocFormat.Wcnf => Dimacs.normalizeWcnf(buf, sink)
-            case DocFormat.Opb => Dimacs.normalizeOpb(buf, sink)
-            case DocFormat.Pqbf => Dimacs.normalizePqbf(buf, sink)
-          }
-          sink.result
-      }
-      UTF8String.fromString(s)
-    } catch {
-      case _: DocParseException => null
-    }
-  }
-
+  override lazy val replacement: Expression = docCall(DocKernels, form match {
+    case "file" => "normalize_cnf_file"
+    case "sanitize" => "sanitize_cnf"
+    case _ => s"normalize_$format"
+  })
   override protected def withNewChildInternal(newChild: Expression): NormalizeText =
     copy(child = newChild)
 }
@@ -102,22 +215,8 @@ case class GbdHash(child: Expression, format: String) extends DocKernelExpressio
 
   override def dataType: DataType = StringType
   override def prettyName: String = s"gbd_hash_$format"
-
-  protected override def nullSafeEval(input: Any): Any = {
-    val buf = docBytes(input)
-    try {
-      val hex = format match {
-        case DocFormat.Cnf => Dimacs.gbdHashCnf(buf)
-        case DocFormat.Wcnf => Dimacs.gbdHashWcnf(buf)
-        case DocFormat.Opb => Dimacs.gbdHashOpb(buf)
-        case DocFormat.Pqbf => Dimacs.gbdHashPqbf(buf)
-      }
-      UTF8String.fromString(hex)
-    } catch {
-      case _: DocParseException => null
-    }
-  }
-
+  override lazy val replacement: Expression =
+    docCall(DocKernels, if (format == DocFormat.Cnf) "gbd_hash" else prettyName)
   override protected def withNewChildInternal(newChild: Expression): GbdHash =
     copy(child = newChild)
 }
@@ -130,19 +229,8 @@ case class IsoHash(child: Expression, format: String) extends DocKernelExpressio
 
   override def dataType: DataType = StringType
   override def prettyName: String = s"iso_hash_$format"
-
-  protected override def nullSafeEval(input: Any): Any = {
-    val buf = docBytes(input)
-    try {
-      val hex =
-        if (format == DocFormat.Cnf) Dimacs.isoHashCnf(buf)
-        else Dimacs.isoHashWcnf(buf)
-      UTF8String.fromString(hex)
-    } catch {
-      case _: DocParseException => null
-    }
-  }
-
+  override lazy val replacement: Expression =
+    docCall(DocKernels, if (format == DocFormat.Cnf) "iso_hash" else prettyName)
   override protected def withNewChildInternal(newChild: Expression): IsoHash =
     copy(child = newChild)
 }
@@ -153,11 +241,7 @@ case class IsoHash(child: Expression, format: String) extends DocKernelExpressio
 case class IsoHash2Expr(child: Expression) extends DocKernelExpression {
   override def dataType: DataType = StringType
   override def prettyName: String = "iso_hash2"
-  protected override def nullSafeEval(input: Any): Any = {
-    val buf = docBytes(input)
-    try UTF8String.fromString(IsoHash2.isoHash2(buf))
-    catch { case _: DocParseException => null }
-  }
+  override lazy val replacement: Expression = docCall(DocKernels, prettyName)
   override protected def withNewChildInternal(newChild: Expression): IsoHash2Expr =
     copy(child = newChild)
 }
@@ -200,28 +284,7 @@ case class ExtractFeatures(child: Expression, format: String) extends DocKernelE
   }
 
   override def prettyName: String = s"${format}_features"
-
-  protected override def nullSafeEval(input: Any): Any = {
-    val buf = docBytes(input)
-    try {
-      val values = format match {
-        case DocFormat.Cnf =>
-          // the variable-array budget of cnf_extract, at the default byte
-          // budget: `2147483647 0` must not size a 2^31-entry array
-          val scan = new CnfScan(buf, hash = false)
-          if (CnfExtract.overVarBudget(scan.nVars, CnfExtract.DefaultMaxBytes)) return null
-          CnfBase.extract(scan)
-        case DocFormat.Wcnf => WcnfBase.extract(buf)
-        case _ => OpbBase.extract(buf)
-      }
-      // non-copying wrap: fromSeq(array) would defensively copy the 58-79
-      // element feature vector ONCE PER ROW through the implicit conversion
-      InternalRow.fromSeq(scala.collection.immutable.ArraySeq.unsafeWrapArray(values))
-    } catch {
-      case _: DocParseException => null
-    }
-  }
-
+  override lazy val replacement: Expression = docCall(DocKernels, prettyName)
   override protected def withNewChildInternal(newChild: Expression): ExtractFeatures =
     copy(child = newChild)
 }
@@ -305,42 +368,8 @@ case class CnfExtract(child: Expression, maxBytes: Int = CnfExtract.DefaultMaxBy
   override def nullable: Boolean = false
   override def dataType: StructType = CnfExtract.schema
   override def prettyName: String = "cnf_extract"
-  protected override def nullSafeEval(input: Any): Any = {
-    val raw = docBytes(input)
-    if (raw.length > maxBytes) InternalRow(null, null, false, true, false, false)
-    else {
-      val buf =
-        if (codec == Compression.None) raw
-        else try Compression.decompress(raw, codec, maxBytes)
-        catch { case _: DocParseException =>
-          return InternalRow(null, null, false, false, false, true)
-        }
-      if (buf.length > maxBytes) InternalRow(null, null, false, true, false, false)
-      else try {
-        // tokenize once; the literal count IS the op count of the linear
-        // kernel loops that follow, so the time budget is checked before any
-        // of them, and the variable-array budget before they allocate
-        val scan = new CnfScan(buf, hash = true)
-        if (scan.nLits.toLong > maxOps) InternalRow(null, null, true, false, true, false)
-        else {
-          val hash = scan.gbdHash
-          if (CnfExtract.overVarBudget(scan.nVars, maxBytes)) InternalRow(null, null, true, true, false, false)
-          else {
-            val features = CnfBase.extract(scan)
-            InternalRow(UTF8String.fromString(hash),
-              InternalRow.fromSeq(scala.collection.immutable.ArraySeq.unsafeWrapArray(features)),
-              true, false, false, false)
-          }
-        }
-      } catch {
-        case _: DocParseException => InternalRow(null, null, false, false, false, false)
-      }
-    }
-  }
-  override def evalKernelNullable(value: Any): Any =
-    if (value == null) InternalRow(null, null, false, false, false, false)
-    else nullSafeEval(value)
-  override def eval(input: InternalRow): Any = evalKernelNullable(child.eval(input))
+  override lazy val replacement: Expression =
+    docCall(DocKernels, prettyName, maxBytes, maxOps, codec)
   override protected def withNewChildInternal(newChild: Expression): CnfExtract =
     copy(child = newChild)
 }
@@ -350,19 +379,7 @@ case class GateFeaturesExpr(child: Expression, maxOps: Long = KernelBudget.Unlim
     extends DocKernelExpression {
   override def dataType: StructType = FeatureSchemas.gates
   override def prettyName: String = "cnf_gate_features"
-  protected override def nullSafeEval(input: Any): Any = {
-    val buf = docBytes(input)
-    try InternalRow.fromSeq(
-      scala.collection.immutable.ArraySeq.unsafeWrapArray(Gates.extract(buf, maxOps)))
-    catch {
-      case _: DocParseException => null
-      // resource envelope: a doc whose semantic gate checks blow the solver
-      // budget — or whose blocked-set structure blows the op budget —
-      // yields null features instead of stalling the task
-      case _: graft.core.Sat.BudgetExceeded => null
-      case _: KernelBudget.KernelTimeout => null
-    }
-  }
+  override lazy val replacement: Expression = docCall(DocKernels, prettyName, maxOps)
   override protected def withNewChildInternal(newChild: Expression): GateFeaturesExpr =
     copy(child = newChild)
 }
@@ -392,22 +409,7 @@ case class GateExtract(child: Expression, maxOps: Long = GateExtract.DefaultMaxO
   override def nullable: Boolean = false
   override def dataType: StructType = GateExtract.schema
   override def prettyName: String = "cnf_gate_extract"
-  protected override def nullSafeEval(input: Any): Any = {
-    val buf = docBytes(input)
-    try InternalRow(
-      InternalRow.fromSeq(
-        scala.collection.immutable.ArraySeq.unsafeWrapArray(Gates.extract(buf, maxOps))),
-      UTF8String.fromString("ok"))
-    catch {
-      case _: DocParseException => InternalRow(null, UTF8String.fromString("parse_error"))
-      case _: graft.core.Sat.BudgetExceeded => InternalRow(null, UTF8String.fromString("timeout"))
-      case _: KernelBudget.KernelTimeout => InternalRow(null, UTF8String.fromString("timeout"))
-    }
-  }
-  override def evalKernelNullable(value: Any): Any =
-    if (value == null) InternalRow(null, UTF8String.fromString("null_text"))
-    else nullSafeEval(value)
-  override def eval(input: InternalRow): Any = evalKernelNullable(child.eval(input))
+  override lazy val replacement: Expression = docCall(DocKernels, prettyName, maxOps)
   override protected def withNewChildInternal(newChild: Expression): GateExtract =
     copy(child = newChild)
 }
@@ -422,13 +424,7 @@ case class KisTransform(child: Expression) extends DocKernelExpression {
     StructField("edges", LongType, nullable = false),
     StructField("k", LongType, nullable = false)))
   override def prettyName: String = "kis_transform"
-  protected override def nullSafeEval(input: Any): Any = {
-    val buf = docBytes(input)
-    try {
-      val k = Transforms.cnf2kis(buf)
-      InternalRow(UTF8String.fromString(k.text), k.nodes, k.edges, k.k)
-    } catch { case _: DocParseException => null }
-  }
+  override lazy val replacement: Expression = docCall(DocKernels, prettyName)
   override protected def withNewChildInternal(newChild: Expression): KisTransform =
     copy(child = newChild)
 }
@@ -442,13 +438,7 @@ case class BipTransform(child: Expression) extends DocKernelExpression {
     StructField("nodes", LongType, nullable = false),
     StructField("edges", LongType, nullable = false)))
   override def prettyName: String = "bip_transform"
-  protected override def nullSafeEval(input: Any): Any = {
-    val buf = docBytes(input)
-    try {
-      val b = Transforms.cnf2bip(buf)
-      InternalRow(UTF8String.fromString(b.text), b.nodes, b.edges)
-    } catch { case _: DocParseException => null }
-  }
+  override lazy val replacement: Expression = docCall(DocKernels, prettyName)
   override protected def withNewChildInternal(newChild: Expression): BipTransform =
     copy(child = newChild)
 }
@@ -468,9 +458,7 @@ case class Decompress(child: Expression, codec: String = Compression.Auto,
   require(Compression.codecs.contains(codec), s"unknown codec $codec")
   override def dataType: DataType = BinaryType
   override def prettyName: String = s"decompress_$codec"
-  protected override def nullSafeEval(input: Any): Any =
-    try Compression.decompress(docBytes(input), codec, maxBytes)
-    catch { case _: DocParseException => null }
+  override lazy val replacement: Expression = docCall(DocKernels, prettyName, maxBytes)
   override protected def withNewChildInternal(newChild: Expression): Decompress =
     copy(child = newChild)
 }
@@ -479,22 +467,7 @@ case class Decompress(child: Expression, codec: String = Compression.Auto,
 case class SaniCheckExpr(child: Expression) extends DocKernelExpression {
   override def dataType: StructType = FeatureSchemas.sani
   override def prettyName: String = "cnf_sanicheck"
-
-  protected override def nullSafeEval(input: Any): Any = {
-    val buf = docBytes(input)
-    try {
-      val r = Dimacs.saniCheck(buf, sanitize = true)
-      @inline def b(x: Boolean): Double = if (x) 1.0 else 0.0
-      InternalRow.fromSeq(Seq[Double](
-        r.headVars.toDouble, r.headClauses.toDouble, r.normVars.toDouble, r.normClauses.toDouble,
-        b(r.whitespaceNormalised), b(r.hasComment),
-        r.saniVars.toDouble, r.saniClauses.toDouble,
-        b(r.hasTautologicalClause), b(r.hasDuplicateLiterals), b(r.hasEmptyClause)))
-    } catch {
-      case _: DocParseException => null
-    }
-  }
-
+  override lazy val replacement: Expression = docCall(DocKernels, prettyName)
   override protected def withNewChildInternal(newChild: Expression): SaniCheckExpr =
     copy(child = newChild)
 }
@@ -505,25 +478,7 @@ case class SaniCheckExpr(child: Expression) extends DocKernelExpression {
 case class ParseClauses(child: Expression) extends DocKernelExpression {
   override def dataType: DataType = ArrayType(ArrayType(IntegerType, containsNull = false), containsNull = false)
   override def prettyName: String = "cnf_clauses"
-
-  protected override def nullSafeEval(input: Any): Any = {
-    val buf = docBytes(input)
-    try {
-      val doc = ClauseDoc.parse(buf)
-      val clauses = new Array[AnyRef](doc.nClauses)
-      var c = 0
-      while (c < doc.nClauses) {
-        val s = doc.clauseStart(c)
-        val e = doc.clauseEnd(c)
-        clauses(c) = new GenericArrayData(java.util.Arrays.copyOfRange(doc.lits, s, e))
-        c += 1
-      }
-      new GenericArrayData(clauses)
-    } catch {
-      case _: DocParseException => null
-    }
-  }
-
+  override lazy val replacement: Expression = docCall(DocKernels, prettyName)
   override protected def withNewChildInternal(newChild: Expression): ParseClauses =
     copy(child = newChild)
 }

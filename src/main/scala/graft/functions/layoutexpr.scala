@@ -1,8 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Cast, Expression, Literal}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.trees.{BinaryLike, UnaryLike}
 import org.apache.spark.sql.types._
 
 /** Z-order (Morton) interleave — the multi-dimensional clustering key for
@@ -23,11 +24,11 @@ import org.apache.spark.sql.types._
   * < 2^62. Out-of-range input is an error, not a silent wrap: a wrapped
   * dimension would silently destroy the locality the layout exists for.
   *
-  * Unlike the kernel expressions (which are CodegenFallback with a
-  * reasoned note), this one implements doGenCode — it sits in the write
-  * path's hot projection, and the O(log w) mask-spread trick is exactly
-  * the kind of branch-free straight-line code whole-stage codegen fuses
-  * well.
+  * Unlike the kernel expressions (which generate a call of their entry
+  * method, see [[KernelExpression]]), this one implements doGenCode — it
+  * sits in the write path's hot projection, and the O(log w) mask-spread
+  * trick is exactly the kind of branch-free straight-line code whole-stage
+  * codegen fuses well.
   */
 object ZOrder {
   final val MaxDim: Long = (1L << 31) - 1
@@ -43,9 +44,12 @@ object ZOrder {
     v
   }
 
+  /** The out-of-range error of both evaluation paths. */
+  def dimensionError(a: Long, b: Long): IllegalArgumentException =
+    new IllegalArgumentException(s"zorder_key dimensions must be in [0, 2^31), got ($a, $b)")
+
   def interleave(a: Long, b: Long): Long = {
-    require(a >= 0L && a <= MaxDim && b >= 0L && b <= MaxDim,
-      s"zorder_key dimensions must be in [0, 2^31), got ($a, $b)")
+    if (a < 0L || a > MaxDim || b < 0L || b > MaxDim) throw dimensionError(a, b)
     spread(a) | (spread(b) << 1)
   }
 }
@@ -85,15 +89,13 @@ case class ZOrderKey(left: Expression, right: Expression)
            |$v = ($v | ($v << 4)) & 0x0f0f0f0f0f0f0f0fL;
            |$v = ($v | ($v << 2)) & 0x3333333333333333L;
            |$v = ($v | ($v << 1)) & 0x5555555555555555L;""".stripMargin
-      s"""long ${x}in = (long) $a;
-         |long ${y}in = (long) $b;
+      // an untyped NULL child never reaches this code, but it must compile
+      def asLong(e: Expression, v: String) = if (e.dataType == NullType) "0L" else s"(long) $v"
+      s"""long ${x}in = ${asLong(left, a)};
+         |long ${y}in = ${asLong(right, b)};
          |if (${x}in < 0L || ${x}in > ${ZOrder.MaxDim}L ||
          |    ${y}in < 0L || ${y}in > ${ZOrder.MaxDim}L) {
-         |  // message kept free of unbalanced brackets: Spark's codegen
-         |  // CodeFormatter tracks parens inside string literals too
-         |  throw new IllegalArgumentException(
-         |    "zorder_key dimensions must be in [0, 2^31 - 1]; got " +
-         |      ${x}in + " / " + ${y}in);
+         |  throw ${ZOrder.getClass.getName.stripSuffix("$")}.dimensionError(${x}in, ${y}in);
          |}
          |${spreadCode(x, s"${x}in")}
          |${spreadCode(y, s"${y}in")}
@@ -118,8 +120,8 @@ case class ZOrderKey(left: Expression, right: Expression)
   * silently destroy the locality the layout exists for.
   *
   * Per-row cost is `order` iterations of branch-light integer ops; the
-  * key rides [[KernelCallCodegen2]] so the write-path projection it sits
-  * in stays whole-stage-codegen'd.
+  * key is a [[KernelExpression]], so the write-path projection it sits in
+  * stays whole-stage-codegen'd.
   */
 object Hilbert {
   def xy2d(order: Int, x0: Long, y0: Long): Long = {
@@ -143,12 +145,16 @@ object Hilbert {
     }
     d
   }
+
+  /** Entry of [[HilbertKey]]. */
+  def hilbert_key(a: Long, b: Long, order: Int): Long = xy2d(order, a, b)
 }
 
 /** (a, b) -> Hilbert index long key at a fixed curve order; see [[Hilbert]]. */
 case class HilbertKey(left: Expression, right: Expression, order: Int)
-  extends BinaryExpression with KernelCallCodegen2 {
+  extends KernelExpression with BinaryLike[Expression] {
   require(order >= 1 && order <= 31, s"order must be in [1, 31], got $order")
+  override def nullable: Boolean = left.nullable || right.nullable
   override def dataType: DataType = LongType
   override def prettyName: String = "hilbert_key"
   override def checkInputDataTypes(): TypeCheckResult =
@@ -160,14 +166,8 @@ case class HilbertKey(left: Expression, right: Expression, order: Int)
           s"(${l.simpleString}, ${r.simpleString})")
     }
 
-  private def asLong(v: Any): Long = v match {
-    case l: Long => l
-    case i: Int => i.toLong
-    case other => other.asInstanceOf[Long]
-  }
-
-  protected override def nullSafeEval(a: Any, b: Any): Any =
-    Hilbert.xy2d(order, asLong(a), asLong(b))
+  override lazy val replacement: Expression = call(Hilbert, prettyName,
+    Seq(left, right).map(e => if (e.dataType == LongType) e else Cast(e, LongType)) :+ Literal(order))
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): HilbertKey =
@@ -187,7 +187,7 @@ case class HilbertKey(left: Expression, right: Expression, order: Int)
   * Positions must be sorted ascending and distinct (the builder enforces
   * distinctness at ring-construction time).
   */
-object RingLookup extends Serializable {
+object RingLookup {
   def successor(positions: Array[Long], shards: Array[Long], key: Long): Long = {
     var lo = 0
     var hi = positions.length // first index with positions(i) >= key
@@ -199,13 +199,18 @@ object RingLookup extends Serializable {
   }
 }
 
+/** The model literal of [[RingSuccessorShard]]: the sorted vnode ring. */
+final class VnodeRing(positions: Array[Long], shards: Array[Long]) extends KernelModel {
+  protected def state: Array[AnyRef] = Array(positions, shards)
+  def ring_successor_shard(key: Long): Long = RingLookup.successor(positions, shards, key)
+}
+
 /** key -> owning shard over a fixed sorted vnode ring; see [[RingLookup]]. */
 case class RingSuccessorShard(child: Expression, positions: Array[Long],
                               shards: Array[Long])
-    extends UnaryExpression {
+    extends KernelExpression with UnaryLike[Expression] {
   require(positions.nonEmpty && positions.length == shards.length,
     "ring positions and shards must be parallel and non-empty")
-  override def nullable: Boolean = true
   override def dataType: DataType = LongType
   override def prettyName: String = "ring_successor_shard"
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
@@ -213,15 +218,8 @@ case class RingSuccessorShard(child: Expression, positions: Array[Long],
     case t => TypeCheckResult.TypeCheckFailure(
       s"$prettyName expects bigint input, got ${t.simpleString}")
   }
-  protected override def nullSafeEval(input: Any): Any =
-    RingLookup.successor(positions, shards, input.asInstanceOf[Long])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val pos = ctx.addReferenceObj("ringPositions", positions, "long[]")
-    val sh = ctx.addReferenceObj("ringShards", shards, "long[]")
-    val ring = ctx.addReferenceObj("ringLookup", RingLookup)
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = $ring.successor($pos, $sh, $c);")
-  }
+  override lazy val replacement: Expression = invokeModel(new VnodeRing(positions, shards),
+    prettyName, Seq(KernelExpression.typed(child, LongType)))
   override protected def withNewChildInternal(newChild: Expression): RingSuccessorShard =
     copy(child = newChild)
 }

@@ -4,10 +4,9 @@ import java.security.MessageDigest
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.trees.UnaryLike
+import org.apache.spark.sql.catalyst.trees.{BinaryLike, UnaryLike}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -95,6 +94,15 @@ object HllSketch {
 
   def requireP(p: Int): Unit =
     require(p >= 4 && p <= 16, s"hll precision must be in [4,16], got $p")
+
+  /** Entry of [[HllEstimate]]; an empty sketch estimates 0. */
+  def hll_estimate(regs: Array[Byte]): Long =
+    if (regs.isEmpty) 0L
+    else {
+      require((regs.length & (regs.length - 1)) == 0,
+        s"hll sketch length must be a power of two, got ${regs.length}")
+      estimate(regs)
+    }
 }
 
 /** Aggregate: string column -> 2^p-byte HLL register array (binary). */
@@ -228,6 +236,19 @@ object CmsCodec {
     while (i < counters.length) { counters(i) = bb.getLong; i += 1 }
     (w, d, counters)
   }
+
+  /** Entry of [[CmsQuery]]: min over the depth rows. */
+  def cms_query(sketch: Array[Byte], v: UTF8String): Long = {
+    val (w, d, counters) = decode(sketch)
+    var est = Long.MaxValue
+    var i = 0
+    while (i < d) {
+      val c = counters(i * w + (SeededHash.hash32(i, v) % w).toInt)
+      if (c < est) est = c
+      i += 1
+    }
+    est
+  }
 }
 
 /** Mergeable count-min sketch — the frequency dual of the HLL sketch:
@@ -345,8 +366,7 @@ case class CmsMergeAgg(child: Expression,
   * Self-describing — width/depth come from the sketch header.
   */
 case class CmsQuery(left: Expression, right: Expression)
-  extends BinaryExpression with KernelCallCodegen2 {
-  override def nullable: Boolean = true
+  extends KernelExpression with BinaryLike[Expression] {
   override def dataType: DataType = LongType
   override def prettyName: String = "cms_query"
   override def checkInputDataTypes(): TypeCheckResult =
@@ -355,18 +375,8 @@ case class CmsQuery(left: Expression, right: Expression)
       case (l, r) => TypeCheckResult.TypeCheckFailure(
         s"cms_query expects (binary sketch, string value), got (${l.simpleString}, ${r.simpleString})")
     }
-  protected override def nullSafeEval(sk: Any, v: Any): Any = {
-    val (w, d, counters) = CmsCodec.decode(sk.asInstanceOf[Array[Byte]])
-    val s = v.asInstanceOf[UTF8String]
-    var est = Long.MaxValue
-    var i = 0
-    while (i < d) {
-      val c = counters(i * w + (SeededHash.hash32(i, s) % w).toInt)
-      if (c < est) est = c
-      i += 1
-    }
-    est
-  }
+  override lazy val replacement: Expression = call(CmsCodec, prettyName,
+    Seq(KernelExpression.typed(left, BinaryType), KernelExpression.typed(right, StringType)))
   override protected def withNewChildrenInternal(l: Expression, r: Expression): CmsQuery =
     copy(left = l, right = r)
 }
@@ -387,6 +397,18 @@ object BloomCodec {
     val bits = new Array[Byte](m / 8)
     bb.get(bits)
     (m, k, bits)
+  }
+
+  /** Entry of [[BloomContains]]. */
+  def bloom_contains(filter: Array[Byte], v: UTF8String): Boolean = {
+    val (m, k, bits) = decode(filter)
+    var i = 0
+    while (i < k) {
+      val pos = (SeededHash.hash32(i, v) % m).toInt
+      if ((bits(pos >> 3) & (1 << (pos & 7))) == 0) return false
+      i += 1
+    }
+    true
   }
 }
 
@@ -504,8 +526,7 @@ case class BloomMergeAgg(child: Expression,
 
 /** Scalar: (bloom bytes, value) -> membership (no false negatives). */
 case class BloomContains(left: Expression, right: Expression)
-  extends BinaryExpression with KernelCallCodegen2 {
-  override def nullable: Boolean = true
+  extends KernelExpression with BinaryLike[Expression] {
   override def dataType: DataType = BooleanType
   override def prettyName: String = "bloom_contains"
   override def checkInputDataTypes(): TypeCheckResult =
@@ -514,40 +535,23 @@ case class BloomContains(left: Expression, right: Expression)
       case (l, r) => TypeCheckResult.TypeCheckFailure(
         s"bloom_contains expects (binary filter, string value), got (${l.simpleString}, ${r.simpleString})")
     }
-  protected override def nullSafeEval(bl: Any, v: Any): Any = {
-    val (m, k, bits) = BloomCodec.decode(bl.asInstanceOf[Array[Byte]])
-    val s = v.asInstanceOf[UTF8String]
-    var i = 0
-    while (i < k) {
-      val pos = (SeededHash.hash32(i, s) % m).toInt
-      if ((bits(pos >> 3) & (1 << (pos & 7))) == 0) return false
-      i += 1
-    }
-    true
-  }
+  override lazy val replacement: Expression = call(BloomCodec, prettyName,
+    Seq(KernelExpression.typed(left, BinaryType), KernelExpression.typed(right, StringType)))
   override protected def withNewChildrenInternal(l: Expression, r: Expression): BloomContains =
     copy(left = l, right = r)
 }
 
 /** Scalar: sketch bytes -> exact-integer raw-HLL cardinality estimate. */
-case class HllEstimate(child: Expression) extends UnaryExpression with CodegenFallback {
+case class HllEstimate(child: Expression) extends KernelExpression with UnaryLike[Expression] {
   override def dataType: DataType = LongType
-  override def nullable: Boolean = true
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case BinaryType | NullType => TypeCheckResult.TypeCheckSuccess
     case t => TypeCheckResult.TypeCheckFailure(
       s"hll_estimate expects a binary sketch column, got ${t.simpleString}")
   }
   override def prettyName: String = "hll_estimate"
-  protected override def nullSafeEval(input: Any): Any = {
-    val regs = input.asInstanceOf[Array[Byte]]
-    if (regs.isEmpty) 0L
-    else {
-      require((regs.length & (regs.length - 1)) == 0,
-        s"hll sketch length must be a power of two, got ${regs.length}")
-      HllSketch.estimate(regs)
-    }
-  }
+  override lazy val replacement: Expression =
+    call(HllSketch, prettyName, Seq(KernelExpression.typed(child, BinaryType)))
   override protected def withNewChildInternal(newChild: Expression): HllEstimate =
     copy(child = newChild)
 }
@@ -642,6 +646,24 @@ object QSketch {
     while (i < counts.length) { counts(i) = bb.getLong; i += 1 }
     (s, counts)
   }
+
+  /** Entry of [[QSketchQuantile]]; null for an empty sketch. */
+  def qsketch_quantile(sketch: Array[Byte], qPermille: Int): java.lang.Long =
+    if (sketch.isEmpty) null
+    else {
+      val (s, counts) = decode(sketch)
+      quantile(counts, s, qPermille).map(Long.box).orNull
+    }
+
+  /** Entry of [[QSketchCount]]: a null sketch counts 0, like an empty one. */
+  def qsketch_count(sketch: Array[Byte]): Long =
+    if (sketch == null || sketch.isEmpty) 0L
+    else {
+      val (_, counts) = decode(sketch)
+      var n = 0L; var i = 0
+      while (i < counts.length) { n += counts(i); i += 1 }
+      n
+    }
 }
 
 /** Aggregate: long column -> log2-histogram quantile sketch (binary). */
@@ -746,8 +768,7 @@ case class QSketchMergeAgg(child: Expression,
 
 /** Scalar: (sketch, q permille) -> quantile value (bucket lower bound). */
 case class QSketchQuantile(left: Expression, right: Expression)
-  extends BinaryExpression with CodegenFallback {
-  override def nullable: Boolean = true
+  extends KernelExpression with BinaryLike[Expression] {
   override def dataType: DataType = LongType
   override def prettyName: String = "qsketch_quantile"
   override def checkInputDataTypes(): TypeCheckResult =
@@ -758,21 +779,17 @@ case class QSketchQuantile(left: Expression, right: Expression)
         s"qsketch_quantile expects (binary sketch, int permille), got " +
           s"(${l.simpleString}, ${r.simpleString})")
     }
-  protected override def nullSafeEval(sk: Any, q: Any): Any = {
-    val bytes = sk.asInstanceOf[Array[Byte]]
-    if (bytes.isEmpty) null
-    else {
-      val (s, counts) = QSketch.decode(bytes)
-      QSketch.quantile(counts, s, q.asInstanceOf[Int]).orNull
-    }
-  }
+  override lazy val replacement: Expression = call(QSketch, prettyName,
+    Seq(KernelExpression.typed(left, BinaryType), KernelExpression.typed(right, IntegerType)))
   override protected def withNewChildrenInternal(l: Expression, r: Expression): QSketchQuantile =
     copy(left = l, right = r)
 }
 
-/** Scalar: sketch -> total count (exact; counters are exact). */
+/** Scalar: sketch -> total count (exact; counters are exact); a null
+  * sketch counts 0, so the column stays non-nullable.
+  */
 case class QSketchCount(child: Expression)
-  extends UnaryExpression with CodegenFallback {
+  extends KernelExpression with UnaryLike[Expression] {
   override def dataType: DataType = LongType
   override def nullable: Boolean = false
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
@@ -781,16 +798,8 @@ case class QSketchCount(child: Expression)
       s"qsketch_count expects a binary sketch column, got ${t.simpleString}")
   }
   override def prettyName: String = "qsketch_count"
-  protected override def nullSafeEval(input: Any): Any = {
-    val bytes = input.asInstanceOf[Array[Byte]]
-    if (bytes.isEmpty) 0L
-    else {
-      val (_, counts) = QSketch.decode(bytes)
-      var n = 0L; var i = 0
-      while (i < counts.length) { n += counts(i); i += 1 }
-      n
-    }
-  }
+  override lazy val replacement: Expression = call(QSketch, prettyName,
+    Seq(KernelExpression.typed(child, BinaryType)), propagateNull = false)
   override protected def withNewChildInternal(newChild: Expression): QSketchCount =
     copy(child = newChild)
 }

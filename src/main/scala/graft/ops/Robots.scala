@@ -1,8 +1,8 @@
 package graft.ops
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.trees.BinaryLike
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
@@ -139,6 +139,22 @@ object Robots {
     StructField("pattern", StringType, nullable = false),
     StructField("allow", BooleanType, nullable = false)))
 
+  /** Entry of [[RobotsRulesExpr]]: the packed rule array. */
+  def robots_rules(text: Array[Byte], agent: UTF8String): ArrayData =
+    new GenericArrayData(parse(new String(text, "UTF-8"), agent.toString).map { r =>
+      InternalRow(UTF8String.fromString(r.pattern), r.allow)
+    }.toArray[Any])
+
+  /** Entry of [[RobotsDecisionExpr]]: struct(allowed, pattern). */
+  def robots_decision(path: UTF8String, rules: ArrayData): InternalRow = {
+    val packed = (0 until rules.numElements()).map { i =>
+      val row = rules.getStruct(i, 2)
+      Rule(row.getUTF8String(0).toString, row.getBoolean(1))
+    }
+    val (allowed, pattern) = decide(path.toString, packed)
+    InternalRow(allowed, if (pattern == null) null else UTF8String.fromString(pattern))
+  }
+
   /** Per-host robots tables → per-page crawl decision, composable with the
     * rest of the corpus pipeline. `robots` has one row per host:
     * (hostCol2, textCol) raw robots.txt. Emits every page column +
@@ -174,17 +190,7 @@ case class RobotsRulesExpr(child: Expression, agent: String)
     extends graft.functions.DocKernelExpression {
   override def dataType: DataType = ArrayType(Robots.ruleSchema, containsNull = false)
   override def prettyName: String = "robots_rules"
-
-  protected override def nullSafeEval(input: Any): Any = {
-    val text = input match {
-      case s: UTF8String => s.toString
-      case b: Array[Byte] => new String(b, "UTF-8")
-    }
-    new GenericArrayData(Robots.parse(text, agent).map { r =>
-      InternalRow(UTF8String.fromString(r.pattern), r.allow)
-    }.toArray[Any])
-  }
-
+  override lazy val replacement: Expression = docCall(Robots, prettyName, agent)
   override protected def withNewChildInternal(newChild: Expression): RobotsRulesExpr =
     copy(child = newChild)
 }
@@ -195,24 +201,14 @@ case class RobotsRulesExpr(child: Expression, agent: String)
   * an empty array = everything allowed).
   */
 case class RobotsDecisionExpr(left: Expression, right: Expression)
-    extends BinaryExpression with graft.functions.KernelCallCodegen2 {
-  override def nullable: Boolean = true
+    extends graft.functions.KernelExpression with BinaryLike[Expression] {
   override def prettyName: String = "robots_decision"
   override def dataType: DataType = StructType(Seq(
     StructField("allowed", BooleanType, nullable = false),
     StructField("pattern", StringType, nullable = true)))
-
-  protected override def nullSafeEval(pathAny: Any, rulesAny: Any): Any = {
-    val path = pathAny.asInstanceOf[UTF8String].toString
-    val arr = rulesAny.asInstanceOf[ArrayData]
-    val rules = (0 until arr.numElements()).map { i =>
-      val row = arr.getStruct(i, 2)
-      Robots.Rule(row.getUTF8String(0).toString, row.getBoolean(1))
-    }
-    val (allowed, pattern) = Robots.decide(path, rules)
-    InternalRow(allowed, if (pattern == null) null else UTF8String.fromString(pattern))
-  }
-
+  override lazy val replacement: Expression = call(Robots, prettyName, Seq(
+    graft.functions.KernelExpression.typed(left, StringType),
+    graft.functions.KernelExpression.typed(right, ArrayType(Robots.ruleSchema))))
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): RobotsDecisionExpr =
     copy(left = newLeft, right = newRight)

@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -135,6 +135,17 @@ object Warc {
     bos.toByteArray
   }
 
+  /** Entry of [[WarcRecordsExpr]]: null for a malformed container. */
+  def warc_records(bytes: Array[Byte], maxBytes: Int): ArrayData = {
+    val recs = try parse(bytes, maxBytes)
+    catch { case _: DocParseException => return null }
+    new GenericArrayData(recs.map { r =>
+      InternalRow(UTF8String.fromString(r.warcType),
+        UTF8String.fromString(r.recordId), UTF8String.fromString(r.date),
+        UTF8String.fromString(r.targetUri), r.contentLength, r.payload)
+    }.toArray[Any])
+  }
+
   val recordSchema: StructType = StructType(Seq(
     StructField("warc_type", StringType, nullable = false),
     StructField("record_id", StringType, nullable = false),
@@ -153,17 +164,7 @@ case class WarcRecordsExpr(child: Expression, maxBytes: Int = Warc.DefaultMaxByt
     extends DocKernelExpression {
   override def dataType: DataType = ArrayType(Warc.recordSchema, containsNull = false)
   override def prettyName: String = "warc_records"
-
-  protected override def nullSafeEval(input: Any): Any = {
-    val recs = try Warc.parse(docBytes(input), maxBytes)
-    catch { case _: DocParseException => return null }
-    new GenericArrayData(recs.map { r =>
-      InternalRow(UTF8String.fromString(r.warcType),
-        UTF8String.fromString(r.recordId), UTF8String.fromString(r.date),
-        UTF8String.fromString(r.targetUri), r.contentLength, r.payload)
-    }.toArray[Any])
-  }
-
+  override lazy val replacement: Expression = docCall(Warc, prettyName, maxBytes)
   override protected def withNewChildInternal(newChild: Expression): WarcRecordsExpr =
     copy(child = newChild)
 }
