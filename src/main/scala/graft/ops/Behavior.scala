@@ -437,12 +437,10 @@ object Behavior {
                              iters: Int = 8,
                              scale: Long = 1000000L): DataFrame = {
     require(iters >= 0 && scale >= 1, "need iters >= 0 and scale >= 1")
-    val m = transitionMatrix(df, userCol, tsCol, idCol, typeCol)
-      .select(col("from_type"), col("to_type"), col("n"))
-      .localCheckpoint()
+    val (m, _, local) = LocalDispatch.materialize(transitionMatrix(df, userCol, tsCol, idCol, typeCol)
+      .select(col("from_type"), col("to_type"), col("n")), LocalDispatch.GraphKey)
     val tots = m.groupBy(col("from_type")).agg(sum(col("n")).as("_tot"))
     // small matrix: the same integer power iteration on the driver ([[LocalDispatch]])
-    val local = LocalDispatch.rows(m, LocalDispatch.GraphKey)
     if (local.nonEmpty) {
       val spark = df.sparkSession
       import spark.implicits._

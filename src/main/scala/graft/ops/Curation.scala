@@ -283,34 +283,27 @@ object Curation {
   def resolveCanonicalChains(edges: DataFrame, fromCol: String,
                              toCol: String, maxIters: Int = 8): DataFrame = {
     require(maxIters >= 1 && maxIters <= 20, "need 1 <= maxIters <= 20")
-    val base = edges.select(col(fromCol).as("u"), col(toCol).as("v"))
+    val pointers = edges.select(col(fromCol).as("u"), col(toCol).as("v"))
       .groupBy(col("u")).agg(min(col("v")).as("v"))
-      .localCheckpoint()
     // small integral pointer table: the same rounds on the driver ([[LocalDispatch]])
-    val local = LocalDispatch.longRows(base, LocalDispatch.CcKey)
+    val (base, _, local) = LocalDispatch.materialize(pointers, LocalDispatch.CcKey,
+      eligible = pointers.schema.fields.forall(f => LocalDispatch.integral(f.dataType)))
     if (local.nonEmpty) {
-      val uType = base.schema("u").dataType
-      val vType = base.schema("v").dataType
       val spark = edges.sparkSession
       import spark.implicits._
-      val rows = local.get
-      val ptrM = new java.util.HashMap[java.lang.Long, java.lang.Long](rows.length * 2)
-      rows.foreach(r => ptrM.put(r.getLong(0), r.getLong(1)))
-      val keys = rows.map(_.getLong(0))
+      val g = LocalGraph(local.get)
+      // ptr(i): node i's pointer, itself when i has no outgoing edge
+      val hasPtr = new Array[Boolean](g.n)
+      var ptr = Array.tabulate(g.n)(identity)
+      g.src.indices.foreach { j => hasPtr(g.src(j)) = true; ptr(g.src(j)) = g.dst(j) }
       for (_ <- 0 until maxIters) {
-        val snap = new java.util.HashMap[java.lang.Long, java.lang.Long](ptrM)
-        keys.foreach { u =>
-          val w = snap.get(snap.get(u))
-          if (w ne null) ptrM.put(u, w)
-        }
+        val snap = ptr
+        ptr = Array.tabulate(g.n)(i => if (hasPtr(i) && hasPtr(snap(i))) snap(snap(i)) else snap(i))
       }
-      val outRows = keys.map { u =>
-        val v = ptrM.get(u).longValue()
-        (u, v, !ptrM.containsKey(v))
-      }
-      return outRows.toSeq.toDF("url", "canonical", "resolved")
-        .select(col("url").cast(uType).as("url"),
-          col("canonical").cast(vType).as("canonical"), col("resolved"))
+      return g.ids.indices.filter(hasPtr).map(i => (g.ids(i), g.ids(ptr(i)), !hasPtr(ptr(i))))
+        .toDF("url", "canonical", "resolved")
+        .select(col("url").cast(base.schema("u").dataType).as("url"),
+          col("canonical").cast(base.schema("v").dataType).as("canonical"), col("resolved"))
     }
     var ptr = base
     for (_ <- 0 until maxIters) {

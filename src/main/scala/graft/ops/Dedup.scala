@@ -544,13 +544,13 @@ object Dedup {
     * Both paths below stop after `maxIters` rounds, so a graph the cap
     * cannot close gets the same partial labels from either.
     *
-    * Shape: the pair list is materialized ONCE (eager, pair-sized) and one
-    * bounded collect ([[LocalDispatch]]) decides the path: the dup GRAPH is
-    * pair-sized, not corpus-sized. When it has at most
+    * Shape: the pair list is materialized ONCE (eager, pair-sized) and the
+    * size observed on that checkpoint decides the path ([[LocalDispatch]]):
+    * the dup GRAPH is pair-sized, not corpus-sized. When it has at most
     * [[LocalDispatch.CcKey]] directed edges (each pair row counts as two)
-    * and integral, non-null ids, the driver replays the same rounds on
-    * primitive arrays ([[localClusters]]); the collect stops at the bound,
-    * so no more than that reaches the driver. Otherwise the distributed rounds run over the distinct edge list,
+    * and integral, non-null ids, one collect brings it to the driver, which
+    * replays the same rounds on primitive arrays ([[localClusters]]).
+    * Otherwise the distributed rounds run over the distinct edge list,
     * materialized once: two label-sized joins + ONE Spark job per round (the
     * convergence flag rides the aggregate over the round's checkpoint).
     * OptR06Spec and DedupIdentitySpec pin local ≡ distributed, the latter
@@ -558,17 +558,18 @@ object Dedup {
     */
   def clusters(pairs: DataFrame, idA: String = "id_a", idB: String = "id_b",
                maxIters: Int = 10): DataFrame = {
-    val p = pairs.select(col(idA).as("a"), col(idB).as("b")).localCheckpoint()
+    val ids = pairs.select(col(idA).as("a"), col(idB).as("b"))
+    // small dup graph with integral ids: the same rounds on the driver ([[LocalDispatch]])
+    val (p, _, local) = LocalDispatch.materialize(ids, LocalDispatch.CcKey, edgesPerRow = 2,
+      eligible = ids.schema.fields.forall(f => LocalDispatch.integral(f.dataType)))
     val directed = p.unionByName(p.select(col("b").as("a"), col("a").as("b"))).distinct()
     val idType = directed.schema("a").dataType
-    // small dup graph: the same rounds on the driver ([[LocalDispatch]])
-    val local = LocalDispatch.longRows(p, LocalDispatch.CcKey, edgesPerRow = 2)
     if (local.nonEmpty) {
-      val rows = local.get
-      val (ids, labels) = localClusters(rows.map(_.getLong(0)), rows.map(_.getLong(1)), maxIters)
+      val g = LocalGraph(local.get)
+      val labels = localClusters(g, maxIters)
       val spark = pairs.sparkSession
       import spark.implicits._
-      return ids.indices.map(i => (ids(i), ids(labels(i)))).toDF("id", "cluster_id")
+      return g.ids.indices.map(i => (g.ids(i), g.ids(labels(i)))).toDF("id", "cluster_id")
         .select(col("id").cast(idType).as("id"),
           col("cluster_id").cast(idType).as("cluster_id"))
     }
@@ -611,28 +612,15 @@ object Dedup {
     labels
   }
 
-  /** The rounds of [[clusters]] on the driver: `a(i)`-`b(i)` are the
-    * undirected edges. Returns the sorted distinct node ids and, per node,
-    * the index of its label. Ids sort like the index, so min over labels is
-    * min over indexes, and each round is the distributed one: neighbour
-    * minimum, then one pointer-jumping hop through the previous round's
-    * labels; stop when no label changes or after `maxIters` rounds.
+  /** The rounds of [[clusters]] on the driver over the undirected edges of
+    * `g`: per node, the index of its label. Ids sort like the index, so min
+    * over labels is min over indexes, and each round is the distributed
+    * one: neighbour minimum, then one pointer-jumping hop through the
+    * previous round's labels; stop when no label changes or after
+    * `maxIters` rounds.
     */
-  private def localClusters(a: Array[Long], b: Array[Long],
-                            maxIters: Int): (Array[Long], Array[Int]) = {
-    val all = new Array[Long](a.length * 2)
-    System.arraycopy(a, 0, all, 0, a.length)
-    System.arraycopy(b, 0, all, a.length, b.length)
-    java.util.Arrays.sort(all)
-    var n = 0
-    var r = 0
-    while (r < all.length) {
-      if (n == 0 || all(r) != all(n - 1)) { all(n) = all(r); n += 1 }
-      r += 1
-    }
-    val ids = java.util.Arrays.copyOf(all, n)
-    val ia = a.map(java.util.Arrays.binarySearch(ids, _))
-    val ib = b.map(java.util.Arrays.binarySearch(ids, _))
+  private def localClusters(g: LocalGraph, maxIters: Int): Array[Int] = {
+    val (n, ia, ib) = (g.n, g.src, g.dst)
     var label = Array.tabulate(n)(identity)
     var next = new Array[Int](n)
     val nmin = new Array[Int](n)
@@ -657,7 +645,7 @@ object Dedup {
       val t = label; label = next; next = t
       iter += 1
     }
-    (ids, label)
+    label
   }
 
   /** The END-TO-END near-duplicate dedup pipeline — the flagship corpus op
@@ -671,7 +659,7 @@ object Dedup {
     *        probabilistic 1 at sane banding; the verify makes the pair set
     *        exactly {J >= jaccard}, so downstream is deterministic)
     *     -> connected components over the dup graph ([[clusters]]: the pair
-    *        list materialized once, one bounded collect picks the driver or
+    *        list materialized once, its observed size picks the driver or
     *        the distributed rounds)
     *     -> labels attached to the ids of the shingle projection, then
     *        canonical selection: min id per component, or — when

@@ -57,7 +57,8 @@ object Graph {
         sum(when(col("_src_host") =!= col("host"), 1L).otherwise(0L))
           .as("external_inlinks"))
 
-  /** Deterministic damped PageRank over `iters` synchronous iterations.
+  /** Deterministic damped PageRank over `iters` synchronous iterations:
+    * [[personalizedPageRankInt]] with every node a seed.
     *
     * Input: an edge list (srcCol, dstCol); duplicate edges are collapsed
     * (the graph is simple). Nodes = src ∪ dst. Every node starts at
@@ -79,70 +80,14 @@ object Graph {
     * each iteration is one join of edges->ranks on src (broadcastable if
     * ranks fit, else a hash join co-partitioned with the edge list) + one
     * shuffle aggregating contributions by dst. Lineage is truncated with
-    * localCheckpoint every 5 iterations (same discipline as
+    * a localCheckpoint every iteration (same discipline as
     * [[Dedup.clusters]]).
     *
     * Returns (node, rank_int).
     */
   def pageRankInt(edges: DataFrame, srcCol: String, dstCol: String,
-                  iters: Int = 4, dampNum: Long = 85, dampDen: Long = 100): DataFrame = {
-    require(iters >= 0 && dampNum >= 0 && dampNum <= dampDen && dampDen > 0)
-    val e = edges.select(col(srcCol).cast("long").as("src"),
-        col(dstCol).cast("long").as("dst"))
-      .distinct()
-      .localCheckpoint()
-    val baseTerm = Scale * (dampDen - dampNum) / dampDen // exact: driver-side longs
-    // small graph: the same integer schedule on the driver ([[LocalDispatch]])
-    val local = LocalDispatch.rows(e, LocalDispatch.GraphKey)
-    if (local.nonEmpty) {
-      val spark = edges.sparkSession
-      import spark.implicits._
-      val es = local.get.map(r => (r.getLong(0), r.getLong(1)))
-      val deg = new java.util.HashMap[java.lang.Long, java.lang.Long]()
-      val rank = new java.util.HashMap[java.lang.Long, java.lang.Long]()
-      es.foreach { case (s, d) =>
-        deg.merge(s, 1L, (a, b) => a + b)
-        rank.putIfAbsent(s, Scale); rank.putIfAbsent(d, Scale)
-      }
-      for (_ <- 0 until iters) {
-        val in = new java.util.HashMap[java.lang.Long, java.lang.Long]()
-        es.foreach { case (s, d) =>
-          in.merge(d, rank.get(s).longValue() / deg.get(s).longValue(),
-            (a, b) => a + b)
-        }
-        rank.replaceAll((n, _) => {
-          val c = in.get(n)
-          baseTerm + dampNum * (if (c eq null) 0L else c.longValue()) / dampDen
-        })
-      }
-      val out = new scala.collection.mutable.ArrayBuffer[(Long, Long)](rank.size)
-      rank.forEach((k, v) => out += ((k.longValue(), v.longValue())))
-      return out.toSeq.toDF("node", "rank_int")
-    }
-    val nodes = e.select(col("src").as("node"))
-      .unionByName(e.select(col("dst").as("node")))
-      .distinct()
-      .persist()
-    val outdeg = e.groupBy(col("src").as("node")).agg(count(lit(1)).as("outdeg"))
-    var ranks = nodes.withColumn("rank_int", lit(Scale))
-    // eager localCheckpoint per iteration: materializes AND cuts lineage
-    // to an RDD leaf in one job — without it AQE recompiles a plan that
-    // grows every iteration (the bfsDepth/hitsInt pathology)
-    for (_ <- 0 until iters) {
-      val contribs = e
-        .join(ranks.withColumnRenamed("node", "src"), Seq("src"))
-        .join(outdeg.withColumnRenamed("node", "src"), Seq("src"))
-        .groupBy(col("dst").as("node"))
-        .agg(sum(expr("rank_int div outdeg")).as("_in"))
-      ranks = nodes.join(contribs, Seq("node"), "left")
-        .select(col("node"),
-          (lit(baseTerm) +
-            expr(s"(${dampNum}L * coalesce(_in, 0L)) div ${dampDen}L")).as("rank_int"))
-        .localCheckpoint()
-    }
-    nodes.unpersist()
-    ranks
-  }
+                  iters: Int = 4, dampNum: Long = 85, dampDen: Long = 100): DataFrame =
+    pageRankSchedule(edges, srcCol, dstCol, None, iters, dampNum, dampDen)
 
   /** Personalized PageRank — [[pageRankInt]] with the teleport mass
     * restricted to a SEED set (topic-/site-conditioned authority: "which
@@ -163,50 +108,50 @@ object Graph {
                               iters: Int = 4, dampNum: Long = 85,
                               dampDen: Long = 100): DataFrame = {
     require(seeds.nonEmpty, "need at least one seed node")
+    pageRankSchedule(edges, srcCol, dstCol, Some(seeds), iters, dampNum, dampDen)
+  }
+
+  /** The schedule of both PageRanks; `seeds = None` makes every node a seed. */
+  private def pageRankSchedule(edges: DataFrame, srcCol: String, dstCol: String,
+                               seeds: Option[Seq[Long]], iters: Int, dampNum: Long,
+                               dampDen: Long): DataFrame = {
     require(iters >= 0 && dampNum >= 0 && dampNum <= dampDen && dampDen > 0)
-    val e = edges.select(col(srcCol).cast("long").as("src"),
-        col(dstCol).cast("long").as("dst"))
-      .distinct()
-      .localCheckpoint()
-    val baseTerm = Scale * (dampDen - dampNum) / dampDen
+    val (e, _, local) = LocalDispatch.materialize(
+      edges.select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
+        .distinct(), LocalDispatch.GraphKey)
+    val baseTerm = Scale * (dampDen - dampNum) / dampDen // exact: driver-side longs
     // small graph: the same integer schedule on the driver ([[LocalDispatch]])
-    val local = LocalDispatch.rows(e, LocalDispatch.GraphKey)
     if (local.nonEmpty) {
       val spark = edges.sparkSession
       import spark.implicits._
-      val es = local.get.map(r => (r.getLong(0), r.getLong(1)))
-      val seedSet = seeds.toSet
-      val deg = new java.util.HashMap[java.lang.Long, java.lang.Long]()
-      val rank = new java.util.HashMap[java.lang.Long, java.lang.Long]()
-      es.foreach { case (s, d) =>
-        deg.merge(s, 1L, (a, b) => a + b)
-        rank.putIfAbsent(s, if (seedSet(s)) Scale else 0L)
-        rank.putIfAbsent(d, if (seedSet(d)) Scale else 0L)
+      val g = LocalGraph(local.get)
+      val isSeed = seeds.fold(Array.fill(g.n)(true)) { s =>
+        val a = new Array[Boolean](g.n)
+        s.foreach { id => val i = g.indexOf(id); if (i >= 0) a(i) = true }
+        a
       }
+      val deg = new Array[Long](g.n)
+      g.src.foreach(s => deg(s) += 1)
+      var rank = Array.tabulate(g.n)(i => if (isSeed(i)) Scale else 0L)
       for (_ <- 0 until iters) {
-        val in = new java.util.HashMap[java.lang.Long, java.lang.Long]()
-        es.foreach { case (s, d) =>
-          in.merge(d, rank.get(s).longValue() / deg.get(s).longValue(),
-            (a, b) => a + b)
-        }
-        rank.replaceAll((n, _) => {
-          val c = in.get(n)
-          (if (seedSet(n.longValue())) baseTerm else 0L) +
-            dampNum * (if (c eq null) 0L else c.longValue()) / dampDen
-        })
+        val in = new Array[Long](g.n)
+        var j = 0
+        while (j < g.src.length) { in(g.dst(j)) += rank(g.src(j)) / deg(g.src(j)); j += 1 }
+        rank = Array.tabulate(g.n)(i => (if (isSeed(i)) baseTerm else 0L) + dampNum * in(i) / dampDen)
       }
-      val out = new scala.collection.mutable.ArrayBuffer[(Long, Long)](rank.size)
-      rank.forEach((k, v) => out += ((k.longValue(), v.longValue())))
-      return out.toSeq.toDF("node", "rank_int")
+      return g.ids.indices.map(i => (g.ids(i), rank(i))).toDF("node", "rank_int")
     }
     val nodes = e.select(col("src").as("node"))
       .unionByName(e.select(col("dst").as("node")))
       .distinct()
-      .withColumn("_seed", col("node").isin(seeds.map(Long.box): _*))
+      .withColumn("_seed", seeds.fold(lit(true))(s => col("node").isin(s.map(Long.box): _*)))
       .persist()
     val outdeg = e.groupBy(col("src").as("node")).agg(count(lit(1)).as("outdeg"))
     var ranks = nodes.withColumn("rank_int",
       when(col("_seed"), lit(Scale)).otherwise(lit(0L)))
+    // eager localCheckpoint per iteration: materializes AND cuts lineage
+    // to an RDD leaf in one job — without it AQE recompiles a plan that
+    // grows every iteration (the bfsDepth/hitsInt pathology)
     for (_ <- 0 until iters) {
       val contribs = e
         .join(ranks.select(col("node").as("src"), col("rank_int")), Seq("src"))
@@ -252,53 +197,40 @@ object Graph {
     * Scale shape: per iteration, one edges->scores join + one slim
     * aggregate per side, plus a single-scalar max computed by a tiny agg
     * and attached via broadcast crossJoin (node-table-sized work; the
-    * corpus never shuffles). Lineage is truncated via localCheckpoint
-    * every 5 iterations, same discipline as [[pageRankInt]].
+    * corpus never shuffles). Lineage is truncated via a localCheckpoint
+    * of each side every iteration, same discipline as [[pageRankInt]].
     *
     * Returns (node, hub_int, auth_int).
     */
   def hitsInt(edges: DataFrame, srcCol: String, dstCol: String,
               iters: Int = 3, scale: Long = 1000000L): DataFrame = {
     require(iters >= 1 && scale >= 1, "need iters >= 1, scale >= 1")
-    val e = edges.select(col(srcCol).cast("long").as("src"),
-        col(dstCol).cast("long").as("dst"))
-      .distinct()
-      .localCheckpoint()
+    val (e, _, local) = LocalDispatch.materialize(
+      edges.select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
+        .distinct(), LocalDispatch.GraphKey)
     // small graph: the same int64 rescale schedule on the driver ([[LocalDispatch]])
-    val local = LocalDispatch.rows(e, LocalDispatch.GraphKey)
     if (local.nonEmpty) {
       val spark = edges.sparkSession
       import spark.implicits._
-      val es = local.get.map(r => (r.getLong(0), r.getLong(1)))
-      val ns = (es.map(_._1) ++ es.map(_._2)).distinct
-      val hub = new java.util.HashMap[java.lang.Long, java.lang.Long]()
-      val auth = new java.util.HashMap[java.lang.Long, java.lang.Long]()
-      ns.foreach(n => hub.put(n, scale))
-      def rescaleLocal(raw: java.util.HashMap[java.lang.Long, java.lang.Long],
-                       into: java.util.HashMap[java.lang.Long, java.lang.Long]): Unit = {
-        var m = 1L
-        raw.forEach((_, v) => if (v.longValue() > m) m = v.longValue())
-        into.clear()
-        ns.foreach { n =>
-          val r = raw.get(n)
-          into.put(n, scale * (if (r eq null) 0L else r.longValue()) / m)
-        }
+      val g = LocalGraph(local.get)
+      // the max becomes `scale` (empty graph guard: 1)
+      def rescaled(raw: Array[Long]): Array[Long] = {
+        val m = raw.foldLeft(1L)(math.max)
+        raw.map(r => scale * r / m)
       }
+      var hub = Array.fill(g.n)(scale)
+      var auth = new Array[Long](g.n)
       for (_ <- 0 until iters) {
-        val rawAuth = new java.util.HashMap[java.lang.Long, java.lang.Long]()
-        es.foreach { case (s, d) =>
-          rawAuth.merge(d, hub.get(s).longValue(), (a, b) => a + b)
-        }
-        rescaleLocal(rawAuth, auth)
-        val rawHub = new java.util.HashMap[java.lang.Long, java.lang.Long]()
-        es.foreach { case (s, d) =>
-          rawHub.merge(s, auth.get(d).longValue(), (a, b) => a + b)
-        }
-        rescaleLocal(rawHub, hub)
+        val rawAuth = new Array[Long](g.n)
+        var j = 0
+        while (j < g.src.length) { rawAuth(g.dst(j)) += hub(g.src(j)); j += 1 }
+        auth = rescaled(rawAuth)
+        val rawHub = new Array[Long](g.n)
+        j = 0
+        while (j < g.src.length) { rawHub(g.src(j)) += auth(g.dst(j)); j += 1 }
+        hub = rescaled(rawHub)
       }
-      val out = new scala.collection.mutable.ArrayBuffer[(Long, Long, Long)](ns.length)
-      ns.foreach(n => out += ((n, hub.get(n).longValue(), auth.get(n).longValue())))
-      return out.toSeq.toDF("node", "hub_int", "auth_int")
+      return g.ids.indices.map(i => (g.ids(i), hub(i), auth(i))).toDF("node", "hub_int", "auth_int")
     }
     val nodes = e.select(col("src").as("node"))
       .unionByName(e.select(col("dst").as("node")))
@@ -428,41 +360,36 @@ object Graph {
   def bfsDepth(edges: DataFrame, srcCol: String, dstCol: String,
                seeds: DataFrame, seedCol: String, maxDepth: Int): DataFrame = {
     require(maxDepth >= 0, "maxDepth must be >= 0")
-    // eager localCheckpoint: materializes AND cuts lineage to an RDD leaf
-    val e = edges.select(col(srcCol).cast("long").as("src"),
-      col(dstCol).cast("long").as("dst")).distinct().localCheckpoint()
-    val seed = seeds.select(col(seedCol).cast("long").as("node"))
-      .distinct().localCheckpoint()
+    val (e, _, local) = LocalDispatch.materialize(
+      edges.select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
+        .distinct(), LocalDispatch.GraphKey)
+    // the seed set is collected only when the graph is local
+    val (seed, _, localSeeds) = LocalDispatch.materialize(
+      seeds.select(col(seedCol).cast("long").as("node")).distinct(), LocalDispatch.GraphKey,
+      eligible = local.nonEmpty)
     // small graph and seed set: the same layered BFS on the driver ([[LocalDispatch]])
-    val local = LocalDispatch.rows(e, LocalDispatch.GraphKey)
-    val localSeeds = if (local.isEmpty) None else LocalDispatch.rows(seed, LocalDispatch.GraphKey)
     if (localSeeds.nonEmpty) {
       val spark = edges.sparkSession
       import spark.implicits._
-      val adj = new java.util.HashMap[java.lang.Long, scala.collection.mutable.ArrayBuffer[Long]]()
-      local.get.foreach { r =>
-        adj.computeIfAbsent(r.getLong(0),
-          _ => new scala.collection.mutable.ArrayBuffer[Long]()) += r.getLong(1)
-      }
-      val depthOf = new java.util.HashMap[java.lang.Long, java.lang.Long]()
-      var front = localSeeds.get.map(_.getLong(0)).toSeq.distinct
-      front.foreach(n => depthOf.put(n, 0L))
+      val g = LocalGraph(local.get, localSeeds.get.map(_.getLong(0)))
+      val (start, adj) = g.outCsr
+      val depth = Array.fill(g.n)(-1L)
+      var front = localSeeds.get.map(r => g.indexOf(r.getLong(0)))
+      front.foreach(i => depth(i) = 0L)
       var d = 0L
       while (d < maxDepth && front.nonEmpty) {
         d += 1
-        val next = scala.collection.mutable.LinkedHashSet[Long]()
-        front.foreach { n =>
-          val out = adj.get(n)
-          if (out ne null) out.foreach { m =>
-            if (!depthOf.containsKey(m)) next += m
+        val next = Array.newBuilder[Int]
+        front.foreach { u =>
+          var j = start(u)
+          while (j < start(u + 1)) {
+            if (depth(adj(j)) < 0) { depth(adj(j)) = d; next += adj(j) }
+            j += 1
           }
         }
-        next.foreach(m => depthOf.put(m, d))
-        front = next.toSeq
+        front = next.result()
       }
-      val outRows = new scala.collection.mutable.ArrayBuffer[(Long, Long)](depthOf.size)
-      depthOf.forEach((k, v) => outRows += ((k.longValue(), v.longValue())))
-      return outRows.toSeq.toDF("node", "depth")
+      return g.ids.indices.filter(depth(_) >= 0).map(i => (g.ids(i), depth(i))).toDF("node", "depth")
     }
     var frontier = seed
     var visited = seed.withColumn("depth", lit(0L))
@@ -630,33 +557,32 @@ object Graph {
     val simple = und
       .select(least(col("a"), col("b")).as("a"),
         greatest(col("a"), col("b")).as("b")).distinct()
-    var cur = simple
-      .unionByName(simple.select(col("b").as("a"), col("a").as("b")))
-      .localCheckpoint()
+    var (cur, prevEdges, local) = LocalDispatch.materialize(
+      simple.unionByName(simple.select(col("b").as("a"), col("a").as("b"))), LocalDispatch.GraphKey)
     // small graph: the same simultaneous peel on the driver ([[LocalDispatch]])
-    val local = LocalDispatch.rows(cur, LocalDispatch.GraphKey)
     if (local.nonEmpty) {
       val spark = edges.sparkSession
       import spark.implicits._
-      var es = local.get.map(r => (r.getLong(0), r.getLong(1)))
-      var prev = es.length.toLong
+      val g = LocalGraph(local.get)
+      def degrees(alive: Array[Int]): Array[Int] = {
+        val deg = new Array[Int](g.n)
+        alive.foreach(j => deg(g.src(j)) += 1)
+        deg
+      }
+      var alive = g.src.indices.toArray
       var rd = 0
-      var dn = prev == 0L
+      var dn = alive.isEmpty
       while (!dn && rd < maxRounds) {
         rd += 1
-        val deg = es.groupBy(_._1).map { case (n, o) => n -> o.length }
-        val keep = deg.filter(_._2 >= k).keySet
-        val next = es.filter { case (a, b) => keep(a) && keep(b) }
-        val n = next.length.toLong
-        dn = n == prev || n == 0L
-        prev = n
-        es = next
+        val deg = degrees(alive)
+        val next = alive.filter(j => deg(g.src(j)) >= k && deg(g.dst(j)) >= k)
+        dn = next.length == alive.length || next.isEmpty
+        alive = next
       }
-      return es.groupBy(_._1).toSeq
-        .map { case (n, o) => (n, o.length.toLong) }
+      val deg = degrees(alive)
+      return g.ids.indices.filter(deg(_) > 0).map(i => (g.ids(i), deg(i).toLong))
         .toDF("node", "core_degree")
     }
-    var prevEdges = cur.count()
     var round = 0
     var done = prevEdges == 0L
     while (!done && round < maxRounds) {
@@ -697,36 +623,38 @@ object Graph {
     require(maxRounds >= 1 && maxRounds <= 64, "need 1 <= maxRounds <= 64")
     val spark = edges.sparkSession
     import spark.implicits._
-    val e = edges.select(col(srcCol).cast("long").as("src"),
-        col(dstCol).cast("long").as("dst"), col(wCol).cast("long").as("w"))
-      .groupBy(col("src"), col("dst")).agg(min(col("w")).as("w"))
-      .localCheckpoint()
+    val (e, _, local) = LocalDispatch.materialize(
+      edges.select(col(srcCol).cast("long").as("src"),
+          col(dstCol).cast("long").as("dst"), col(wCol).cast("long").as("w"))
+        .groupBy(col("src"), col("dst")).agg(min(col("w")).as("w")), LocalDispatch.GraphKey)
     // small graph: the same capped-round relaxation on the driver ([[LocalDispatch]])
-    val local = LocalDispatch.rows(e, LocalDispatch.GraphKey)
     if (local.nonEmpty) {
-      val es = local.get.map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-      // boxed maps on purpose: absence must read as null, never unbox to 0
-      val d = new java.util.HashMap[java.lang.Long, java.lang.Long]()
-      sources.distinct.foreach(s => d.put(s, 0L))
+      val g = LocalGraph(local.get, sources.toArray)
+      val w = local.get.map(_.getLong(2))
+      var dist = new Array[Long](g.n)
+      var reached = new Array[Boolean](g.n)
+      sources.foreach(s => reached(g.indexOf(s)) = true)
       var r = 0
       var stable = false
       while (r < maxRounds && !stable) {
-        val nd = new java.util.HashMap[java.lang.Long, java.lang.Long](d)
-        es.foreach { case (s2, d2, w2) =>
-          val ds = d.get(s2)
-          if (ds ne null) {
-            val cand = ds.longValue() + w2
-            val cur = nd.get(d2)
-            if ((cur eq null) || cand < cur.longValue()) nd.put(d2, cand)
+        val nd = dist.clone()
+        val nr = reached.clone()
+        var j = 0
+        while (j < g.src.length) {
+          val s2 = g.src(j)
+          val d2 = g.dst(j)
+          if (reached(s2) && (!nr(d2) || dist(s2) + w(j) < nd(d2))) {
+            nd(d2) = dist(s2) + w(j)
+            nr(d2) = true
           }
+          j += 1
         }
-        stable = nd == d
-        d.clear(); d.putAll(nd)
+        stable = java.util.Arrays.equals(nd, dist) && java.util.Arrays.equals(nr, reached)
+        dist = nd
+        reached = nr
         r += 1
       }
-      val out = new scala.collection.mutable.ArrayBuffer[(Long, Long)](d.size)
-      d.forEach((k, v) => out += ((k.longValue(), v.longValue())))
-      return out.toSeq.toDF("node", "dist")
+      return g.ids.indices.filter(reached).map(i => (g.ids(i), dist(i))).toDF("node", "dist")
     }
     var dist = sources.distinct.toDF("node")
       .withColumn("dist", lit(0L)).localCheckpoint()
@@ -773,74 +701,66 @@ object Graph {
   def boruvkaMst(edges: DataFrame, srcCol: String, dstCol: String,
                  wCol: String, maxRounds: Int = 16): DataFrame = {
     require(maxRounds >= 1 && maxRounds <= 32, "need 1 <= maxRounds <= 32")
-    val e0 = edges.select(
+    val (e0, _, local) = LocalDispatch.materialize(edges.select(
         least(col(srcCol), col(dstCol)).cast("long").as("u"),
         greatest(col(srcCol), col(dstCol)).cast("long").as("v"),
         col(wCol).cast("long").as("w"))
       .where(col("u") =!= col("v"))
-      .groupBy(col("u"), col("v")).agg(min(col("w")).as("w"))
-      .localCheckpoint()
+      .groupBy(col("u"), col("v")).agg(min(col("w")).as("w")), LocalDispatch.GraphKey)
     // small graph: the same (w, u, v)-ordered rounds on the driver ([[LocalDispatch]])
-    val local = LocalDispatch.rows(e0, LocalDispatch.GraphKey)
     if (local.nonEmpty) {
-      val spark2 = edges.sparkSession
-      import spark2.implicits._
-      val es = local.get.map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-      val compM = new java.util.HashMap[Long, Long]()
-      es.foreach { case (u, v, _) =>
-        compM.putIfAbsent(u, u); compM.putIfAbsent(v, v)
+      val spark = edges.sparkSession
+      import spark.implicits._
+      val g = LocalGraph(local.get)
+      val w = local.get.map(_.getLong(2))
+      // (w, u, v) order; node indexes sort like the ids
+      def lighter(x: Int, y: Int): Boolean =
+        if (w(x) != w(y)) w(x) < w(y)
+        else if (g.src(x) != g.src(y)) g.src(x) < g.src(y)
+        else g.dst(x) < g.dst(y)
+      // component labels are node indexes; a union hangs the larger root
+      // under the smaller, so a root is the minimum label of its tree
+      val comp = Array.tabulate(g.n)(identity)
+      val parent = Array.tabulate(g.n)(identity)
+      def find(x: Int): Int = {
+        var r = x
+        while (parent(r) != r) r = parent(r)
+        var y = x
+        while (parent(y) != r) { val nx = parent(y); parent(y) = r; y = nx }
+        r
       }
-      val mstB = new scala.collection.mutable.ArrayBuffer[(Long, Long, Long)]()
+      val inMst = new Array[Boolean](g.src.length)
       var r = 0
       var stop = false
       while (r < maxRounds && !stop) {
-        // lightest outgoing edge per component under (w, u, v) ordering
-        val best = new java.util.HashMap[Long, (Long, Long, Long)]()
-        def offer(c: Long, e: (Long, Long, Long)): Unit = {
-          val cur = best.get(c)
-          if (cur == null || Ordering[(Long, Long, Long)].lt((e._3, e._1, e._2),
-            (cur._3, cur._1, cur._2))) best.put(c, e)
+        // lightest outgoing edge per component
+        val best = Array.fill(g.n)(-1)
+        var j = 0
+        while (j < g.src.length) {
+          val cu = comp(g.src(j))
+          val cv = comp(g.dst(j))
+          if (cu != cv) {
+            if (best(cu) < 0 || lighter(j, best(cu))) best(cu) = j
+            if (best(cv) < 0 || lighter(j, best(cv))) best(cv) = j
+          }
+          j += 1
         }
-        es.foreach { case (u, v, w) =>
-          val (cu, cv) = (compM.get(u), compM.get(v))
-          if (cu != cv) { offer(cu, (u, v, w)); offer(cv, (u, v, w)) }
-        }
-        if (best.isEmpty) stop = true
+        val chosen = best.filter(_ >= 0).distinct
+        if (chosen.isEmpty) stop = true
         else {
-          val chosen = new java.util.TreeSet[(Long, Long, Long)](
-            Ordering.Tuple3[Long, Long, Long])
-          best.values.forEach(e => chosen.add(e))
-          chosen.forEach(e => mstB += e)
-          // contract: min-label CC over the chosen component graph
-          val parent = new java.util.HashMap[Long, Long]()
-          def find(x0: Long): Long = {
-            var x = x0
-            var p = parent.getOrDefault(x, x)
-            while (p != x) { x = p; p = parent.getOrDefault(x, x) }
-            var y = x0
-            while (y != x) { val n = parent.get(y); parent.put(y, x); y = n }
-            x
+          // contract: each component of the chosen edges takes its minimum label
+          chosen.foreach { j =>
+            inMst(j) = true
+            val ra = find(comp(g.src(j)))
+            val rb = find(comp(g.dst(j)))
+            if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
           }
-          chosen.forEach { e =>
-            val (ra, rb) = (find(compM.get(e._1)), find(compM.get(e._2)))
-            if (ra != rb) parent.put(ra, rb)
-          }
-          val minOfRoot = new java.util.HashMap[Long, Long]()
-          chosen.forEach { e =>
-            Seq(compM.get(e._1), compM.get(e._2)).foreach { c =>
-              val root = find(c)
-              val m = minOfRoot.getOrDefault(root, Long.MaxValue)
-              if (c < m) minOfRoot.put(root, c)
-            }
-          }
-          compM.replaceAll((_, c) => {
-            val root = find(c)
-            if (minOfRoot.containsKey(root)) minOfRoot.get(root) else c
-          })
+          comp.indices.foreach(i => comp(i) = find(comp(i)))
           r += 1
         }
       }
-      return mstB.toSeq.toDF("u", "v", "w")
+      return inMst.indices.filter(inMst)
+        .map(j => (g.ids(g.src(j)), g.ids(g.dst(j)), w(j))).toDF("u", "v", "w")
     }
     val nodes = e0.select(col("u").as("node"))
       .unionByName(e0.select(col("v").as("node"))).distinct()

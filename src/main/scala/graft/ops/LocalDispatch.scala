@@ -1,17 +1,19 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Observation, Row}
 import org.apache.spark.sql.catalyst.expressions.UnsafeRow
-import org.apache.spark.sql.types.{IntegerType, LongType, ShortType, StructType}
+import org.apache.spark.sql.functions.{col, count, lit, when}
+import org.apache.spark.sql.types.{DataType, IntegerType, LongType, ShortType, StructType}
 
 /** Size-adaptive dispatch for the iterative graph operators: whether a
   * graph is small enough for the driver to replay the operator's rounds
   * locally instead of running them as distributed join rounds.
   *
-  * The decision is ONE bounded collect of the (already materialized) frame:
-  * one task reads its partitions in turn and stops one row past the bound,
-  * so a graph over it never reaches the driver whole and no count probe
-  * runs first. The bound is the key's threshold in directed edges, divided
+  * The decision rides the operator's own eager `localCheckpoint`: an
+  * `Observation` on it counts the rows and the rows with a null cell, so
+  * no probe job runs and nothing reaches the driver before the decision.
+  * Only a frame within the bound and without nulls is then collected, in
+  * one job. The bound is the key's threshold in directed edges, divided
   * by the edges each row stands for, and clamped so that the collected
   * rows fit `spark.driver.maxResultSize`: a raised threshold then falls
   * back to the distributed path instead of failing the collect.
@@ -31,28 +33,48 @@ object LocalDispatch {
   /** Default of both keys, in directed edges (64 MB as longs). */
   private val DefaultEdges: Long = 4L << 20
 
-  /** The rows of `df` when there are at most the bound of them and no cell
-    * is null; `None` otherwise, and the caller runs its distributed path.
-    * `df` should be materialized (a `localCheckpoint`): the collect then
-    * starts exactly one Spark job. A threshold of 0 starts none.
+  /** `df` materialized by an eager `localCheckpoint`, its row count, and
+    * its rows when `eligible`, there are at most the bound of them and no
+    * cell is null; otherwise `None`, and the caller runs its distributed
+    * path over the checkpoint. The checkpoint is one Spark job; the rows
+    * take one more, and only when they are returned. Integral columns come
+    * back as longs. `eligible = false` (a replay that cannot run on this
+    * frame) keeps the rows on the executors whatever the size.
     */
-  def rows(df: DataFrame, key: String, edgesPerRow: Int = 1): Option[Array[Row]] = {
+  def materialize(df: DataFrame, key: String, edgesPerRow: Int = 1,
+                  eligible: Boolean = true): (DataFrame, Long, Option[Array[Row]]) = {
     val spark = df.sparkSession
+    val observed = new Observation()
+    val anyNull = df.columns.map(c => col(c).isNull).reduceOption(_ || _).getOrElse(lit(false))
+    val frame = df.observe(observed, count(lit(1)).as("rows"), count(when(anyNull, 1)).as("nulls"))
+      .localCheckpoint()
+    val stats = observed.get
+    val (n, nulls) = (stats("rows").asInstanceOf[Long], stats("nulls").asInstanceOf[Long])
     val threshold = spark.conf.getOption(key).map(_.toLong).getOrElse(DefaultEdges)
     val maxResultSize = spark.sparkContext.getConf
       .getSizeAsBytes("spark.driver.maxResultSize", "1g")
     val bound = rowBound(threshold, edgesPerRow, maxResultSize, rowBytes(df.schema))
-    if (bound == 0) return None
-    val rows = df.coalesce(1).limit(bound + 1).collect()
-    if (rows.length <= bound && rows.forall(!_.anyNull)) Some(rows) else None
+    val rows =
+      if (!eligible || bound == 0 || n > bound || nulls > 0) None
+      else if (n == 0) Some(Array.empty[Row])
+      else Some(frame.select(frame.schema.fields.map(f =>
+        if (integral(f.dataType)) col(f.name).cast(LongType) else col(f.name)): _*)
+        .coalesce(1).collect())
+    (frame, n, rows)
+  }
+
+  /** Whether a column of type `t` round-trips exactly through a long. */
+  private[ops] def integral(t: DataType): Boolean = t match {
+    case LongType | IntegerType | ShortType => true
+    case _ => false
   }
 
   /** Rows the driver may collect: `threshold / edgesPerRow`, at most
     * `Int.MaxValue - 1` (a collect is one array), and, when
     * `maxResultSize` is not 0 (unlimited), few enough that the bound plus
-    * the one row past it fit in `maxResultSize` less 1/64 of it, which is
-    * left for the compression framing and the task's metric updates that
-    * travel with the rows.
+    * one row fit in `maxResultSize` less 1/64 of it, which is left for the
+    * compression framing and the task's metric updates that travel with
+    * the rows.
     */
   private[ops] def rowBound(threshold: Long, edgesPerRow: Int, maxResultSize: Long,
                             rowBytes: Long): Int = {
@@ -72,17 +94,4 @@ object LocalDispatch {
     12L + schema.fields.map { f =>
       8L + (if (UnsafeRow.isFixedLength(f.dataType)) 0L else f.dataType.defaultSize.toLong)
     }.sum
-
-  /** [[rows]] of `df` with every column cast to long, for replays that work
-    * on longs and cast their output back; `None` unless every column is a
-    * long, int or short, the types that make that round trip exactly.
-    */
-  def longRows(df: DataFrame, key: String, edgesPerRow: Int = 1): Option[Array[Row]] = {
-    val integral = df.schema.fields.forall(f => f.dataType match {
-      case LongType | IntegerType | ShortType => true
-      case _ => false
-    })
-    if (!integral) None
-    else rows(df.select(df.columns.map(c => df(c).cast(LongType)): _*), key, edgesPerRow)
-  }
 }

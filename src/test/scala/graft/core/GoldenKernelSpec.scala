@@ -140,6 +140,41 @@ class IdentityKernelSpec extends AnyFunSuite {
     // isohash has no such quirk: old and new format agree
     assert(Dimacs.isoHashWcnf(oldF) == Dimacs.isoHashWcnf(newF))
   }
+
+  /** `f(doc)` on a daemon thread, failing the test when it has not
+    * returned after `seconds`.
+    */
+  private def within[T](seconds: Int)(f: => T): T = {
+    val result = new java.util.concurrent.FutureTask[T](() => f)
+    val t = new Thread(result, "kernel-call")
+    t.setDaemon(true)
+    t.start()
+    try result.get(seconds.toLong, java.util.concurrent.TimeUnit.SECONDS)
+    catch {
+      case _: java.util.concurrent.TimeoutException =>
+        t.interrupt()
+        fail(s"kernel call still running after $seconds s")
+    }
+  }
+
+  test("OPB kernels: a truncated term list gives null") {
+    import graft.functions.DocKernels
+    for (doc <- Seq("1 -2 0", "min: +1 x1", "+1 x1 +2 x2", "min: +1 x1 ;\n+1 x1")) {
+      assert(within(10)(DocKernels.normalize_opb(b(doc))) == null, doc)
+      assert(within(10)(DocKernels.gbd_hash_opb(b(doc))) == null, doc)
+    }
+    assert(within(10)(DocKernels.normalize_opb(b("min: +1 x1 ;\n+1 x1 >= 1 ;\n"))).toString ==
+      "min: 1 x1;1 x1 >= 1;")
+  }
+
+  test("sanitize kernels: huge variable ids give null") {
+    import graft.functions.DocKernels
+    for (doc <- Seq("2147483647 0", "100000000 0")) {
+      assert(DocKernels.sanitize_cnf(b(doc)) == null, doc)
+      assert(DocKernels.cnf_sanicheck(b(doc)) == null, doc)
+    }
+    assert(DocKernels.sanitize_cnf(b("200000 0")).toString == "p cnf 200000 1\n200000 0\n")
+  }
 }
 
 /** DistStats exactness: hand-computed cases exercising the reference's fold

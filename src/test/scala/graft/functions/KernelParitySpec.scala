@@ -31,7 +31,8 @@ class KernelParitySpec extends SparkSpec {
     (0 until 3).map(u => PageGen.textOf(PageGen.Config(seed = scale.toLong, docScale = scale), u, u % 3))
   }
   /** HostileDocSpec's docs; most doc kernels other than the FeatureJob
-    * pair fail or never finish on them, so only that pair reads them.
+    * pair and the sanitize pair fail or never finish on them, so only
+    * those four read them.
     */
   private val hostile = Seq("2147483647 0", "100000000 0", "1 -2 0\n2 0\n",
     "p cnf 650 2\n2 -200 0\n640 -2 0\n", "200000 0")
@@ -115,7 +116,8 @@ class KernelParitySpec extends SparkSpec {
   private val cnfKinds = Seq("cnf", "empty", "null")
   private val anyText = Seq("cnf", "web", "empty", "null")
   private val docKinds: Map[String, Seq[String]] = Map(
-    "cnf_features" -> (cnfKinds :+ "hostile"),
+    "cnf_features" -> (cnfKinds :+ "hostile"), "sanitize_cnf" -> (cnfKinds :+ "hostile"),
+    "cnf_sanicheck" -> (cnfKinds :+ "hostile"),
     "wcnf_features" -> Seq("wcnf", "empty", "null"), "opb_features" -> Seq("opb", "null"),
     "normalize_wcnf" -> Seq("wcnf", "empty", "null"), "gbd_hash_wcnf" -> Seq("wcnf", "empty", "null"),
     "iso_hash_wcnf" -> Seq("wcnf", "empty", "null"),

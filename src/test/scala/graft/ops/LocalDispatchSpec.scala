@@ -1,15 +1,20 @@
 package graft.ops
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.DataFrame
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.SparkSpec
 
-/** The size-adaptive dispatch decision: one bounded collect, the bound in
-  * rows from the threshold, `edgesPerRow` and `spark.driver.maxResultSize`,
-  * and `None` for null cells, non-integral ids or a zero threshold.
+/** The size-adaptive dispatch decision: an eager checkpoint observed for
+  * its row and null counts, then one collect only when the rows go local;
+  * the bound in rows from the threshold, `edgesPerRow` and
+  * `spark.driver.maxResultSize`; `None` for null cells, over-bound frames,
+  * a zero threshold or an ineligible frame; and the dense index the local
+  * replays share.
   */
 class LocalDispatchSpec extends SparkSpec {
   import spark.implicits._
@@ -19,23 +24,34 @@ class LocalDispatchSpec extends SparkSpec {
     try body finally spark.conf.unset(key)
   }
 
-  /** `n` materialized rows of two longs, spread over four partitions. */
+  /** `n` rows of two longs, spread over four partitions. */
   private def edges(n: Int): DataFrame =
     spark.range(0, n, 1, 4).select(col("id").as("a"), (col("id") + 1).as("b"))
-      .localCheckpoint()
 
-  /** Spark jobs started while `body` runs: a marker job started after it
-    * is delivered after every job `body` started, so its arrival ends the
-    * count.
+  private def rows(df: DataFrame, key: String, edgesPerRow: Int = 1): Option[Array[Row]] =
+    LocalDispatch.materialize(df, key, edgesPerRow)._3
+
+  /** Per Spark job started while `body` runs, the bytes its tasks sent back
+    * as results, in job order: a marker job started after `body` is
+    * delivered after every event of the jobs `body` started, so its
+    * arrival ends the count.
     */
-  private def jobsStartedBy(body: => Unit): Int = {
+  private def resultBytesPerJob(body: => Unit): Seq[Long] = {
     val marker = "local-dispatch-jobs-marker"
-    val started = new java.util.concurrent.atomic.AtomicInteger
+    val jobOfStage = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
+    val bytes = new java.util.concurrent.ConcurrentSkipListMap[Int, java.lang.Long]()
     val done = new java.util.concurrent.CountDownLatch(1)
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         if (Option(e.properties).exists(_.getProperty("spark.job.description") == marker)) done.countDown()
-        else started.incrementAndGet()
+        else {
+          bytes.put(e.jobId, 0L)
+          e.stageIds.foreach(jobOfStage.put(_, e.jobId))
+        }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        Option(jobOfStage.get(e.stageId)).foreach { job =>
+          bytes.merge(job, Option(e.taskMetrics).fold(0L)(_.resultSize), (a, b) => a + b)
+        }
     }
     spark.sparkContext.addSparkListener(listener)
     try {
@@ -44,72 +60,111 @@ class LocalDispatchSpec extends SparkSpec {
       try spark.sparkContext.parallelize(Seq(1), 1).count()
       finally spark.sparkContext.setJobDescription(null)
       assert(done.await(60, java.util.concurrent.TimeUnit.SECONDS), "marker job never arrived")
-      started.get()
+      bytes.values().asScala.map(_.longValue()).toSeq
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
-  test("on a materialized frame the decision starts exactly one Spark job") {
-    val e = edges(200)
-    var got: Option[Array[org.apache.spark.sql.Row]] = None
-    assert(jobsStartedBy { got = LocalDispatch.rows(e, LocalDispatch.GraphKey) } == 1)
+  test("local path: the checkpoint job and one collect job") {
+    var got: Option[Array[Row]] = None
+    val jobs = resultBytesPerJob { got = rows(edges(200), LocalDispatch.GraphKey) }
+    assert(jobs.length == 2)
+    // the collect sends the 200 rows back
+    assert(jobs(1) > 200L * 8)
     assert(got.map(_.map(r => (r.getLong(0), r.getLong(1))).toSet)
       .contains((0L until 200L).map(i => (i, i + 1)).toSet))
-    withThreshold(LocalDispatch.GraphKey, 50) {
-      assert(jobsStartedBy { got = LocalDispatch.rows(e, LocalDispatch.GraphKey) } == 1)
-      assert(got.isEmpty)
+  }
+
+  test("over the bound: one job, none of its rows shipped") {
+    val n = 50000
+    withThreshold(LocalDispatch.GraphKey, 100) {
+      var got: (DataFrame, Long, Option[Array[Row]]) = null
+      val jobs = resultBytesPerJob { got = LocalDispatch.materialize(edges(n), LocalDispatch.GraphKey) }
+      assert(jobs.length == 1)
+      // the checkpoint's tasks return their status, not the 16 bytes a row holds
+      assert(jobs.head < n * 16L / 10, jobs)
+      assert(got._2 == n && got._3.isEmpty)
+      assert(got._1.count() == n)
     }
   }
 
   test("threshold n: n rows go local, n + 1 do not") {
     for (n <- Seq(1, 7, 64)) withThreshold(LocalDispatch.CcKey, n) {
-      assert(LocalDispatch.rows(edges(n), LocalDispatch.CcKey).map(_.length).contains(n), s"n=$n")
-      assert(LocalDispatch.rows(edges(n + 1), LocalDispatch.CcKey).isEmpty, s"n=$n")
+      assert(rows(edges(n), LocalDispatch.CcKey).map(_.length).contains(n), s"n=$n")
+      assert(rows(edges(n + 1), LocalDispatch.CcKey).isEmpty, s"n=$n")
     }
     // an empty frame under a positive threshold is local
-    assert(LocalDispatch.rows(edges(0), LocalDispatch.CcKey).map(_.length).contains(0))
+    assert(rows(edges(0), LocalDispatch.CcKey).map(_.length).contains(0))
+  }
+
+  test("a 0-partition frame goes local with 0 rows") {
+    val empty = spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+      StructType(Seq(StructField("a", LongType), StructField("b", LongType))))
+    assert(empty.rdd.getNumPartitions == 0)
+    val (frame, n, got) = LocalDispatch.materialize(empty, LocalDispatch.GraphKey)
+    assert(n == 0 && got.map(_.length).contains(0))
+    assert(frame.count() == 0)
   }
 
   test("edgesPerRow = 2 halves the bound") {
     withThreshold(LocalDispatch.CcKey, 20) {
-      assert(LocalDispatch.rows(edges(10), LocalDispatch.CcKey, edgesPerRow = 2).nonEmpty)
-      assert(LocalDispatch.rows(edges(11), LocalDispatch.CcKey, edgesPerRow = 2).isEmpty)
-      assert(LocalDispatch.rows(edges(11), LocalDispatch.CcKey).nonEmpty)
+      assert(rows(edges(10), LocalDispatch.CcKey, edgesPerRow = 2).nonEmpty)
+      assert(rows(edges(11), LocalDispatch.CcKey, edgesPerRow = 2).isEmpty)
+      assert(rows(edges(11), LocalDispatch.CcKey).nonEmpty)
     }
   }
 
   test("a null cell in any column returns None") {
-    val rows = Seq[(Option[Long], Option[Long], Option[String])](
+    val rs = Seq[(Option[Long], Option[Long], Option[String])](
       (Some(1L), Some(2L), Some("x")), (Some(3L), Some(4L), Some("y")),
       (Some(5L), Some(6L), Some("z")))
     for (c <- 0 until 3) {
-      val withNull = rows.zipWithIndex.map { case ((a, b, s), i) =>
+      val withNull = rs.zipWithIndex.map { case ((a, b, s), i) =>
         if (i != 1) (a, b, s)
         else (a.filter(_ => c != 0), b.filter(_ => c != 1), s.filter(_ => c != 2))
       }
-      val df = withNull.toDF("a", "b", "s").localCheckpoint()
-      assert(LocalDispatch.rows(df, LocalDispatch.GraphKey).isEmpty, s"null in column $c")
+      val (_, n, got) = LocalDispatch.materialize(withNull.toDF("a", "b", "s"), LocalDispatch.GraphKey)
+      assert(got.isEmpty && n == 3, s"null in column $c")
     }
-    assert(LocalDispatch.rows(rows.toDF("a", "b", "s").localCheckpoint(),
-      LocalDispatch.GraphKey).map(_.length).contains(3))
+    assert(rows(rs.toDF("a", "b", "s"), LocalDispatch.GraphKey).map(_.length).contains(3))
   }
 
-  test("threshold 0 returns None without starting a job, even on an empty frame") {
+  test("threshold 0: None and only the checkpoint job") {
     for (e <- Seq(edges(5), edges(0))) withThreshold(LocalDispatch.GraphKey, 0) {
-      var got: Option[Array[org.apache.spark.sql.Row]] = Some(Array.empty)
-      assert(jobsStartedBy { got = LocalDispatch.rows(e, LocalDispatch.GraphKey) } == 0)
+      var got: Option[Array[Row]] = Some(Array.empty)
+      // the empty range plans to an empty relation, whose checkpoint may start no job
+      assert(resultBytesPerJob { got = rows(e, LocalDispatch.GraphKey) }.length <= 1)
       assert(got.isEmpty)
     }
   }
 
-  test("longRows casts integral columns to long and refuses other types") {
-    val ints = Seq((1, 2.toShort), (3, 4.toShort)).toDF("a", "b").localCheckpoint()
-    val got = LocalDispatch.longRows(ints, LocalDispatch.CcKey)
+  test("integral cast; eligible = false never collects") {
+    val ints = Seq((1, 2.toShort), (3, 4.toShort)).toDF("a", "b")
+    val got = rows(ints, LocalDispatch.CcKey)
     assert(got.map(_.map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted)
       .contains(Seq((1L, 2L), (3L, 4L))))
-    val strs = Seq(("1", "2")).toDF("a", "b").localCheckpoint()
-    assert(LocalDispatch.longRows(strs, LocalDispatch.CcKey).isEmpty)
-    val dbls = Seq((1L, 2.0)).toDF("a", "b").localCheckpoint()
-    assert(LocalDispatch.longRows(dbls, LocalDispatch.CcKey).isEmpty)
+    // the checkpoint keeps the frame's own types
+    assert(LocalDispatch.materialize(ints, LocalDispatch.CcKey)._1.schema.map(_.dataType) ==
+      Seq(IntegerType, ShortType))
+    assert(Seq(StringType, DoubleType, LongType, IntegerType, ShortType).map(LocalDispatch.integral) ==
+      Seq(false, false, true, true, true))
+    var skipped: (DataFrame, Long, Option[Array[Row]]) = null
+    assert(resultBytesPerJob {
+      skipped = LocalDispatch.materialize(Seq(("1", "2")).toDF("a", "b"), LocalDispatch.CcKey,
+        eligible = false)
+    }.length == 1)
+    assert(skipped._2 == 1 && skipped._3.isEmpty)
+  }
+
+  test("LocalGraph: sorted distinct ids, extra ids, CSR") {
+    val g = LocalGraph(Array(30L, 10L, 30L, -5L), Array(10L, 30L, 10L, 30L), Array(7L, 10L, 99L))
+    assert(g.ids.toSeq == Seq(-5L, 7L, 10L, 30L, 99L))
+    assert(g.src.toSeq == Seq(3, 2, 3, 0) && g.dst.toSeq == Seq(2, 3, 2, 3))
+    assert(g.indexOf(99L) == 4 && g.indexOf(8L) < 0)
+    val (start, adj) = g.outCsr
+    assert(start.toSeq == Seq(0, 1, 1, 2, 4, 4))
+    assert(adj.toSeq == Seq(3, 3, 2, 2))
+    val empty = LocalGraph(Array.emptyLongArray, Array.emptyLongArray, Array.emptyLongArray)
+    assert(empty.n == 0 && empty.outCsr._1.toSeq == Seq(0))
   }
 
   test("row bytes: 12 + 8 per field, plus the default size of variable-width fields") {
