@@ -165,6 +165,8 @@ final class ByteScanner(val buf: Array[Byte]) {
     * (StreamBuffer.h:420-443): skip leading 'p'/'c' lines, then integers
     * until 0 or eof. Returns false when no clause remains. The raw scan —
     * no literal dedup, no tautology drop (contrast CNFFormula.h:126-151).
+    * The WCNF reader reads each clause body with it; CNF docs go through
+    * [[CnfScan]], which follows it token for token.
     */
   def readClause(out: IntArrayList): Boolean = {
     out.clear()

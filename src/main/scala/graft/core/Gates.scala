@@ -405,7 +405,8 @@ object Gates {
 
   /** Budgeted extraction; `maxOps` bounds the analysis work (clause-literal
     * visits). Raises [[KernelBudget.KernelTimeout]] deterministically on a
-    * document whose blocked-set structure would blow the budget.
+    * document whose blocked-set structure would blow the budget, and
+    * [[KernelBudget.KernelMemout]] on one past the variable budget.
     */
   def extract(buf: Array[Byte], maxOps: Long): Array[Double] =
     extract(buf, new KernelBudget(maxOps))

@@ -33,50 +33,53 @@ object IsoHash2 {
 
   private val GOLDEN = 0x9e3779b97f4a7c15L
 
-  /** Sanitized parse (CNFFormula loader semantics): per-clause sort by
-    * (var, sign), dedup, drop tautologies. Returns lits as Lit keys
-    * (2*var + sign) flattened with offsets, plus nVars.
+  /** Sanitized parse (CNFFormula loader semantics) of the raw [[CnfScan]]
+    * pool: per-clause sort by (var, sign), dedup, drop tautologies; empty
+    * clauses are kept. Returns lits as Lit keys (2*var + sign) flattened with
+    * offsets, plus the largest variable id left. Raises
+    * [[KernelBudget.KernelMemout]] for a doc past the variable budget, before
+    * any key is built: every consumer sizes arrays by variable id.
     */
   def sanitizedParse(buf: Array[Byte]): ClauseDoc = {
-    val in = new ByteScanner(buf)
-    val raw = new IntArrayList(32)
-    val lits = new IntArrayList(256)
-    val offsets = new IntArrayList(64)
-    offsets.add(0)
+    val scan = new CnfScan(buf, hash = false)
+    KernelBudget.checkVars(scan.nVars)
+    val lits = new Array[Int](scan.nLits)
+    val offsets = new Array[Int](scan.nClauses + 1)
+    var keys = new Array[Int](16)
+    var nLits = 0
+    var nClauses = 0
     var nVars = 0
-    while (in.readClause(raw)) {
-      val n = raw.size
-      if (n == 0) {
-        offsets.add(lits.size) // empty clause kept (no effect on colors)
-      } else {
-        val keys = new Array[Int](n)
-        var i = 0
-        while (i < n) {
-          val l = raw(i)
-          keys(i) = (math.abs(l) << 1) | (if (l < 0) 1 else 0)
-          i += 1
-        }
-        java.util.Arrays.sort(keys)
-        // dedup + tautology check on adjacent entries
-        var taut = false
-        var m = 0
-        i = 0
-        while (i < n && !taut) {
-          if (m > 0 && keys(i) == keys(m - 1)) () // duplicate
-          else if (m > 0 && (keys(i) >> 1) == (keys(m - 1) >> 1)) taut = true
-          else { keys(m) = keys(i); m += 1 }
-          i += 1
-        }
-        if (!taut) {
-          var j = 0
-          while (j < m) { lits.add(keys(j)); j += 1 }
-          val v = keys(m - 1) >> 1
-          if (v > nVars) nVars = v
-          offsets.add(lits.size)
-        }
+    var c = 0
+    while (c < scan.nClauses) {
+      val s = scan.offsets(c)
+      val n = scan.offsets(c + 1) - s
+      if (n > keys.length) keys = new Array[Int](2 * n)
+      var i = 0
+      while (i < n) {
+        val l = scan.lits(s + i)
+        keys(i) = (math.abs(l) << 1) | (l >>> 31)
+        i += 1
       }
+      java.util.Arrays.sort(keys, 0, n)
+      // dedup + tautology check on adjacent entries
+      var taut = false
+      var m = nLits
+      i = 0
+      while (i < n && !taut) {
+        if (m > nLits && keys(i) == lits(m - 1)) () // duplicate
+        else if (m > nLits && (keys(i) >> 1) == (lits(m - 1) >> 1)) taut = true
+        else { lits(m) = keys(i); m += 1 }
+        i += 1
+      }
+      if (!taut) {
+        if (m > nLits) nVars = math.max(lits(m - 1) >> 1, nVars)
+        nLits = m
+        nClauses += 1
+        offsets(nClauses) = nLits
+      }
+      c += 1
     }
-    new ClauseDoc(lits.toArray, offsets.toArray, nVars)
+    new ClauseDoc(java.util.Arrays.copyOf(lits, nLits), java.util.Arrays.copyOf(offsets, nClauses + 1), nVars)
   }
 
   final case class Stats(hash: Long, rounds: Int, stabilized: Boolean)

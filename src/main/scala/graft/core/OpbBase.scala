@@ -21,6 +21,16 @@ object OpbBase {
     "obj_terms", "obj_max_val", "obj_min_val",
     "obj_coeffs_mean", "obj_coeffs_variance", "obj_coeffs_min", "obj_coeffs_max", "obj_coeffs_entropy")
 
+  /** A coefficient or bound; a doc that ends where one is due, or holds a
+    * lone sign there, is malformed.
+    */
+  private def readNumber(in: ByteScanner): Double = {
+    val sb = new java.lang.StringBuilder(16)
+    in.readNumber(sb)
+    if (sb.length == 0 || sb.charAt(sb.length - 1) == '-') throw new DocParseException("missing number")
+    java.lang.Double.parseDouble(sb.toString)
+  }
+
   private final class TermSum(in: ByteScanner) {
     val coeffs = new ArrayBuffer[Double]
     var min = 0.0
@@ -31,9 +41,8 @@ object OpbBase {
     // /root/reference/src/extract/OPBBaseFeatures.cc:11-36
     in.skipWhitespace()
     while (in.ch != ';' && in.ch != '>' && in.ch != '=') {
-      val sb = new java.lang.StringBuilder(16)
-      in.readNumber(sb)
-      val coeff = java.lang.Double.parseDouble(sb.toString)
+      if (in.eof) throw new DocParseException("term list without ';' or a relational operator")
+      val coeff = readNumber(in)
       in.skipWhitespace()
       if (in.ch == 'x') {
         in.skip()
@@ -61,11 +70,7 @@ object OpbBase {
     val rel: Int =
       if (in.ch == '>') { in.skipString(">="); REL_GE }
       else { in.skip(); REL_EQ } // '='
-    val bound: Double = {
-      val sb = new java.lang.StringBuilder(16)
-      in.readNumber(sb)
-      java.lang.Double.parseDouble(sb.toString)
-    }
+    val bound: Double = readNumber(in)
     in.skipWhitespace()
     if (in.ch == ';') in.skip()
 

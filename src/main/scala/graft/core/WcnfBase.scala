@@ -8,7 +8,8 @@ import scala.collection.mutable.ArrayBuffer
   * weight >= top as hard. Quirks preserved:
   *  - variables are counted across hard AND soft clauses (resize loop before
   *    the weight check, WCNFBaseFeatures.cc:66-73)
-  *  - a weight of 0 in the new format is treated as hard (the `!weight` test)
+  *  - a weight of 0 in the new format is treated as hard (the `!weight` test,
+  *    [[WcnfDoc.featureHard]])
   *  - pass-2 vcg_cdegree includes SOFT clause sizes while vdegree/vg count
   *    hard occurrences only (WCNFBaseFeatures.cc:214-229)
   *  - clause-graph degrees are emitted for hard clauses only
@@ -33,20 +34,29 @@ object WcnfBase {
     "h_vg_degree_mean", "h_vg_degree_variance", "h_vg_degree_min", "h_vg_degree_max", "h_vg_degree_entropy",
     "h_cg_degree_mean", "h_cg_degree_variance", "h_cg_degree_min", "h_cg_degree_max", "h_cg_degree_entropy")
 
-  /** Parsed WCNF doc: per-clause weight (0 = hard after old-format top
-    * rewriting) + raw literal stream.
+  /** Parsed WCNF doc: per-clause weight (0 for an `h` clause), whether
+    * the clause is hard by syntax (an `h` prefix, or an old-format weight
+    * >= top), and the raw literal stream.
     */
   final class WcnfDoc(val lits: Array[Int], val offsets: Array[Int],
-                      val weights: Array[Long], val isHard: Array[Boolean], val nVars: Int) {
+                      val weights: Array[Long], val hard: Array[Boolean], val nVars: Int) {
     @inline def nClauses: Int = offsets.length - 1
+    /** The extractor's hard test: hard by syntax, or a weight of 0 (the
+      * reference's `!weight` test). The isohash keeps weight-0 clauses soft.
+      */
+    @inline def featureHard(c: Int): Boolean = hard(c) || weights(c) == 0L
   }
 
+  /** The one WCNF reader, shared by the features and the isohash. Raises
+    * [[KernelBudget.KernelMemout]] for a doc past the variable budget, since
+    * both size arrays by variable id.
+    */
   def parse(buf: Array[Byte]): WcnfDoc = {
     val in = new ByteScanner(buf)
     val lits = new IntArrayList(256)
     val offsets = new IntArrayList(64)
     val weights = new ArrayBuffer[Long](64)
-    val isHard = new ArrayBuffer[Boolean](64)
+    val hard = new ArrayBuffer[Boolean](64)
     val clause = new IntArrayList(32)
     offsets.add(0)
     var top = 0L
@@ -62,14 +72,14 @@ object WcnfBase {
         in.readUInt64(); top = in.lastLong
         in.skipLine()
       } else {
-        var weight = 0L
         if (in.ch == 'h') {
           in.skip()
-          weight = 0L
+          weights += 0L
+          hard += true
         } else {
           in.readUInt64()
-          weight = in.lastLong
-          if (top > 0 && weight >= top) weight = 0L // old-format hard clause
+          weights += in.lastLong
+          hard += top > 0 && in.lastLong >= top // old-format hard clause
         }
         in.readClause(clause)
         var i = 0
@@ -81,11 +91,10 @@ object WcnfBase {
           i += 1
         }
         offsets.add(lits.size)
-        weights += weight
-        isHard += (weight == 0L)
       }
     }
-    new WcnfDoc(lits.toArray, offsets.toArray, weights.toArray, isHard.toArray, nVars)
+    KernelBudget.checkVars(nVars)
+    new WcnfDoc(lits.toArray, offsets.toArray, weights.toArray, hard.toArray, nVars)
   }
 
   def extract(buf: Array[Byte]): Array[Double] = extract(parse(buf))
@@ -117,7 +126,7 @@ object WcnfBase {
       val s = doc.offsets(c)
       val e = doc.offsets(c + 1)
       val size = e - s
-      if (doc.isHard(c)) {
+      if (doc.featureHard(c)) {
         nHard += 1
         hardSizes(math.min(size, 10)) += 1
         var nNeg = 0
@@ -179,7 +188,7 @@ object WcnfBase {
       val e = doc.offsets(c + 1)
       val size = e - s
       vcgCdegree(c) = size.toLong
-      if (doc.isHard(c)) {
+      if (doc.featureHard(c)) {
         var i = s
         while (i < e) {
           val vv = math.abs(lits(i))
@@ -194,7 +203,7 @@ object WcnfBase {
     val clauseDegree = new ArrayBuffer[Long]
     c = 0
     while (c < n) {
-      if (doc.isHard(c)) {
+      if (doc.featureHard(c)) {
         val s = doc.offsets(c)
         val e = doc.offsets(c + 1)
         var degree = 0L

@@ -54,7 +54,7 @@ object FeatureJob {
         * task — deterministic, so resume checksums are stable. Bytes alone
         * do not bound memory (the 13-byte `2147483647 0` names a 2^31-entry
         * variable range), so for cnf a doc whose variable-indexed arrays
-        * would pass the same budget (CnfExtract.overVarBudget) is "limit" too
+        * would pass the same budget (KernelBudget.overVars) is "limit" too
         */
       maxDocBytes: Int = graft.functions.CnfExtract.DefaultMaxBytes,
       /** the TIME half of the envelope: deterministic op-count budget

@@ -162,18 +162,62 @@ class IdentityKernelSpec extends AnyFunSuite {
     for (doc <- Seq("1 -2 0", "min: +1 x1", "+1 x1 +2 x2", "min: +1 x1 ;\n+1 x1")) {
       assert(within(10)(DocKernels.normalize_opb(b(doc))) == null, doc)
       assert(within(10)(DocKernels.gbd_hash_opb(b(doc))) == null, doc)
+      assert(within(10)(DocKernels.opb_features(b(doc))) == null, doc)
     }
+    // a bound or coefficient missing at the end, or a lone sign
+    for (doc <- Seq("2147483647 0", "+1 x1 >=", "+1 x1 >= -", "min: -"))
+      assert(within(10)(DocKernels.opb_features(b(doc))) == null, doc)
     assert(within(10)(DocKernels.normalize_opb(b("min: +1 x1 ;\n+1 x1 >= 1 ;\n"))).toString ==
       "min: 1 x1;1 x1 >= 1;")
   }
 
-  test("sanitize kernels: huge variable ids give null") {
-    import graft.functions.DocKernels
-    for (doc <- Seq("2147483647 0", "100000000 0")) {
-      assert(DocKernels.sanitize_cnf(b(doc)) == null, doc)
-      assert(DocKernels.cnf_sanicheck(b(doc)) == null, doc)
+  /** Every CNF and WCNF doc kernel on ids past the variable budget at the
+    * default byte budget (null, or `limit` for the status kernels; the
+    * text-form kernels size no variable array and give a value) and on ids
+    * under it (a value, or `ok`).
+    */
+  test("doc kernels: huge variable ids give null or limit") {
+    import graft.functions.{CnfExtract, DocKernels => K, GateExtract}
+    val none = org.apache.spark.unsafe.types.UTF8String.fromString(Compression.None)
+    def value(f: Array[Byte] => AnyRef): Array[Byte] => String = d => if (f(d) == null) "null" else "value"
+    // (kernel, its outcome on a doc, its outcome past the variable budget)
+    val cnf: Seq[(String, Array[Byte] => String, String)] = Seq(
+      ("normalize_cnf", value(K.normalize_cnf), "value"),
+      ("normalize_cnf_file", value(K.normalize_cnf_file), "value"),
+      ("normalize_pqbf", value(K.normalize_pqbf), "value"),
+      ("gbd_hash", value(K.gbd_hash), "value"),
+      ("gbd_hash_pqbf", value(K.gbd_hash_pqbf), "value"),
+      ("cnf_clauses", value(K.cnf_clauses), "value"),
+      ("sanitize_cnf", value(K.sanitize_cnf), "null"),
+      ("cnf_sanicheck", value(K.cnf_sanicheck), "null"),
+      ("iso_hash", value(K.iso_hash), "null"),
+      ("iso_hash2", value(K.iso_hash2), "null"),
+      ("cnf_features", value(K.cnf_features), "null"),
+      ("cnf_gate_features", value(K.cnf_gate_features(_, GateExtract.DefaultMaxOps)), "null"),
+      ("kis_transform", value(K.kis_transform), "null"),
+      ("bip_transform", value(K.bip_transform), "null"),
+      ("cnf_gate_extract", K.cnf_gate_extract(_, GateExtract.DefaultMaxOps).getUTF8String(1).toString, "limit"),
+      ("cnf_extract", { d =>
+        val r = K.cnf_extract(d, CnfExtract.DefaultMaxBytes, CnfExtract.DefaultMaxOps, none)
+        if (r.getBoolean(3)) "limit" else if (r.getBoolean(2)) "ok" else "parse_error"
+      }, "limit"))
+    val wcnf: Seq[(String, Array[Byte] => String, String)] = Seq(
+      ("normalize_wcnf", value(K.normalize_wcnf), "value"),
+      ("gbd_hash_wcnf", value(K.gbd_hash_wcnf), "value"),
+      ("iso_hash_wcnf", value(K.iso_hash_wcnf), "null"),
+      ("wcnf_features", value(K.wcnf_features), "null"))
+    def wcnfDoc(id: String) = s"p wcnf 1 1 9\n1 $id 0"
+    val table =
+      Seq("2147483647", "100000000").flatMap(id => Seq((s"$id 0", cnf, true), (wcnfDoc(id), wcnf, true))) ++
+        Seq("8388607", "200000").flatMap(id => Seq((s"$id 0", cnf, false), (wcnfDoc(id), wcnf, false)))
+    for ((doc, kernels, past) <- table; (name, outcome, pastOutcome) <- kernels) {
+      val want = if (past) pastOutcome else if (pastOutcome == "limit") "ok" else "value"
+      assert(within(10)(outcome(b(doc))) == want, s"$name on ${doc.replace("\n", "\\n")}")
     }
-    assert(DocKernels.sanitize_cnf(b("200000 0")).toString == "p cnf 200000 1\n200000 0\n")
+    // the ids of the sanitized form fit its literal keys: no wrapped graph
+    assert(K.bip_transform(b("8388607 0")).getUTF8String(0).toString ==
+      "c directed bipartite graph representation from cnf\np edge 8388608 1\ne 8388608 8388607\n")
+    assert(K.sanitize_cnf(b("200000 0")).toString == "p cnf 200000 1\n200000 0\n")
   }
 }
 

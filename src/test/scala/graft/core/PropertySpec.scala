@@ -117,6 +117,61 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
+  /** Every entry method of [[graft.functions.DocKernels]] with its budget
+    * and codec arguments at their defaults.
+    */
+  private lazy val docKernels: Seq[(String, Array[Byte] => AnyRef)] = {
+    import graft.functions.{CnfExtract, DocKernels}
+    val args: Map[Class[_], AnyRef] = Map(
+      classOf[Int] -> Int.box(CnfExtract.DefaultMaxBytes), classOf[Long] -> Long.box(CnfExtract.DefaultMaxOps),
+      classOf[org.apache.spark.unsafe.types.UTF8String] ->
+        org.apache.spark.unsafe.types.UTF8String.fromString(Compression.None))
+    DocKernels.getClass.getMethods.toSeq
+      .filter(m => !m.getName.contains("$") && m.getParameterTypes.headOption.contains(classOf[Array[Byte]]) &&
+        m.getParameterTypes.tail.forall(args.contains))
+      .sortBy(_.getName)
+      .map(m => m.getName -> ((doc: Array[Byte]) =>
+        try m.invoke(DocKernels, (doc +: m.getParameterTypes.tail.map(args).toSeq): _*)
+        catch { case e: java.lang.reflect.InvocationTargetException => throw e.getCause }))
+  }
+
+  test("byte-mutated golden docs: every doc kernel returns a value, null or its status row") {
+    val fixtures = Seq("/gbdc/cnf_test.cnf.xz", "/gbdc/wcnf_test.wcnf.xz", "/gbdc/opb_test.opb.xz")
+      .map(graft.Fixtures.resourceBytes)
+    assert(docKernels.map(_._1).contains("opb_features") && docKernels.size == 29, docKernels.map(_._1))
+    val alphabet = b(" \n-+0123456789cphx~;>=<m:*")
+    // up to 4 edits (overwrite, delete or insert a DIMACS/OPB byte), then
+    // a cut at a random length
+    val edit = for {
+      op <- Gen.choose(0, 2)
+      at <- Gen.choose(0.0, 1.0)
+      byte <- Gen.oneOf(alphabet.toSeq)
+    } yield (op, at, byte)
+    val genMutant = for {
+      doc <- Gen.oneOf(fixtures)
+      edits <- Gen.listOfN(4, edit).flatMap(es => Gen.choose(1, 4).map(es.take))
+      cut <- Gen.frequency(3 -> Gen.const(1.0), 1 -> Gen.choose(0.0, 1.0))
+    } yield {
+      val out = edits.foldLeft(doc.toVector) { case (d, (op, at, byte)) =>
+        val i = (at * d.length).toInt.min(d.length - 1).max(0)
+        op match {
+          case 0 if d.nonEmpty => d.updated(i, byte)
+          case 1 if d.nonEmpty => d.patch(i, Nil, 1)
+          case _ => d.patch(i, Seq(byte), 0)
+        }
+      }
+      out.take((cut * out.length).toInt).toArray
+    }
+    forAll(genMutant, 200) { doc =>
+      docKernels.foreach { case (name, kernel) =>
+        val r = try kernel(doc) catch {
+          case e: Throwable => fail(s"$name threw $e on ${new String(doc.take(80), "UTF-8")}")
+        }
+        if (name == "cnf_extract" || name == "cnf_gate_extract") assert(r != null, name)
+      }
+    }
+  }
+
   test("sanitized parse never contains duplicate literals or tautologies") {
     forAll(genDoc) { doc =>
       val parsed = IsoHash2.sanitizedParse(b(render(doc, comments = false, extraWs = false)))

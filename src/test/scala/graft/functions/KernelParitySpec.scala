@@ -30,12 +30,11 @@ class KernelParitySpec extends SparkSpec {
   private lazy val pages = (1 to 4).flatMap { scale =>
     (0 until 3).map(u => PageGen.textOf(PageGen.Config(seed = scale.toLong, docScale = scale), u, u % 3))
   }
-  /** HostileDocSpec's docs; most doc kernels other than the FeatureJob
-    * pair and the sanitize pair fail or never finish on them, so only
-    * those four read them.
+  /** HostileDocSpec's docs plus a WCNF doc whose id is past the variable
+    * budget; every CNF, WCNF, PQBF and OPB doc kernel reads them.
     */
   private val hostile = Seq("2147483647 0", "100000000 0", "1 -2 0\n2 0\n",
-    "p cnf 650 2\n2 -200 0\n640 -2 0\n", "200000 0")
+    "p cnf 650 2\n2 -200 0\n640 -2 0\n", "200000 0", "p wcnf 1 1 9\n1 2147483647 0")
   private val robotsTxt = "User-agent: *\nDisallow: /private\nAllow: /private/ok\n# note\n" +
     "User-agent: graftbot\nDisallow: /*.pdf$\n"
   private val web = Seq("The quick brown fox jumps over the lazy dog. The dog sleeps!",
@@ -115,14 +114,15 @@ class KernelParitySpec extends SparkSpec {
 
   private val cnfKinds = Seq("cnf", "empty", "null")
   private val anyText = Seq("cnf", "web", "empty", "null")
+  private val cnfDocKinds = cnfKinds :+ "hostile"
   private val docKinds: Map[String, Seq[String]] = Map(
-    "cnf_features" -> (cnfKinds :+ "hostile"), "sanitize_cnf" -> (cnfKinds :+ "hostile"),
-    "cnf_sanicheck" -> (cnfKinds :+ "hostile"),
-    "wcnf_features" -> Seq("wcnf", "empty", "null"), "opb_features" -> Seq("opb", "null"),
-    "normalize_wcnf" -> Seq("wcnf", "empty", "null"), "gbd_hash_wcnf" -> Seq("wcnf", "empty", "null"),
-    "iso_hash_wcnf" -> Seq("wcnf", "empty", "null"),
-    "normalize_opb" -> Seq("opb", "empty", "null"), "gbd_hash_opb" -> Seq("opb", "empty", "null"),
-    "normalize_pqbf" -> Seq("pqbf", "empty", "null"), "gbd_hash_pqbf" -> Seq("pqbf", "empty", "null"),
+    "wcnf_features" -> Seq("wcnf", "hostile", "empty", "null"), "opb_features" -> Seq("opb", "hostile", "null"),
+    "normalize_wcnf" -> Seq("wcnf", "hostile", "empty", "null"),
+    "gbd_hash_wcnf" -> Seq("wcnf", "hostile", "empty", "null"),
+    "iso_hash_wcnf" -> Seq("wcnf", "hostile", "empty", "null"),
+    "normalize_opb" -> Seq("opb", "hostile", "empty", "null"), "gbd_hash_opb" -> Seq("opb", "hostile", "empty", "null"),
+    "normalize_pqbf" -> Seq("pqbf", "hostile", "empty", "null"),
+    "gbd_hash_pqbf" -> Seq("pqbf", "hostile", "empty", "null"),
     "warc_records" -> Seq("blob", "empty", "null")) ++
     Compression.codecs.filter(_ != Compression.None).map(c => s"decompress_$c" -> Seq("blob", "empty", "null"))
 
@@ -148,7 +148,7 @@ class KernelParitySpec extends SparkSpec {
         case "qsketch_quantile" => Seq(Seq("qs", "q") -> anyText, Seq("qs", "n") -> anyText)
         case "zorder_key" => Seq(Seq("za", "zb") -> anyText, Seq("n", "zb") -> anyText)
         case doc =>
-          val kinds = docKinds.getOrElse(doc, cnfKinds)
+          val kinds = docKinds.getOrElse(doc, cnfDocKinds)
           Seq(Seq("text") -> kinds, Seq("bin") -> kinds, Seq("n") -> kinds)
       }
       forms.map { case (args, kinds) => (s"$name(${args.mkString(", ")})", kinds, sqlCall(name, args: _*)) }
