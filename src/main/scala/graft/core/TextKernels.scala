@@ -154,17 +154,21 @@ object TextKernels extends Serializable {
     * anyway) derives the signature without a second tokenization pass.
     * Duplicate shingles cannot change a per-lane min, so the input need not
     * be distinct; order is irrelevant for the same reason.
+    *
+    * Per shingle, one branch-free loop hashes all lanes into a scratch
+    * array and a second takes the lane minima, so C2 can vectorize both.
     */
   def minHashFromShingles(sh: Array[Long], numHashes: Int): Array[Long] = {
+    val seeds = Array.tabulate(numHashes)(k => 0xd6e8feb86659fd93L * (k + 1))
+    val hashes = new Array[Long](numHashes)
     val sig = Array.fill(numHashes)(Long.MaxValue)
     var i = 0
     while (i < sh.length) {
+      val s = sh(i)
       var k = 0
-      while (k < numHashes) {
-        val h = mix64(sh(i) ^ (0xd6e8feb86659fd93L * (k + 1)))
-        if (h < sig(k)) sig(k) = h
-        k += 1
-      }
+      while (k < numHashes) { hashes(k) = mix64(s ^ seeds(k)); k += 1 }
+      k = 0
+      while (k < numHashes) { sig(k) = math.min(sig(k), hashes(k)); k += 1 }
       i += 1
     }
     sig

@@ -223,3 +223,36 @@ case class RingSuccessorShard(child: Expression, positions: Array[Long],
   override protected def withNewChildInternal(newChild: Expression): RingSuccessorShard =
     copy(child = newChild)
 }
+
+/** The model literal of [[ComponentLabel]]: sorted distinct node ids and,
+  * parallel to them, each node's component label.
+  */
+final class ComponentLabels(ids: Array[Long], labels: Array[Long]) extends KernelModel {
+  protected def state: Array[AnyRef] = Array(ids, labels)
+  def component_label(id: Long): Long = {
+    val i = java.util.Arrays.binarySearch(ids, id)
+    if (i >= 0) labels(i) else id
+  }
+}
+
+/** id -> its component label over a driver-held labelling, or the id itself
+  * when it is no node: a left join onto (id, cluster_id) plus
+  * `coalesce(cluster_id, id)`, as a row-local binary search. Its size is
+  * the caller's to bound (`graft.ops.Dedup` uses it only for dup graphs
+  * within the `LocalDispatch` bound).
+  */
+case class ComponentLabel(child: Expression, ids: Array[Long], labels: Array[Long])
+    extends KernelExpression with UnaryLike[Expression] {
+  require(ids.length == labels.length, "ids and labels must be parallel")
+  override def dataType: DataType = LongType
+  override def prettyName: String = "component_label"
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case LongType | NullType => TypeCheckResult.TypeCheckSuccess
+    case t => TypeCheckResult.TypeCheckFailure(
+      s"$prettyName expects bigint input, got ${t.simpleString}")
+  }
+  override lazy val replacement: Expression = invokeModel(new ComponentLabels(ids, labels),
+    prettyName, Seq(KernelExpression.typed(child, LongType)))
+  override protected def withNewChildInternal(newChild: Expression): ComponentLabel =
+    copy(child = newChild)
+}

@@ -120,6 +120,7 @@ package object functions {
   def shingles(c: Column, n: Int = 5): Column = col1(ShinglesExpr(_, n))(c)
   def minhash_from_shingles(c: Column, numHashes: Int = 128): Column =
     col1(MinHashFromShingles(_, numHashes))(c)
+  def lsh_bands(sig: Column, numBands: Int = 32): Column = col1(LshBands(_, numBands))(sig)
   def simhash64(c: Column): Column = col1(SimHash64(_))(c)
   def simhash64_md5(c: Column): Column = col1(SimHash64(_, "md5"))(c)
   def rolling_fingerprint(c: Column): Column = col1(RollingFingerprint(_))(c)
@@ -287,6 +288,12 @@ object GraftExtensions {
     },
     "jaccard_sorted" -> { args => require(args.length == 2); JaccardSorted(args(0), args(1)) },
     "minhash_estimate" -> { args => require(args.length == 2); MinHashEstimate(args(0), args(1)) },
+    "lsh_bands" -> { args =>
+      require(args.length == 1 || args.length == 2,
+        "lsh_bands expects (signature) or (signature, numBands)")
+      val bands = if (args.length == 2) intLit("lsh_bands numBands", args(1)) else 32
+      LshBands(args(0), bands)
+    },
     "cosine_similarity" -> { args => require(args.length == 2); CosineSimilarity(args(0), args(1)) },
     "hll_sketch" -> { args =>
       require(args.length == 1 || args.length == 2,

@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, UnsafeArrayData, XXH64}
 import org.apache.spark.sql.catalyst.trees.{BinaryLike, UnaryLike}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
@@ -38,6 +38,27 @@ object TextExprKernels {
     longs(TextKernels.shingles(s.toString, shingleSize))
   def minhash_from_shingles(shingles: ArrayData, numHashes: Int): ArrayData =
     longs(TextKernels.minHashFromShingles(shingles.toLongArray(), numHashes))
+  /** `xxhash64` of each band's slice, spelled out: Spark's seed 42 folded
+    * through `hashLong` over the slice's non-null elements, then `hashInt`
+    * of the band number.
+    */
+  def lsh_bands(sig: ArrayData, numBands: Int): ArrayData = {
+    val r = if (sig == null) 0 else sig.numElements() / numBands
+    val out = new Array[Long](numBands)
+    var b = 0
+    while (b < numBands) {
+      var h = 42L
+      var i = b * r
+      val end = i + r
+      while (i < end) {
+        if (!sig.isNullAt(i)) h = XXH64.hashLong(sig.getLong(i), h)
+        i += 1
+      }
+      out(b) = XXH64.hashInt(b, h)
+      b += 1
+    }
+    longs(out)
+  }
   def simhash64(s: UTF8String): Long = TextKernels.simHash64(s.toString)
   def simhash64_md5(s: UTF8String): Long = TextKernels.simHash64Md5(s.toString)
   def rolling_fingerprint(s: UTF8String): Long = TextKernels.rollingFingerprint(s.toString)
@@ -173,6 +194,31 @@ case class MinHashFromShingles(child: Expression, numHashes: Int)
   override lazy val replacement: Expression = call(TextExprKernels, prettyName,
     Seq(KernelExpression.typed(child, ArrayType(LongType)), Literal(numHashes)))
   override protected def withNewChildInternal(newChild: Expression): MinHashFromShingles =
+    copy(child = newChild)
+}
+
+/** LSH band buckets of a MinHash signature (array<bigint>, one per band):
+  * bucket `b` equals `xxhash64(slice(sig, b * r + 1, r), b)` with
+  * `r = size(sig) div numBands`, bit for bit — the banding every LSH path
+  * of `Dedup` explodes, as one typed loop instead of an interpreted
+  * `transform`/`slice`/`xxhash64` lambda per band. Never null: a null
+  * signature hashes like an empty one, as `xxhash64` does.
+  */
+case class LshBands(child: Expression, numBands: Int)
+    extends KernelExpression with UnaryLike[Expression] {
+  require(numBands >= 1, s"numBands must be >= 1, got $numBands")
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def nullable: Boolean = false
+  override def prettyName: String = "lsh_bands"
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(LongType, _) | NullType => TypeCheckResult.TypeCheckSuccess
+    case t => TypeCheckResult.TypeCheckFailure(
+      s"$prettyName expects array<bigint> input, got ${t.simpleString}")
+  }
+  override lazy val replacement: Expression = call(TextExprKernels, prettyName,
+    Seq(KernelExpression.typed(child, ArrayType(LongType)), Literal(numBands)),
+    propagateNull = false)
+  override protected def withNewChildInternal(newChild: Expression): LshBands =
     copy(child = newChild)
 }
 

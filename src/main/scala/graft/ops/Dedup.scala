@@ -1,7 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.GraftShim
+import org.apache.spark.sql.types.{DataType, LongType}
 
 import graft.functions._
 
@@ -202,17 +204,15 @@ object Dedup {
   }
 
   /** Band/bucket explosion of a (_id, _sig) frame: (band, bucket, id) —
-    * the band key is a hash of the band's signature slice. Shared by every
-    * LSH path so banding stays bit-identical across batch / incremental /
-    * pre-materialized entry points.
+    * the bucket is the [[graft.functions.lsh_bands]] hash of the band's
+    * signature slice. Shared by every LSH path so banding stays
+    * bit-identical across batch / incremental / pre-materialized entry
+    * points, whose bucket joins key on (bucket, band): the 64-bit bucket
+    * leads the sort, not the band's few values.
     */
-  private def bandedFromSigs(sigs: DataFrame, numBands: Int,
-                             rowsPerBand: Int): DataFrame =
-    sigs.select(col("_id"),
-        posexplode(transform(sequence(lit(0), lit(numBands - 1)), b =>
-          xxhash64(slice(col("_sig"), b * rowsPerBand + 1, lit(rowsPerBand)), b)))
-          .as(Seq("_band", "_bucket")))
-      .select(col("_band"), col("_bucket"), col("_id"))
+  private def bandedFromSigs(sigs: DataFrame, numBands: Int): DataFrame =
+    sigs.select(posexplode(lsh_bands(col("_sig"), numBands)).as(Seq("_band", "_bucket")),
+      col("_id"))
 
   /** MinHash + LSH near-duplicate PAIRS: (id_a, id_b, est_jaccard) with
     * est_jaccard >= threshold. numBands divides numHashes; rowsPerBand =
@@ -230,20 +230,19 @@ object Dedup {
                    numHashes: Int = 128, numBands: Int = 32,
                    threshold: Double = 0.7, shingleSize: Int = 5): DataFrame = {
     require(numHashes % numBands == 0, "numBands must divide numHashes")
-    val rowsPerBand = numHashes / numBands
     val df = Fanout.ensure(df0)
     val sigs = df.select(col(idCol).as("_id"),
       minhash_signature(col(textCol), numHashes, shingleSize).as("_sig"))
       .localCheckpoint()
 
-    val banded = bandedFromSigs(sigs, numBands, rowsPerBand)
+    val banded = bandedFromSigs(sigs, numBands)
     // self-join within (band, bucket); skew-bounded: a bucket only contains
     // near-identical docs by construction. distinct BEFORE the estimate:
     // est_jaccard is a function of (id_a, id_b), so collapsing multi-band
     // agreement first computes it once per pair, not once per shared band.
     val a = banded.select(col("_band"), col("_bucket"), col("_id").as("id_a"))
     val b = banded.select(col("_band"), col("_bucket"), col("_id").as("id_b"))
-    val cands = a.join(b, Seq("_band", "_bucket"))
+    val cands = a.join(b, Seq("_bucket", "_band"))
       .where(col("id_a") < col("id_b"))
       .select(col("id_a"), col("id_b"))
       .distinct()
@@ -557,7 +556,52 @@ object Dedup {
     * also under the round cap.
     */
   def clusters(pairs: DataFrame, idA: String = "id_a", idB: String = "id_b",
-               maxIters: Int = 10): DataFrame = {
+               maxIters: Int = 10): DataFrame =
+    components(pairs, idA, idB, maxIters).fold(_.frame(pairs.sparkSession), identity)
+
+  /** `frame` plus `cluster_id`: the [[clusters]] label of its `idCol` over
+    * the graph `pairs`, or the id itself when no pair names it — a left
+    * join onto the labels and `coalesce(cluster_id, id)`. A null id gets a
+    * null label. When the dup graph went to the driver, the labels attach
+    * by a row-local lookup ([[graft.functions.ComponentLabel]]) instead of
+    * a join; they are no larger than the graph [[LocalDispatch]] bounded.
+    */
+  private[ops] def withClusterId(frame: DataFrame, idCol: String, pairs: DataFrame,
+                                 idA: String = "id_a", idB: String = "id_b",
+                                 maxIters: Int = 10): DataFrame =
+    components(pairs, idA, idB, maxIters) match {
+      case Left(local) if frame.schema(idCol).dataType == local.idType =>
+        frame.withColumn("cluster_id", local.lookup(col(idCol)))
+      case found =>
+        val labels = found.fold(_.frame(pairs.sparkSession), identity)
+          .select(col("id").as("_cc_id"), col("cluster_id").as("_cc_label"))
+        frame.join(labels, col(idCol) === col("_cc_id"), "left")
+          .select(frame.columns.map(col) :+
+            coalesce(col("_cc_label"), col(idCol)).as("cluster_id"): _*)
+    }
+
+  /** Component labels held on the driver: the sorted node ids, each one's
+    * label, and the id type of the pairs.
+    */
+  private final class LocalLabels(ids: Array[Long], labels: Array[Long],
+                                  val idType: DataType) {
+    def frame(spark: SparkSession): DataFrame = {
+      import spark.implicits._
+      ids.indices.map(i => (ids(i), labels(i))).toDF("id", "cluster_id")
+        .select(col("id").cast(idType).as("id"),
+          col("cluster_id").cast(idType).as("cluster_id"))
+    }
+
+    def lookup(id: Column): Column = GraftShim.column(graft.functions.ComponentLabel(
+      GraftShim.expression(id.cast(LongType)), ids, labels)).cast(idType)
+  }
+
+  /** The components of [[clusters]]: on the driver when [[LocalDispatch]]
+    * brought the dup graph there, else the distributed (id, cluster_id)
+    * rounds.
+    */
+  private def components(pairs: DataFrame, idA: String, idB: String,
+                         maxIters: Int): Either[LocalLabels, DataFrame] = {
     val ids = pairs.select(col(idA).as("a"), col(idB).as("b"))
     // small dup graph with integral ids: the same rounds on the driver ([[LocalDispatch]])
     val (p, _, local) = LocalDispatch.materialize(ids, LocalDispatch.CcKey, edgesPerRow = 2,
@@ -566,12 +610,7 @@ object Dedup {
     val idType = directed.schema("a").dataType
     if (local.nonEmpty) {
       val g = LocalGraph(local.get)
-      val labels = localClusters(g, maxIters)
-      val spark = pairs.sparkSession
-      import spark.implicits._
-      return g.ids.indices.map(i => (g.ids(i), g.ids(labels(i)))).toDF("id", "cluster_id")
-        .select(col("id").cast(idType).as("id"),
-          col("cluster_id").cast(idType).as("cluster_id"))
+      return Left(new LocalLabels(g.ids, localClusters(g, maxIters).map(g.ids(_)), idType))
     }
     // over the bound, or null / non-integral ids: the distributed rounds
     // over the distinct edge list, materialized once for all of them
@@ -609,7 +648,7 @@ object Dedup {
       converged = !changed
       iter += 1
     }
-    labels
+    Right(labels)
   }
 
   /** The rounds of [[clusters]] on the driver over the undirected edges of
@@ -661,10 +700,12 @@ object Dedup {
     *     -> connected components over the dup graph ([[clusters]]: the pair
     *        list materialized once, its observed size picks the driver or
     *        the distributed rounds)
-    *     -> labels attached to the ids of the shingle projection, then
-    *        canonical selection: min id per component, or — when
-    *        `keepByCol` names a score column on `df` — the component's
-    *        best row by (score desc NULLS LAST, id asc), the production
+    *     -> labels attached to the ids of the shingle projection
+    *        ([[withClusterId]]: a row-local lookup when the graph went to
+    *        the driver, a join otherwise), then canonical selection: min
+    *        id per component, or — when `keepByCol` names a score
+    *        column on `df` — the component's best row by (score desc
+    *        NULLS LAST, id asc), the production
     *        policy of keeping the longest/highest-quality variant instead
     *        of the accidental smallest id. The scored path is two
     *        map-side-combined aggregates (max score per cluster, then min
@@ -682,7 +723,7 @@ object Dedup {
     * Scale shape: the text reduces to signatures/shingle arrays before
     * anything wide; pairs are bucket-bounded; CC runs on the pair-graph
     * (dup-sized, not corpus-sized); the labelling joins carry ids only.
-    * The cluster-size aggregate is label-sized.
+    * The cluster-size aggregate (map-side combined) joins back on the label.
     */
   def nearDupDedup(df: DataFrame, idCol: String, textCol: String,
                    numHashes: Int = 128, numBands: Int = 32,
@@ -715,7 +756,7 @@ object Dedup {
     bandedFromSigs(
       withShingles(pre).select(col("_sid").as("_id"),
         minhash_from_shingles(col("_sh"), numHashes).as("_sig")),
-      numBands, numHashes / numBands)
+      numBands)
 
   /** LSH candidates of a pre-materialized (_sid, _sh) projection: the
     * distinct (id_a < id_b) pairs sharing any (band, bucket). The banded
@@ -730,7 +771,7 @@ object Dedup {
                                        numBands: Int): DataFrame = {
     val banded = bandedPre(pre, numHashes, numBands).hint("merge")
     banded.as("_x").join(banded.as("_y"),
-        col("_x._band") === col("_y._band") && col("_x._bucket") === col("_y._bucket") &&
+        col("_x._bucket") === col("_y._bucket") && col("_x._band") === col("_y._band") &&
           col("_x._id") < col("_y._id"))
       .select(col("_x._id").as("id_a"), col("_y._id").as("id_b"))
       .distinct()
@@ -764,12 +805,8 @@ object Dedup {
                                    idCol: String, numHashes: Int,
                                    numBands: Int, jaccard: Double,
                                    keepByCol: Option[String]): DataFrame = {
-    val pairs = verifiedPairsPre(pre, numHashes, numBands, jaccard)
-    val labels = clusters(pairs)
-    val labeled = pre.select(col("_sid").as(idCol))
-      .join(labels.withColumnRenamed("id", idCol), Seq(idCol), "left")
-      .select(col(idCol),
-        coalesce(col("cluster_id"), col(idCol)).as("cluster_id"))
+    val labeled = withClusterId(pre.select(col("_sid").as(idCol)), idCol,
+      verifiedPairsPre(pre, numHashes, numBands, jaccard))
     val sizes = labeled.groupBy(col("cluster_id"))
       .agg(count(lit(1)).as("cluster_size"))
     val base = labeled.join(sizes, Seq("cluster_id"))
@@ -912,7 +949,7 @@ object Dedup {
     // Shingle-less docs enter neither banding pass (see withShingles).
     val cands = bandedPre(preIn, numHashes, numBands).withColumnRenamed("_id", "_in")
       .join(bandedPre(preLedBand, numHashes, numBands).withColumnRenamed("_id", "_led"),
-        Seq("_band", "_bucket"))
+        Seq("_bucket", "_band"))
       .select(col("_in"), col("_led")).distinct()
       .localCheckpoint()
     // the exact verify needs ledger SHINGLES only for CANDIDATE ledger

@@ -89,11 +89,7 @@ object Geo {
     val coreEdges = pairs
       .join(cores.select(col("id").as("id_a")), Seq("id_a"))
       .join(cores.select(col("id").as("id_b")), Seq("id_b"))
-    val comp = graft.ops.Dedup.clusters(coreEdges, "id_a", "id_b")
-    val coreLabels = cores.join(comp, Seq("id"), "left")
-      .select(col("id"),
-        coalesce(col("cluster_id"), col("id")).as("cluster_id"))
-      .localCheckpoint()
+    val coreLabels = Dedup.withClusterId(cores, "id", coreEdges).localCheckpoint()
     val nbr = pairs.select(col("id_a").as("id"), col("id_b").as("nbr"))
       .unionByName(pairs.select(col("id_b").as("id"), col("id_a").as("nbr")))
     val borderAssign = marked.where(!col("_core"))

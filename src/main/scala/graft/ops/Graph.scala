@@ -793,12 +793,8 @@ object Graph {
           .join(comp.select(col("node").as("v"), col("comp").as("cb")),
             Seq("v"))
           .select(col("ca").as("id_a"), col("cb").as("id_b"))
-        val merged = graft.ops.Dedup.clusters(compEdges, "id_a", "id_b")
-        comp = comp
-          .join(merged.select(col("id").as("comp"), col("cluster_id")),
-            Seq("comp"), "left")
-          .select(col("node"),
-            coalesce(col("cluster_id"), col("comp")).as("comp"))
+        comp = Dedup.withClusterId(comp, "comp", compEdges)
+          .select(col("node"), col("cluster_id").as("comp"))
           .localCheckpoint()
         rounds += 1
       }

@@ -99,12 +99,6 @@ object Windows {
     df.withColumn("_rn", row_number().over(w)).where(col("_rn") === 1).drop("_rn")
   }
 
-  /** Rank-n snapshot per key (n=1 is latestSnapshot). */
-  def nthSnapshot(df: DataFrame, keys: Seq[String], ts: String, n: Int): DataFrame = {
-    val w = Window.partitionBy(keys.map(col): _*).orderBy(col(ts).desc)
-    df.withColumn("_rn", row_number().over(w)).where(col("_rn") === n).drop("_rn")
-  }
-
   /** Revisit CHANGE DETECTION: per key (url), how different is each crawl
     * snapshot's text from the PREVIOUS snapshot? Adds
     *   - `hamming`  — simhash64 bit distance to the previous snapshot

@@ -140,6 +140,9 @@ class KernelParitySpec extends SparkSpec {
           Seq(Seq("text") -> anyText, Seq("text", "7") -> anyText, Seq("n") -> anyText)
         case "jaccard_sorted" => Seq(Seq("sh_a", "sh_b") -> anyText, Seq("n", "sh_b") -> anyText)
         case "minhash_estimate" => Seq(Seq("sig_a", "sig_b") -> anyText, Seq("n", "sig_b") -> anyText)
+        case "lsh_bands" =>
+          Seq(Seq("sig_a") -> anyText, Seq("sig_a", "4") -> anyText, Seq("sig_a", "3") -> anyText,
+            Seq("n", "4") -> anyText)
         case "cosine_similarity" => Seq(Seq("vec_a", "vec_b") -> anyText, Seq("vec_a", "n") -> anyText)
         case "hll_estimate" => Seq(Seq("hll") -> anyText, Seq("n") -> anyText)
         case "qsketch_count" => Seq(Seq("qs") -> anyText, Seq("n") -> anyText)
@@ -162,6 +165,9 @@ class KernelParitySpec extends SparkSpec {
     val pos = Array(-4000000000000000000L, -5L, 77L, 6000000000000000000L)
     (pos, Array(2L, 0L, 1L, 2L))
   }
+
+  /** Sorted node ids and their component labels; most `za` values are no node. */
+  private val labels = (Array(0L, 37L, 74L, 111L, 4000L), Array(0L, 0L, 74L, 0L, -1L))
 
   /** The kernels reachable only through the Column API. */
   private lazy val columnCases: Seq[(String, Seq[String], Column)] = Seq(
@@ -192,7 +198,9 @@ class KernelParitySpec extends SparkSpec {
       robots_decision(col("path"), robots_rules(col("text"), "graftbot"))),
     ("hilbert_key(za, zb, 12)", anyText, hilbert_key(col("za"), col("zb"), 12)),
     ("ring_successor_shard(key)", anyText, GraftShim.column(
-      RingSuccessorShard(GraftShim.expression(col("key")), ring._1, ring._2))))
+      RingSuccessorShard(GraftShim.expression(col("key")), ring._1, ring._2))),
+    ("component_label(za)", anyText, GraftShim.column(
+      ComponentLabel(GraftShim.expression(col("za")), labels._1, labels._2))))
 
   private lazy val cases = sqlCases ++ columnCases
 
@@ -331,6 +339,7 @@ object KernelParitySpec {
     "cnf_sanicheck(bin)" -> "struct<double!*11>",
     "cnf_sanicheck(n)" -> "struct<double!*11>",
     "cnf_sanicheck(text)" -> "struct<double!*11>",
+    "component_label(za)" -> "bigint",
     "cosine_similarity(vec_a, n)" -> "double",
     "cosine_similarity(vec_a, vec_b)" -> "double",
     "decompress_auto(bin)" -> "binary",
@@ -381,6 +390,10 @@ object KernelParitySpec {
     "lang_id(n)" -> "struct<string!,double!>",
     "lang_id(text)" -> "struct<string!,double!>",
     "longest_repeat_len(n)" -> "bigint",
+    "lsh_bands(n, 4)" -> "array<bigint!>!",
+    "lsh_bands(sig_a)" -> "array<bigint!>!",
+    "lsh_bands(sig_a, 3)" -> "array<bigint!>!",
+    "lsh_bands(sig_a, 4)" -> "array<bigint!>!",
     "longest_repeat_len(text)" -> "bigint",
     "longest_repeat_len(text, 7)" -> "bigint",
     "minhash_estimate(n, sig_b)" -> "double",

@@ -3,8 +3,9 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
-import graft.functions.shingles
+import graft.{SparkEvents, SparkSpec}
+import graft.core.TextKernels
+import graft.functions.{lsh_bands, minhash_from_shingles, shingles}
 import graft.pages.PageGen
 
 /** The one-pass near-dup pipeline against [[DedupOracle]], the pipeline it
@@ -39,9 +40,11 @@ class DedupIdentitySpec extends SparkSpec {
 
   /** (id, text, score) rows: PageGen docs and their exact revisit copies,
     * planted near-copies, short docs (some repeated), null text, null
-    * scores, and ids that occur twice with different text.
+    * scores, ids that occur twice with different text (one of them a
+    * planted copy's source that carries another cluster's page), and a
+    * page without an id.
     */
-  private def corpus(seed: Long, urls: Int): Seq[(Long, String, Option[Double])] = {
+  private def corpus(seed: Long, urls: Int): Seq[(Option[Long], String, Option[Double])] = {
     val cfg = PageGen.Config(seed = seed, docScale = 2)
     val rnd = new scala.util.Random(seed)
     val pages = for (u <- 0 until urls; r <- 0 until 2) yield PageGen.textOf(cfg, u, r)
@@ -49,18 +52,22 @@ class DedupIdentitySpec extends SparkSpec {
     val short = (0 until 30).map(i => Seq("p", "cnf", s"${i % 7}", "0").take(1 + i % 4).mkString(" "))
     val texts: Seq[String] = pages ++ copies ++ short ++ Seq.fill(5)(null)
     val rows = texts.zipWithIndex.map { case (t, i) =>
-      (i.toLong * 3 + 1, t, if (i % 9 == 0) None else Some((rnd.nextInt(5) - 2).toDouble))
+      (Option(i.toLong * 3 + 1), t, if (i % 9 == 0) None else Some((rnd.nextInt(5) - 2).toDouble))
     }
     // duplicate ids: a near-copy, a short doc and a null text under ids
-    // already taken
+    // already taken; page 0's id (a node: page 0 has a planted copy) on
+    // page 4, which has its own copy; and page 8, which has a copy too,
+    // under a null id
     val dups = Seq(
       (rows(2)._1, nearCopy(pages(2), rnd, 40), Some(1.0)),
       (rows(5)._1, "p cnf", None),
-      (rows(7)._1, null, Some(0.0)))
+      (rows(7)._1, null, Some(0.0)),
+      (rows(0)._1, pages(4), Some(2.0)),
+      (None, pages(8), Some(3.0)))
     rnd.shuffle(rows ++ dups)
   }
 
-  private def frame(rows: Seq[(Long, String, Option[Double])]): DataFrame =
+  private def frame(rows: Seq[(Option[Long], String, Option[Double])]): DataFrame =
     rows.toDF("id", "text", "score").repartition(3)
 
   private def sorted(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq.sorted
@@ -75,6 +82,8 @@ class DedupIdentitySpec extends SparkSpec {
           val g = sorted(got)
           assert(g == sorted(exp), s"seed $seed, $path, keepBy $keepBy")
           assert(got.where(!col("kept")).count() > 20, "corpus must plant duplicates")
+          // the id-less page has no cluster row; keepBy fans duplicated ids out
+          if (keepBy.isEmpty) assert(got.count() == df.count() - 1)
         }
       }
     }
@@ -113,7 +122,7 @@ class DedupIdentitySpec extends SparkSpec {
     val rows = corpus(41L, 60)
     val (led, in) = rows.splitAt(rows.length / 2)
     // the shard also re-ingests a few ledger docs verbatim, under new ids
-    val incoming = frame(in ++ led.take(8).map { case (id, t, s) => (id + 1, t, s) })
+    val incoming = frame(in ++ led.take(8).map { case (id, t, s) => (id.map(_ + 1), t, s) })
     val ledger = frame(led)
     bothPaths { path =>
       val got = Dedup.nearDupIncremental(incoming, ledger, "id", "text")
@@ -157,5 +166,51 @@ class DedupIdentitySpec extends SparkSpec {
     val out = Dedup.nearDupDedup(docs, "id", "text").collect()
     assert(out.length == 2000)
     assert(out.forall { case Row(id: Long, c: Long, n: Long, k: Boolean) => c == id && n == 1L && k })
+  }
+
+  test("lsh_bands ≡ the transform/slice/xxhash64 banding, null and empty signatures included") {
+    val texts = corpus(7L, 20).map(_._2)
+    for ((numHashes, numBands) <- Seq((128, 32), (64, 32), (64, 16), (12, 4))) {
+      val sigs = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("_id", "text")
+        .select(col("_id"), minhash_from_shingles(shingles(col("text"), 3), numHashes).as("_sig"))
+        .unionByName(Seq((-1L, null: Seq[Long]), (-2L, Seq.empty[Long])).toDF("_id", "_sig"))
+      val got = sigs.select(posexplode(lsh_bands(col("_sig"), numBands)).as(Seq("_band", "_bucket")),
+        col("_id"))
+      val exp = DedupOracle.bandedFromSigs(sigs, numBands, numHashes / numBands)
+      assert(sorted(got) == sorted(exp), s"$numHashes/$numBands")
+      assert(got.count() == (texts.length + 2L) * numBands)
+    }
+  }
+
+  test("the two-loop minHashFromShingles ≡ the scalar loop, on duplicate shingles too") {
+    val rnd = new java.util.SplittableRandom(3)
+    val docs = corpus(9L, 10).flatMap(r => Option(r._2)).map(TextKernels.shingles(_, 3)) ++ Seq(
+      Array.emptyLongArray,
+      Array(5L, 5L, -1L, 5L, Long.MinValue, Long.MaxValue, -1L),
+      Array.fill(50)(rnd.nextLong(4)))
+    for (sh <- docs; n <- Seq(1, 3, 127, 128, 130)) {
+      assert(TextKernels.minHashFromShingles(sh, n).toSeq == DedupOracle.minHashFromShingles(sh, n).toSeq,
+        s"numHashes $n on ${sh.take(4).mkString(",")}")
+    }
+  }
+
+  test("nearDupDedup on a benchmark-sized local-path corpus: jobs and SQL executions per call") {
+    // 1,600 PageGen docs and a near-copy of every tenth, as parquet files
+    val cfg = PageGen.Config(urls = 400, revisitsPerUrl = 4, hotUrls = 0, hotFactor = 1, seed = 5,
+      docScale = 2)
+    val pages = for (u <- 0 until 400; r <- 0 until 4) yield PageGen.textOf(cfg, u, r)
+    val copies = pages.indices.filter(_ % 10 == 0).map(i => pages(i).replaceFirst(" 1 ", " 2 "))
+    val dir = java.nio.file.Files.createTempDirectory("neardup_jobs").toString + "/t"
+    (pages ++ copies).zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("id", "text")
+      .repartition(3).write.parquet(dir)
+    val df = spark.read.parquet(dir)
+    // executions: the shingle checkpoint, the pair checkpoint, the
+    // LocalDispatch collect and this collect (the fan-out check plans
+    // nothing); jobs: one for the shingles, four for the pairs (band
+    // shuffle, shingle broadcast, pair-distinct shuffle, result), the
+    // collect, and three for the labels, which attach by a lookup (size
+    // shuffle, size broadcast, result)
+    val counts = SparkEvents.count(spark)(Dedup.nearDupDedup(df, "id", "text").collect())
+    assert(counts == SparkEvents.Counts(jobs = 9, executions = 4))
   }
 }

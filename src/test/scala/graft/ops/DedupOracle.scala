@@ -3,18 +3,37 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.core.TextKernels
 import graft.functions._
 
 /** Test-scope oracle: the near-dup pipeline of `Dedup` as it stood before
   * the one-pass rewrite, kept verbatim but for access modifiers (a bucket
   * self-join that evaluates the signature on both sides, a boxed
   * union-find for small dup graphs that ignores `maxIters`, labels read
-  * from a second scan of the input). `DedupIdentitySpec` compares the
-  * production operators against it.
+  * from a second scan of the input), and the MinHash lane loop and the
+  * `transform`/`slice`/`xxhash64` banding as they stood before the band
+  * kernel. `DedupIdentitySpec` compares the production operators against
+  * it.
   */
 object DedupOracle {
 
-  private def bandedFromSigs(sigs: DataFrame, numBands: Int,
+  /** The scalar MinHash loop: one mix and one compare per lane and shingle. */
+  def minHashFromShingles(sh: Array[Long], numHashes: Int): Array[Long] = {
+    val sig = Array.fill(numHashes)(Long.MaxValue)
+    var i = 0
+    while (i < sh.length) {
+      var k = 0
+      while (k < numHashes) {
+        val h = TextKernels.mix64(sh(i) ^ (0xd6e8feb86659fd93L * (k + 1)))
+        if (h < sig(k)) sig(k) = h
+        k += 1
+      }
+      i += 1
+    }
+    sig
+  }
+
+  def bandedFromSigs(sigs: DataFrame, numBands: Int,
                              rowsPerBand: Int): DataFrame =
     sigs.select(col("_id"),
         posexplode(transform(sequence(lit(0), lit(numBands - 1)), b =>

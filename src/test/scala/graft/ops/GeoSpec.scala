@@ -34,16 +34,21 @@ class GeoSpec extends SparkSpec {
       (6L, 5.0, 5.0),     // noise
       (7L, 10.0, 10.0), (8L, 10.5, 10.0), (9L, 10.0, 10.5))
       .toDF("id", "x", "y")
-    val r = Geo.dbscan(pts, "id", "x", "y", eps = 1.0, minPts = 3)
+    def run() = Geo.dbscan(pts, "id", "x", "y", eps = 1.0, minPts = 3)
       .orderBy("id").collect()
       .map(x => (x.getLong(0), x.getString(1),
         Option(x.get(2)).map(_.asInstanceOf[Long])))
-    assert(r.toSeq == Seq(
+    val expected = Seq(
       (1L, "core", Some(1L)), (2L, "core", Some(1L)),
       (3L, "core", Some(1L)), (4L, "core", Some(1L)),
       (5L, "border", Some(1L)), (6L, "noise", None),
       (7L, "core", Some(7L)), (8L, "core", Some(7L)),
-      (9L, "core", Some(7L))))
+      (9L, "core", Some(7L)))
+    assert(run().toSeq == expected)
+    // the core labels join from the distributed rounds instead of the driver lookup
+    spark.conf.set("spark.graft.cc.localEdgeThreshold", "0")
+    try assert(run().toSeq == expected)
+    finally spark.conf.unset("spark.graft.cc.localEdgeThreshold")
     // a lone core pair below minPts degrades to noise, not a cluster
     val sparse = Seq((1L, 0.0, 0.0), (2L, 0.5, 0.0)).toDF("id", "x", "y")
     val rs = Geo.dbscan(sparse, "id", "x", "y", 1.0, 3)

@@ -284,6 +284,12 @@ class OptR06Spec extends SparkSpec {
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     }
     assert(local == dist)
+    // distributed rounds whose component merges attach driver-held labels
+    spark.conf.set("spark.graft.graph.localEdgeThreshold", "0")
+    val mixed = try Graph.boruvkaMst(edges, "s", "d", "w").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+      finally spark.conf.unset("spark.graft.graph.localEdgeThreshold")
+    assert(local == mixed)
   }
 
   test("pageRankInt / personalizedPageRankInt / hitsInt: local ≡ distributed") {

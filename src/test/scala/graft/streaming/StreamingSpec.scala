@@ -35,6 +35,30 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("windowedStats: pages, ok pages and distinct instances per hour and language") {
+    implicit val sc = spark.sqlContext
+    val input = MemoryStream[Page]
+    val q = Streaming.windowedStats(input.toDF())
+      .writeStream.format("memory").queryName("ws").outputMode(OutputMode.Complete).start()
+    try {
+      val t0 = 1699999200000L // an hour boundary (UTC)
+      def page(url: String, min: Long, text: String, lang: String) =
+        Page(url, new Timestamp(t0 + min * 60000L), Array.emptyByteArray, text, lang)
+      val one = "p cnf 1 1\n1 0\n"
+      input.addData(Seq(
+        page("a", 0, one, "en"), page("b", 10, one, "en"), page("c", 20, null, "en"),
+        page("d", 30, "p cnf 2 1\n1 2 0\n", "de"), page("e", 70, one, "en")))
+      q.processAllAvailable()
+      val got = spark.table("ws").collect().map { r =>
+        ((r.getStruct(0).getTimestamp(0).getTime - t0) / 60000L, r.getString(1)) ->
+          (r.getLong(2), r.getLong(3), r.getLong(4))
+      }.toMap
+      // the null-text page counts as a page, neither ok nor an instance
+      assert(got == Map((0L, "en") -> (3L, 2L, 1L), (0L, "de") -> (1L, 1L, 1L),
+        (60L, "en") -> (1L, 1L, 1L)))
+    } finally q.stop()
+  }
+
   test("session_window sessionization emits sessions after watermark passes") {
     implicit val sc = spark.sqlContext
     val input = MemoryStream[Page]

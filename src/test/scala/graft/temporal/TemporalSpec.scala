@@ -242,6 +242,23 @@ class WindowsSpec extends SparkSpec {
     assert(r.toSeq == Seq(1.0, 1.5, 16.0))
   }
 
+  test("rollingByRange: trailing seconds, inclusive, ties and nulls") {
+    val df = Seq[(String, Timestamp, Option[Double])](
+      ("a", ts(0), Some(1.0)), ("a", ts(10), Some(2.0)), ("a", ts(25), Some(3.0)),
+      ("a", ts(100), Some(4.0)), ("b", ts(5), Some(7.0)), ("b", ts(5), Some(9.0)),
+      ("b", ts(30), None)).toDF("url", "t", "x")
+    val r = Windows.rollingByRange(df, Seq("url"), "t", "x", 20)
+      .select(col("url"), col("t"), col("x_roll20s_mean"), col("x_roll20s_count"))
+      .collect().map(r => ((r.getString(0), r.getTimestamp(1).getTime / 1000),
+        (Option(r.get(2)).map(_.asInstanceOf[Double]), r.getLong(3))))
+    // a@25 reaches back to 5: the row at 10, not the one at 0; b@5 sees its
+    // tie; b@30 reaches back to 10 and sees only its own null
+    assert(r.sortBy(_._1).toSeq == Seq(
+      ("a", 0L) -> (Some(1.0), 1L), ("a", 10L) -> (Some(1.5), 2L), ("a", 25L) -> (Some(2.5), 2L),
+      ("a", 100L) -> (Some(4.0), 1L), ("b", 5L) -> (Some(8.0), 2L), ("b", 5L) -> (Some(8.0), 2L),
+      ("b", 30L) -> (None, 0L)))
+  }
+
   test("latestSnapshot dedups to newest crawl") {
     val df = Seq(("u", ts(1), "old"), ("u", ts(9), "new"), ("v", ts(2), "only")).toDF("url", "t", "v")
     val r = Windows.latestSnapshot(df, Seq("url"), "t").orderBy("url").select("v").as[String].collect()
