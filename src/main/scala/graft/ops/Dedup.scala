@@ -560,17 +560,17 @@ object Dedup {
     components(pairs, idA, idB, maxIters).fold(_.frame(pairs.sparkSession), identity)
 
   /** `frame` plus `cluster_id`: the [[clusters]] label of its `idCol` over
-    * the graph `pairs`, or the id itself when no pair names it — a left
-    * join onto the labels and `coalesce(cluster_id, id)`. A null id gets a
-    * null label. When the dup graph went to the driver, the labels attach
-    * by a row-local lookup ([[graft.functions.ComponentLabel]]) instead of
-    * a join; they are no larger than the graph [[LocalDispatch]] bounded.
+    * the graph `pairs` (`id_a`, `id_b`), or the id itself when no pair names
+    * it — a left join onto the labels and `coalesce(cluster_id, id)`. A null
+    * id gets a null label. When the dup graph went to the driver and its
+    * labelling (two longs per node) fits `spark.sql.autoBroadcastJoinThreshold`,
+    * the labels attach by a row-local lookup ([[graft.functions.ComponentLabel]])
+    * instead of a join: every task holds the whole literal, so it gets no
+    * more room than a relation Spark would broadcast.
     */
-  private[ops] def withClusterId(frame: DataFrame, idCol: String, pairs: DataFrame,
-                                 idA: String = "id_a", idB: String = "id_b",
-                                 maxIters: Int = 10): DataFrame =
-    components(pairs, idA, idB, maxIters) match {
-      case Left(local) if frame.schema(idCol).dataType == local.idType =>
+  private[ops] def withClusterId(frame: DataFrame, idCol: String, pairs: DataFrame): DataFrame =
+    components(pairs, "id_a", "id_b", 10) match {
+      case Left(local) if local.bytes <= GraftShim.broadcastThreshold(frame.sparkSession) =>
         frame.withColumn("cluster_id", local.lookup(col(idCol)))
       case found =>
         val labels = found.fold(_.frame(pairs.sparkSession), identity)
@@ -583,8 +583,10 @@ object Dedup {
   /** Component labels held on the driver: the sorted node ids, each one's
     * label, and the id type of the pairs.
     */
-  private final class LocalLabels(ids: Array[Long], labels: Array[Long],
-                                  val idType: DataType) {
+  private final class LocalLabels(ids: Array[Long], labels: Array[Long], idType: DataType) {
+    /** Size of the labelling as a [[graft.functions.ComponentLabel]] literal. */
+    def bytes: Long = 16L * ids.length
+
     def frame(spark: SparkSession): DataFrame = {
       import spark.implicits._
       ids.indices.map(i => (ids(i), labels(i))).toDF("id", "cluster_id")
@@ -702,7 +704,8 @@ object Dedup {
     *        the distributed rounds)
     *     -> labels attached to the ids of the shingle projection
     *        ([[withClusterId]]: a row-local lookup when the graph went to
-    *        the driver, a join otherwise), then canonical selection: min
+    *        the driver and its labels fit the broadcast threshold, a join
+    *        otherwise), then canonical selection: min
     *        id per component, or — when `keepByCol` names a score
     *        column on `df` — the component's best row by (score desc
     *        NULLS LAST, id asc), the production

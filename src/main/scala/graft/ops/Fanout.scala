@@ -1,11 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.expressions.{AttributeReference, AttributeSet, Expression,
-  PredicateHelper, SubqueryExpression}
-import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project}
-import org.apache.spark.sql.execution.PartitionedFileUtil
-import org.apache.spark.sql.execution.datasources.{FilePartition, HadoopFsRelation, LogicalRelation}
 
 /** Scale-adaptive input fan-out (guide §2.5 "input skew: one huge
   * unsplittable file ... repartition immediately after the read").
@@ -19,69 +14,18 @@ import org.apache.spark.sql.execution.datasources.{FilePartition, HadoopFsRelati
   * already yields at least `defaultParallelism` splits, so at scale this is
   * a no-op and no extra shuffle of the payload is ever paid.
   */
-object Fanout extends PredicateHelper {
+object Fanout {
   /** Repartition `df` to `defaultParallelism` when its plan yields fewer
-    * than a quarter of the available slots; identity otherwise.
+    * than a quarter of the available slots; identity otherwise. The
+    * partition probe is one SQL execution that plans the query; over an
+    * exchange, an adaptive plan also runs the shuffle map stages as a job.
+    * Counting a file scan's splits from its file index instead would copy
+    * the split rules of Spark's `FileSourceScanExec.createReadRDD`; on the
+    * `neardup` benchmark that saved no CPU beyond run-to-run noise.
     */
   def ensure(df: DataFrame): DataFrame = {
     val want = df.sparkSession.sparkContext.defaultParallelism
-    if (partitions(df).toLong * 4 < want) df.repartition(want) else df
-  }
-
-  /** The partitions `df` is read in: [[scanSplits]] when it can tell, else
-    * the partition count of the planned query (a SQL execution that plans
-    * the whole query, and runs the shuffles an adaptive plan has to run
-    * before it knows its partitions).
-    */
-  private[ops] def partitions(df: DataFrame): Int =
-    scanSplits(df).getOrElse(df.rdd.getNumPartitions)
-
-  /** The split count of a file scan under projections and partition
-    * filters, from the relation's cached file index and Spark's own split
-    * rules (`FilePartition.maxSplitBytes`, `PartitionedFileUtil.splitFiles`,
-    * `FilePartition.getFilePartitions`, as the file source scan applies
-    * them), without planning the query. `None` for any other plan: a
-    * bucketed or metadata-column scan, a filter that is not a
-    * deterministic predicate over partition columns only, or any operator
-    * but a projection or a filter.
-    */
-  private[ops] def scanSplits(df: DataFrame): Option[Int] = {
-    def chain(p: LogicalPlan, filters: Seq[Expression]): Option[Int] = p match {
-      case Project(list, child) if list.forall(plain) => chain(child, filters)
-      case Filter(cond, child) => chain(child, filters ++ splitConjunctivePredicates(cond))
-      case l: LogicalRelation => l.relation match {
-        case fs: HadoopFsRelation if fs.bucketSpec.isEmpty && !l.isStreaming &&
-            l.output.length == fs.schema.length =>
-          val partCols = AttributeSet(l.output.filter(a => fs.partitionSchema.fieldNames.contains(a.name)))
-          val onPartitions = (e: Expression) =>
-            plain(e) && e.references.nonEmpty && e.references.subsetOf(partCols)
-          // the file index prunes by column name: spell each as the relation does
-          if (filters.forall(onPartitions)) Some(splits(fs, filters.map(_.transform {
-            case a: AttributeReference => a.withName(l.output.find(_.exprId == a.exprId).get.name)
-          })))
-          else None
-        case _ => None
-      }
-      case _ => None
-    }
-    chain(df.queryExecution.analyzed, Nil)
-  }
-
-  /** Deterministic and free of subqueries: what the planner pushes to a scan. */
-  private def plain(e: Expression): Boolean = e.deterministic && !SubqueryExpression.hasSubquery(e)
-
-  /** Split count of `fs` read with `partitionFilters`. */
-  private def splits(fs: HadoopFsRelation, partitionFilters: Seq[Expression]): Int = {
-    val session = fs.sparkSession
-    val selected = fs.location.listFiles(partitionFilters, Nil)
-    val maxSplitBytes = FilePartition.maxSplitBytes(session, selected)
-    val files = selected.flatMap { dir =>
-      dir.files.flatMap { f =>
-        val path = f.getPath
-        PartitionedFileUtil.splitFiles(f, path,
-          fs.fileFormat.isSplitable(session, fs.options, path), maxSplitBytes, dir.values)
-      }
-    }.sortBy(_.length)(Ordering[Long].reverse)
-    FilePartition.getFilePartitions(session, files, maxSplitBytes).length
+    val have = df.rdd.getNumPartitions
+    if (have.toLong * 4 < want) df.repartition(want) else df
   }
 }

@@ -13,6 +13,13 @@ object GraftShim {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
+  /** The session's `spark.sql.autoBroadcastJoinThreshold` in bytes; -1
+    * when broadcasting by size is off.
+    */
+  def broadcastThreshold(spark: org.apache.spark.sql.SparkSession): Long =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.conf.autoBroadcastJoinThreshold
+
   /** Register a SQL function into a running session's registry. */
   def registerFunction(spark: org.apache.spark.sql.SparkSession,
                        name: org.apache.spark.sql.catalyst.FunctionIdentifier,

@@ -158,6 +158,31 @@ class DedupIdentitySpec extends SparkSpec {
     assert(one(40L) != 0L && Dedup.clusters(chain).collect().forall(_.getLong(1) == 0L))
   }
 
+  test("withClusterId: driver-held labels attach by lookup only within the broadcast threshold") {
+    val pre = frame(corpus(29L, 50)).select(col("id").as("_sid"), shingles(col("text"), 3).as("_sh"))
+      .localCheckpoint()
+    val pairs = Dedup.verifiedPairsPre(pre, 64, 32, 0.8).localCheckpoint()
+    val ids = pre.select(col("_sid").as("id"))
+    val nodes = Dedup.clusters(pairs).count()
+    assert(nodes > 20)
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    /** (whether the labels attach by lookup, the labelled rows) at `threshold` bytes. */
+    def attach(threshold: Long): (Boolean, Seq[String]) = {
+      spark.conf.set(key, threshold.toString)
+      try {
+        val labeled = Dedup.withClusterId(ids, "id", pairs)
+        (labeled.queryExecution.analyzed.toString.contains("component_label("), sorted(labeled))
+      } finally spark.conf.unset(key)
+    }
+    // two longs per node: at the threshold the lookup, one byte under it the join
+    val (atLookup, atRows) = attach(16 * nodes)
+    val (underLookup, underRows) = attach(16 * nodes - 1)
+    assert(atLookup && !underLookup)
+    assert(!attach(-1)._1)
+    assert(atRows == underRows)
+    assert(atRows == forcedDistributed(sorted(Dedup.withClusterId(ids, "id", pairs))))
+  }
+
   test("short docs share no LSH bucket and stay singletons") {
     val docs = (0 until 2000).map(i => (i.toLong, Seq("a", "b", "c", "d").take(1 + i % 4).mkString(" ")))
       .toDF("id", "text")
@@ -204,13 +229,13 @@ class DedupIdentitySpec extends SparkSpec {
     (pages ++ copies).zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("id", "text")
       .repartition(3).write.parquet(dir)
     val df = spark.read.parquet(dir)
-    // executions: the shingle checkpoint, the pair checkpoint, the
-    // LocalDispatch collect and this collect (the fan-out check plans
-    // nothing); jobs: one for the shingles, four for the pairs (band
-    // shuffle, shingle broadcast, pair-distinct shuffle, result), the
-    // collect, and three for the labels, which attach by a lookup (size
-    // shuffle, size broadcast, result)
+    // executions: the fan-out probe, the shingle checkpoint, the pair
+    // checkpoint, the LocalDispatch collect and this collect; jobs: one
+    // for the shingles, four for the pairs (band shuffle, shingle
+    // broadcast, pair-distinct shuffle, result), the collect, and three
+    // for the labels, which attach by a lookup (size shuffle, size
+    // broadcast, result)
     val counts = SparkEvents.count(spark)(Dedup.nearDupDedup(df, "id", "text").collect())
-    assert(counts == SparkEvents.Counts(jobs = 9, executions = 4))
+    assert(counts == SparkEvents.Counts(jobs = 9, executions = 5))
   }
 }
