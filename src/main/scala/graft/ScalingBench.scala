@@ -4,6 +4,9 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftshim.GraftShim
+
+import graft.runtime.GraftMetricsListener
 
 /** Two-cluster-size scaling evidence (BASELINE.json north_rule): the same
   * feature-extraction job over the SAME parquet input at N and 4N
@@ -48,48 +51,17 @@ object ScalingBench {
     (System.nanoTime() - t0) / 1e9
   }
 
-  /** Per-stage profile of one timed run: where does wall time go at each
-    * parallelism level (scan/extract vs shuffle/window), and how much of the
-    * task time is GC. Diagnostic for the north-rule scaling investigation.
+  /** The timed run with its per-stage task metrics: where does wall time go
+    * at each parallelism level (scan/extract vs shuffle/window), and how
+    * much of the task time is GC. Diagnostic for the north-rule scaling
+    * investigation.
     */
-  private final class StageProfiler extends org.apache.spark.scheduler.SparkListener {
-    final case class Row(var name: String = "", var tasks: Int = 0,
-                         var wallMs: Long = 0, var runMs: Long = 0,
-                         var cpuMs: Long = 0, var gcMs: Long = 0,
-                         var inBytes: Long = 0, var shufRead: Long = 0,
-                         var shufWrite: Long = 0)
-    val stages = new java.util.concurrent.ConcurrentHashMap[Int, Row]()
-    private def row(id: Int) = stages.computeIfAbsent(id, _ => Row())
-
-    override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-      val m = te.taskMetrics
-      if (m != null) {
-        val r = row(te.stageId)
-        r.synchronized {
-          r.tasks += 1
-          r.runMs += m.executorRunTime
-          r.cpuMs += m.executorCpuTime / 1000000
-          r.gcMs += m.jvmGCTime
-          r.inBytes += m.inputMetrics.bytesRead
-          r.shufRead += m.shuffleReadMetrics.totalBytesRead
-          r.shufWrite += m.shuffleWriteMetrics.bytesWritten
-        }
-      }
-    }
-    override def onStageCompleted(sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-      val i = sc.stageInfo
-      val r = row(i.stageId)
-      r.name = i.name.takeWhile(_ != '\n').take(60)
-      r.wallMs = (for (s <- i.submissionTime; c <- i.completionTime) yield c - s).getOrElse(-1L)
-    }
-    def report(): Unit = {
-      import scala.jdk.CollectionConverters._
-      val rows = stages.asScala.toSeq.sortBy(_._1)
-      println(f"${"stage"}%5s ${"tasks"}%5s ${"wall_s"}%7s ${"run_s"}%8s ${"cpu_s"}%8s ${"gc_s"}%7s ${"in_MB"}%8s ${"sr_MB"}%7s ${"sw_MB"}%7s  name")
-      rows.foreach { case (id, r) =>
-        println(f"$id%5d ${r.tasks}%5d ${r.wallMs / 1e3}%7.1f ${r.runMs / 1e3}%8.1f ${r.cpuMs / 1e3}%8.1f ${r.gcMs / 1e3}%7.1f ${r.inBytes / 1e6}%8.0f ${r.shufRead / 1e6}%7.0f ${r.shufWrite / 1e6}%7.0f  ${r.name}")
-      }
-    }
+  private def profiledRun(spark: SparkSession, inputPath: String): (Double, GraftMetricsListener) = {
+    val prof = new GraftMetricsListener
+    spark.sparkContext.addSparkListener(prof)
+    val timed = runOnce(spark, inputPath)
+    GraftShim.drainListeners(spark.sparkContext)
+    (timed, prof)
   }
 
   def main(args: Array[String]): Unit = args.headOption match {
@@ -133,15 +105,11 @@ object ScalingBench {
       // across host-contention draws (the work is constant), so
       // taskSec/wall = effective cores separates true scaling loss from
       // external noise on a shared host
-      val prof = new StageProfiler
-      s.sparkContext.addSparkListener(prof)
-      val timed = runOnce(s, path)
-      Thread.sleep(1500) // listener bus drain
-      import scala.jdk.CollectionConverters._
-      val rows = prof.stages.asScala.values
-      val taskSec = rows.map(_.runMs).sum / 1e3
-      val cpuSec = rows.map(_.cpuMs).sum / 1e3
-      val gcSec = rows.map(_.gcMs).sum / 1e3
+      val (timed, prof) = profiledRun(s, path)
+      val rows = prof.stageRows.map(_._2)
+      val taskSec = rows.map(_.runTimeMs).sum / 1e3
+      val cpuSec = rows.map(_.cpuTimeNs).sum / 1e9
+      val gcSec = rows.map(_.gcTimeMs).sum / 1e3
       println(f"""{"cores":$cores,"warmupSec":$warm%.2f,"sec":$timed%.2f,""" +
         f""""taskSec":$taskSec%.1f,"cpuSec":$cpuSec%.1f,"gcSec":$gcSec%.1f,""" +
         f""""effectiveCores":${taskSec / timed}%.1f}""")
@@ -154,12 +122,12 @@ object ScalingBench {
       val path = args(2)
       val s = session(cores)
       val warm = runOnce(s, path)
-      val prof = new StageProfiler
-      s.sparkContext.addSparkListener(prof)
-      val timed = runOnce(s, path)
-      Thread.sleep(2000) // let the listener bus drain
+      val (timed, prof) = profiledRun(s, path)
       println(f"""{"cores":$cores,"warmupSec":$warm%.2f,"sec":$timed%.2f}""")
-      prof.report()
+      println(f"${"stage"}%5s ${"tasks"}%5s ${"wall_s"}%7s ${"run_s"}%8s ${"cpu_s"}%8s ${"gc_s"}%7s ${"in_MB"}%8s ${"sr_MB"}%7s ${"sw_MB"}%7s  name")
+      prof.stageRows.foreach { case (id, r) =>
+        println(f"$id%5d ${r.tasks}%5d ${r.wallMs / 1e3}%7.1f ${r.runTimeMs / 1e3}%8.1f ${r.cpuTimeNs / 1e9}%8.1f ${r.gcTimeMs / 1e3}%7.1f ${r.inputBytes / 1e6}%8.0f ${r.shuffleBytesRead / 1e6}%7.0f ${r.shuffleBytesWritten / 1e6}%7.0f  ${r.name}")
+      }
       s.stop()
 
     case Some("report") =>

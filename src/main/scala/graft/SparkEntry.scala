@@ -1078,8 +1078,8 @@ object SparkEntry {
       G.hashNamed.map(n => (n.substring(0, 32), G.bytes(n)))
         .toDF("file_hash", "payload")
         .select(col("file_hash"),
-          cnf_extract(col("payload"), graft.functions.CnfExtract.DefaultMaxBytes,
-            graft.functions.CnfExtract.DefaultMaxOps, graft.core.Compression.Auto)
+          cnf_extract(col("payload"), graft.functions.DocExtract.DefaultMaxBytes,
+            graft.functions.DocExtract.DefaultMaxOps, graft.core.Compression.Auto)
             .getField("instance_id").as("gbd"))
         .orderBy(col("file_hash"))
     }),

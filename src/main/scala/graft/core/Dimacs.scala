@@ -522,6 +522,7 @@ object Dimacs {
     */
   def isoHashWcnf(buf: Array[Byte]): String = {
     val doc = WcnfBase.parse(buf)
+    KernelBudget.checkVars(doc.nVars)
     val n = doc.nVars
     val hardNeg = new Array[Long](n + 1)
     val hardPos = new Array[Long](n + 1)

@@ -31,7 +31,7 @@ object OpbBase {
     java.lang.Double.parseDouble(sb.toString)
   }
 
-  private final class TermSum(in: ByteScanner) {
+  private final class TermSum(in: ByteScanner, budget: KernelBudget) {
     val coeffs = new ArrayBuffer[Double]
     var min = 0.0
     var max = 0.0
@@ -42,6 +42,7 @@ object OpbBase {
     in.skipWhitespace()
     while (in.ch != ';' && in.ch != '>' && in.ch != '=') {
       if (in.eof) throw new DocParseException("term list without ';' or a relational operator")
+      budget.charge(1)
       val coeff = readNumber(in)
       in.skipWhitespace()
       if (in.ch == 'x') {
@@ -65,8 +66,8 @@ object OpbBase {
   private val REL_GE = 0
   private val REL_EQ = 1
 
-  private final class Constr(in: ByteScanner) {
-    val terms = new TermSum(in)
+  private final class Constr(in: ByteScanner, budget: KernelBudget) {
+    val terms = new TermSum(in, budget)
     val rel: Int =
       if (in.ch == '>') { in.skipString(">="); REL_GE }
       else { in.skip(); REL_EQ } // '='
@@ -104,7 +105,11 @@ object OpbBase {
     }
   }
 
-  def extract(buf: Array[Byte]): Array[Double] = {
+  /** Charges one op per term read (objective and constraints); raises
+    * [[KernelBudget.KernelTimeout]] past `maxOps`.
+    */
+  def extract(buf: Array[Byte], maxOps: Long = KernelBudget.Unlimited): Array[Double] = {
+    val budget = new KernelBudget(maxOps)
     val in = new ByteScanner(buf)
     var nVars = 0
     var nConstraints = 0L
@@ -130,7 +135,7 @@ object OpbBase {
           in.skipLine()
         } else {
           seenObj = true
-          val obj = new TermSum(in)
+          val obj = new TermSum(in, budget)
           objTerms = obj.coeffs.length.toLong
           objMaxVal = obj.max
           objMinVal = obj.min
@@ -141,7 +146,7 @@ object OpbBase {
         }
       } else {
         nConstraints += 1
-        val constr = new Constr(in)
+        val constr = new Constr(in, budget)
         if (constr.terms.maxVar > nVars) nVars = constr.terms.maxVar
         if (constr.unsat) triviallyUnsat = true
         if (constr.assignment) nAssignments += 1

@@ -47,9 +47,9 @@ object WcnfBase {
     @inline def featureHard(c: Int): Boolean = hard(c) || weights(c) == 0L
   }
 
-  /** The one WCNF reader, shared by the features and the isohash. Raises
-    * [[KernelBudget.KernelMemout]] for a doc past the variable budget, since
-    * both size arrays by variable id.
+  /** The one WCNF reader, shared by the features, the isohash and the
+    * fused extract. Each sizes arrays by variable id, so each checks
+    * `nVars` against its variable budget after the parse.
     */
   def parse(buf: Array[Byte]): WcnfDoc = {
     val in = new ByteScanner(buf)
@@ -93,11 +93,17 @@ object WcnfBase {
         offsets.add(lits.size)
       }
     }
-    KernelBudget.checkVars(nVars)
     new WcnfDoc(lits.toArray, offsets.toArray, weights.toArray, hard.toArray, nVars)
   }
 
-  def extract(buf: Array[Byte]): Array[Double] = extract(parse(buf))
+  /** Raises [[KernelBudget.KernelMemout]] for a doc past the default
+    * variable budget.
+    */
+  def extract(buf: Array[Byte]): Array[Double] = {
+    val doc = parse(buf)
+    KernelBudget.checkVars(doc.nVars)
+    extract(doc)
+  }
 
   def extract(doc: WcnfDoc): Array[Double] = {
     val nVars = doc.nVars

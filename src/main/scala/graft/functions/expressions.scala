@@ -90,9 +90,16 @@ object DocKernels {
   private def status(parseOk: Boolean, limited: Boolean, timedOut: Boolean,
                      decodeFailed: Boolean): InternalRow =
     InternalRow(null, null, parseOk, limited, timedOut, decodeFailed)
+  private def ok(hash: String, features: Array[Double]): InternalRow =
+    InternalRow(UTF8String.fromString(hash), row(features), true, false, false, false)
 
-  /** See [[CnfExtract]]; a null doc is a row of all-false flags. */
-  def cnf_extract(raw: Array[Byte], maxBytes: Int, maxOps: Long, codec: UTF8String): InternalRow =
+  /** The envelope of [[DocExtract]], the same for every format: a null doc
+    * is a row of all-false flags; the byte budget applies to the payload,
+    * then (after the one decompress) to the doc; a malformed doc is a parse
+    * error. `body` parses the doc and checks the op and variable budgets.
+    */
+  private def extract(raw: Array[Byte], maxBytes: Int, codec: UTF8String)(
+      body: Array[Byte] => InternalRow): InternalRow =
     if (raw == null) status(false, false, false, false)
     else if (raw.length > maxBytes) status(false, true, false, false)
     else {
@@ -101,20 +108,41 @@ object DocKernels {
         else try Compression.decompress(raw, codec.toString, maxBytes)
         catch { case _: DocParseException => return status(false, false, false, true) }
       if (doc.length > maxBytes) status(false, true, false, false)
-      else try {
-        // tokenize once; the literal count IS the op count of the linear
-        // kernel loops that follow, so the time budget is checked before any
-        // of them, and the variable-array budget before they allocate
-        val scan = new CnfScan(doc, hash = true)
-        if (scan.nLits.toLong > maxOps) status(true, false, true, false)
-        else {
-          val hash = scan.gbdHash
-          if (KernelBudget.overVars(scan.nVars, maxBytes)) status(true, true, false, false)
-          else InternalRow(UTF8String.fromString(hash), row(CnfBase.extract(scan)),
-            true, false, false, false)
-        }
-      } catch {
+      else try body(doc) catch {
         case _: DocParseException => status(false, false, false, false)
+      }
+    }
+
+  def cnf_extract(raw: Array[Byte], maxBytes: Int, maxOps: Long, codec: UTF8String): InternalRow =
+    extract(raw, maxBytes, codec) { doc =>
+      // tokenize once; the literal count IS the op count of the linear
+      // kernel loops that follow, so the time budget is checked before any
+      // of them, and the variable-array budget before they allocate
+      val scan = new CnfScan(doc, hash = true)
+      if (scan.nLits.toLong > maxOps) status(true, false, true, false)
+      else {
+        val hash = scan.gbdHash
+        if (KernelBudget.overVars(scan.nVars, maxBytes)) status(true, true, false, false)
+        else ok(hash, CnfBase.extract(scan))
+      }
+    }
+
+  def wcnf_extract(raw: Array[Byte], maxBytes: Int, maxOps: Long, codec: UTF8String): InternalRow =
+    extract(raw, maxBytes, codec) { doc =>
+      val parsed = WcnfBase.parse(doc)
+      if (parsed.lits.length.toLong > maxOps) status(true, false, true, false)
+      else if (KernelBudget.overVars(parsed.nVars, maxBytes)) status(true, true, false, false)
+      else ok(Dimacs.gbdHashWcnf(doc), WcnfBase.extract(parsed))
+    }
+
+  /** The OPB parse is the feature pass; it charges each term as it reads it. */
+  def opb_extract(raw: Array[Byte], maxBytes: Int, maxOps: Long, codec: UTF8String): InternalRow =
+    extract(raw, maxBytes, codec) { doc =>
+      try {
+        val features = OpbBase.extract(doc, maxOps)
+        ok(Dimacs.gbdHashOpb(doc), features)
+      } catch {
+        case _: KernelBudget.KernelTimeout => status(true, false, true, false)
       }
     }
 
@@ -256,6 +284,9 @@ object FeatureSchemas {
   val opb: StructType = struct(OpbBase.featureNames)
   val gates: StructType = struct(Gates.featureNames)
 
+  /** The base-feature struct of each format that has one. */
+  val of: Map[String, StructType] = Map(DocFormat.Cnf -> cnf, DocFormat.Wcnf -> wcnf, DocFormat.Opb -> opb)
+
   val sani: StructType = StructType(Seq(
     StructField("head_vars", DoubleType, nullable = false),
     StructField("head_clauses", DoubleType, nullable = false),
@@ -275,14 +306,9 @@ object FeatureSchemas {
   * gbdc extractor invocation per document (SURVEY.md §2.4 A2-A4).
   */
 case class ExtractFeatures(child: Expression, format: String) extends DocKernelExpression {
-  require(Seq(DocFormat.Cnf, DocFormat.Wcnf, DocFormat.Opb).contains(format),
-    s"extract_features supports cnf|wcnf|opb, got $format")
+  require(FeatureSchemas.of.contains(format), s"extract_features supports cnf|wcnf|opb, got $format")
 
-  override def dataType: StructType = format match {
-    case DocFormat.Cnf => FeatureSchemas.cnf
-    case DocFormat.Wcnf => FeatureSchemas.wcnf
-    case _ => FeatureSchemas.opb
-  }
+  override def dataType: StructType = FeatureSchemas.of(format)
 
   override def prettyName: String = s"${format}_features"
   override lazy val replacement: Expression = docCall(DocKernels, prettyName)
@@ -290,49 +316,50 @@ case class ExtractFeatures(child: Expression, format: String) extends DocKernelE
     copy(child = newChild)
 }
 
-object CnfExtract {
+object DocExtract {
   /** Default per-document byte budget ([[KernelBudget.DefaultMaxBytes]]).
     * Bytes alone do not bound memory, so the same budget also caps each
-    * variable-indexed array (see [[overVarBudget]]). Everything else the
+    * variable-indexed array ([[KernelBudget.overVars]]). Everything else the
     * kernel allocates is linear in the payload, so memory stays a small
     * multiple of the budget.
     */
   val DefaultMaxBytes: Int = KernelBudget.DefaultMaxBytes
 
-  /** [[KernelBudget.overVars]]: the variable budget at this byte budget. */
-  def overVarBudget(maxVar: Int, maxBytes: Int): Boolean = KernelBudget.overVars(maxVar, maxBytes)
-
-  /** Default per-document op budget (clause-literal visits — the unit the
-    * feature kernels loop over; see [[graft.core.KernelBudget]]). The
-    * deterministic TIME-limit analog of ResourceLimits.h next to the byte
-    * (memory) cap above: bytes bound allocation, ops bound work, and the
-    * two bind independently — a comment-heavy doc is byte-big but op-small,
-    * a dense single-digit-literal doc is op-big at few bytes. 1<<26 is ~2s
-    * of kernel work per document; the sf corpora use a few thousand ops.
+  /** Default per-document op budget (clause-literal visits, or OPB terms —
+    * the unit the feature kernels loop over; see [[graft.core.KernelBudget]]).
+    * The deterministic TIME-limit analog of ResourceLimits.h next to the
+    * byte (memory) cap above: bytes bound allocation, ops bound work, and
+    * the two bind independently — a comment-heavy doc is byte-big but
+    * op-small, a dense single-digit-literal doc is op-big at few bytes.
+    * 1<<26 is ~2s of kernel work per document; the sf corpora use a few
+    * thousand ops.
     */
   val DefaultMaxOps: Long = 1L << 26
 
-  val schema: StructType = StructType(Seq(
+  def schema(format: String): StructType = StructType(Seq(
     StructField("instance_id", StringType, nullable = true),
-    StructField("features", FeatureSchemas.cnf, nullable = true),
-    StructField("parse_ok", org.apache.spark.sql.types.BooleanType, nullable = false),
-    StructField("limited", org.apache.spark.sql.types.BooleanType, nullable = false),
-    StructField("timed_out", org.apache.spark.sql.types.BooleanType, nullable = false),
-    StructField("decode_failed", org.apache.spark.sql.types.BooleanType, nullable = false)))
+    StructField("features", FeatureSchemas.of(format), nullable = true),
+    StructField("parse_ok", BooleanType, nullable = false),
+    StructField("limited", BooleanType, nullable = false),
+    StructField("timed_out", BooleanType, nullable = false),
+    StructField("decode_failed", BooleanType, nullable = false)))
 }
 
-/** Fused identity + features: one evaluation tokenizes the doc once into
-  * both the literal pool and the gbd_hash byte stream ([[CnfScan]]), then
-  * computes the full base-feature vector — the per-row hot path of
-  * FeatureJob. Never null: a malformed doc yields
-  * (null, null, parse_ok=false, ...), a doc over the byte budget — or whose
-  * largest variable id would size a variable-indexed array past it —
-  * yields limited=true, and a doc over the op budget (total literal count —
-  * the exact work unit of the linear feature loops, known after the parse)
-  * yields timed_out=true, so the status column needs no second evaluation
-  * and one pathological page cannot stall a stage at 10^12-doc scale. Both
-  * budgets are deterministic: the same doc gets the same outcome on every
-  * executor and every retry (resume-checksum safe).
+/** Fused identity + features of a cnf, wcnf or opb doc, the per-row hot
+  * path of FeatureJob: one evaluation parses the doc once (for cnf into
+  * both the literal pool and the gbd_hash byte stream, [[CnfScan]]), then
+  * computes the full base-feature vector. Never null: a malformed doc
+  * yields (null, null, parse_ok=false, ...), a doc over the byte budget —
+  * or whose largest variable id would size a variable-indexed array past
+  * it — yields limited=true, and a doc over the op budget (total literal
+  * count, or OPB term count — the exact work unit of the linear feature
+  * loops) yields timed_out=true, so the status column needs no second
+  * evaluation and one pathological page cannot stall a stage at
+  * 10^12-doc scale. `instance_id` and `features` are set exactly on the
+  * rows with no flag raised, and equal `gbd_hash_<format>` and
+  * `<format>_features` there. Both budgets are deterministic: the same doc
+  * gets the same outcome on every executor and every retry
+  * (resume-checksum safe).
   *
   * `codec` (default "none") fuses compressed-payload ingestion BELOW the
   * parse: the payload decompresses, parses, hashes, and featurizes in ONE
@@ -345,17 +372,19 @@ object CnfExtract {
   * COMPRESSED size first (cheap reject before any inflate work) and the
   * decompressed size second (zip-bomb guard).
   */
-case class CnfExtract(child: Expression, maxBytes: Int = CnfExtract.DefaultMaxBytes,
-                      maxOps: Long = CnfExtract.DefaultMaxOps,
+case class DocExtract(child: Expression, format: String,
+                      maxBytes: Int = DocExtract.DefaultMaxBytes,
+                      maxOps: Long = DocExtract.DefaultMaxOps,
                       codec: String = Compression.None)
     extends DocKernelExpression {
+  require(FeatureSchemas.of.contains(format), s"doc_extract supports cnf|wcnf|opb, got $format")
   require(Compression.codecs.contains(codec), s"unknown codec $codec")
   override def nullable: Boolean = false
-  override def dataType: StructType = CnfExtract.schema
-  override def prettyName: String = "cnf_extract"
+  override def dataType: StructType = DocExtract.schema(format)
+  override def prettyName: String = s"${format}_extract"
   override lazy val replacement: Expression =
     docCall(DocKernels, prettyName, maxBytes, maxOps, codec)
-  override protected def withNewChildInternal(newChild: Expression): CnfExtract =
+  override protected def withNewChildInternal(newChild: Expression): DocExtract =
     copy(child = newChild)
 }
 

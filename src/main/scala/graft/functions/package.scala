@@ -41,15 +41,18 @@ package object functions {
   /** Full base-feature vector as a struct of doubles (one fused pass). */
   def cnf_features(c: Column): Column = col1(ExtractFeatures(_, DocFormat.Cnf))(c)
 
-  /** Fused identity + features + parse/limit/timeout status (FeatureJob hot
-    * path); maxBytes = memory budget, maxOps = deterministic time budget.
+  /** Fused identity + features + parse/limit/timeout/decode status of a
+    * cnf, wcnf or opb doc (FeatureJob hot path); maxBytes = memory budget,
+    * maxOps = deterministic time budget, codec = payload compression.
     */
-  def cnf_extract(c: Column): Column = col1(CnfExtract(_))(c)
-  def cnf_extract(c: Column, maxBytes: Int): Column = col1(CnfExtract(_, maxBytes))(c)
-  def cnf_extract(c: Column, maxBytes: Int, maxOps: Long): Column =
-    col1(CnfExtract(_, maxBytes, maxOps))(c)
-  def cnf_extract(c: Column, maxBytes: Int, maxOps: Long, codec: String): Column =
-    col1(CnfExtract(_, maxBytes, maxOps, codec))(c)
+  def doc_extract(c: Column, format: String, maxBytes: Int = DocExtract.DefaultMaxBytes,
+                  maxOps: Long = DocExtract.DefaultMaxOps,
+                  codec: String = graft.core.Compression.None): Column =
+    col1(DocExtract(_, format, maxBytes, maxOps, codec))(c)
+  def cnf_extract(c: Column, maxBytes: Int = DocExtract.DefaultMaxBytes,
+                  maxOps: Long = DocExtract.DefaultMaxOps,
+                  codec: String = graft.core.Compression.None): Column =
+    doc_extract(c, DocFormat.Cnf, maxBytes, maxOps, codec)
   def wcnf_features(c: Column): Column = col1(ExtractFeatures(_, DocFormat.Wcnf))(c)
   def opb_features(c: Column): Column = col1(ExtractFeatures(_, DocFormat.Opb))(c)
 

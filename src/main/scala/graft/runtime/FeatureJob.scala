@@ -5,8 +5,10 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.GraftShim
 import org.apache.spark.sql.types.{DecimalType, IntegerType}
 
+import graft.core.Compression
 import graft.functions._
 import graft.pages.PageGen
 import graft.temporal.Windows
@@ -14,9 +16,9 @@ import graft.temporal.Windows
 /** The end-to-end feature pipeline (SURVEY.md §2.9), spark-submit-able:
   *
   *   pages(url, warc_ts, html, text, lang)
-  *     -> instance_id = gbd_hash(text)            [N2, streaming md5]
-  *     -> features    = cnf_features(text)        [A1-A4 fused, one pass/row]
-  *     -> status      = ok | parse_error | null_text
+  *     -> (instance_id, features, status) = <format>_extract(text)
+  *        [N2 streaming md5 + A1-A4 features, one fused pass/row]
+  *        status = ok | limit | timeout | parse_error | decode_error | null_text
   *     -> ONE hash repartition on url, sorted within partitions by
   *        (url, warc_ts), feeds the whole window stage: sessionize [W4]
   *        with the lag/delta features [W1] — one Exchange, one Sort, two
@@ -53,18 +55,17 @@ object FeatureJob {
         * over this byte budget gets status="limit" instead of stalling a
         * task — deterministic, so resume checksums are stable. Bytes alone
         * do not bound memory (the 13-byte `2147483647 0` names a 2^31-entry
-        * variable range), so for cnf a doc whose variable-indexed arrays
+        * variable range), so a cnf or wcnf doc whose variable-indexed arrays
         * would pass the same budget (KernelBudget.overVars) is "limit" too
         */
-      maxDocBytes: Int = graft.functions.CnfExtract.DefaultMaxBytes,
+      maxDocBytes: Int = DocExtract.DefaultMaxBytes,
       /** the TIME half of the envelope: deterministic op-count budget
-        * (total literal count — the work unit of the feature kernels); a
-        * doc over it gets status="timeout". Byte and op budgets bind
-        * independently (comment-heavy docs are byte-big/op-small; dense
-        * literal lists are op-big at few bytes). cnf only — the wcnf/opb
-        * hash-form kernels are byte-linear, so their byte cap IS the op cap.
+        * (total literal count, or OPB term count — the work unit of the
+        * feature kernels); a doc over it gets status="timeout". Byte and op
+        * budgets bind independently (comment-heavy docs are
+        * byte-big/op-small; dense literal lists are op-big at few bytes).
         */
-      maxDocOps: Long = graft.functions.CnfExtract.DefaultMaxOps,
+      maxDocOps: Long = DocExtract.DefaultMaxOps,
       /** payload codec: "none" = the doc column holds plain bytes/text;
         * "auto"/"xz"/"gzip"/"bzip2"/"zstd" = it holds COMPRESSED bytes
         * (real gbd corpora ship as .cnf.xz blobs), decompressed inside the
@@ -72,11 +73,8 @@ object FeatureJob {
         * intermediate column exists in the plan, so nothing multi-KB is
         * ever duplicated by projection collapse or shuffled. Corrupt
         * streams and zip bombs surface as status="decode_error" rows.
-        * cnf only: the wcnf/opb branch evaluates hash and features as two
-        * expressions, which would decompress twice — decompress ahead via
-        * decompress_auto() for those formats.
         */
-      codec: String = graft.core.Compression.None)
+      codec: String = Compression.None)
 
   final case class RunReport(
       processedShards: Seq[Int],
@@ -88,59 +86,29 @@ object FeatureJob {
   def shardCol(shards: Int): org.apache.spark.sql.Column =
     pmod(xxhash64(col("url")), lit(shards)).cast(IntegerType)
 
-  /** The per-row feature stage — no shuffle, fully parallel. */
-  def extractStage(pages: DataFrame): DataFrame = extractStage(pages, "cnf")
-
-  def extractStage(pages: DataFrame, format: String): DataFrame =
-    extractStage(pages, format, graft.functions.CnfExtract.DefaultMaxBytes)
-
-  def extractStage(pages: DataFrame, format: String, maxDocBytes: Int): DataFrame =
-    extractStage(pages, format, maxDocBytes, graft.functions.CnfExtract.DefaultMaxOps)
-
-  def extractStage(pages: DataFrame, format: String, maxDocBytes: Int,
-                   maxDocOps: Long): DataFrame =
-    extractStage(pages, format, maxDocBytes, maxDocOps, graft.core.Compression.None)
-
-  def extractStage(pages: DataFrame, format: String, maxDocBytes: Int,
-                   maxDocOps: Long, codec: String): DataFrame = format match {
-    case "cnf" =>
-      // fused hot path: one expression evaluation per row for decompress
-      // (when codec != none) + hash + features; over-budget docs come back
-      // limited/timed_out and corrupt compressed streams decode_failed
-      // without running the kernels (the full ResourceLimits outcome
-      // channel, deterministically)
-      pages
-        .withColumn("_x", cnf_extract(col("text"), maxDocBytes, maxDocOps, codec))
-        .withColumn("instance_id", col("_x.instance_id"))
-        .withColumn("features", col("_x.features"))
-        .withColumn("status",
-          when(col("text").isNull, "null_text")
-            .when(col("_x.decode_failed"), "decode_error")
-            .when(col("_x.limited"), "limit")
-            .when(col("_x.timed_out"), "timeout")
-            .when(!col("_x.parse_ok"), "parse_error")
-            .otherwise("ok"))
-        .drop("_x")
-    case _ =>
-      require(codec == graft.core.Compression.None,
-        s"extractStage($format) evaluates hash and features as two expressions; " +
-          "decompress the payload ahead (decompress_auto) instead of codec=" + codec)
-      val (hash, features) = format match {
-        case "wcnf" => (gbd_hash_wcnf(col("text")), wcnf_features(col("text")))
-        case _ => (gbd_hash_opb(col("text")), opb_features(col("text")))
-      }
-      // byte budget enforced via a lazily-evaluated If: over-budget docs
-      // never reach the kernels (If only evaluates the taken branch)
-      val inBudget = octet_length(col("text")) <= maxDocBytes
-      pages
-        .withColumn("instance_id", when(inBudget, hash))
-        .withColumn("features", when(inBudget, features))
-        .withColumn("status",
-          when(col("text").isNull, "null_text")
-            .when(!inBudget, "limit")
-            .when(col("features").isNull, "parse_error")
-            .otherwise("ok"))
-  }
+  /** The per-row feature stage — no shuffle, fully parallel: one fused
+    * `<format>_extract` evaluation per row decompresses (when codec !=
+    * none), parses, hashes and featurizes; over-budget docs come back
+    * limited/timed_out and corrupt compressed streams decode_failed without
+    * running the kernels (the full ResourceLimits outcome channel,
+    * deterministically).
+    */
+  def extractStage(pages: DataFrame, format: String = DocFormat.Cnf,
+                   maxDocBytes: Int = DocExtract.DefaultMaxBytes,
+                   maxDocOps: Long = DocExtract.DefaultMaxOps,
+                   codec: String = Compression.None): DataFrame =
+    pages
+      .withColumn("_x", doc_extract(col("text"), format, maxDocBytes, maxDocOps, codec))
+      .withColumn("instance_id", col("_x.instance_id"))
+      .withColumn("features", col("_x.features"))
+      .withColumn("status",
+        when(col("text").isNull, "null_text")
+          .when(col("_x.decode_failed"), "decode_error")
+          .when(col("_x.limited"), "limit")
+          .when(col("_x.timed_out"), "timeout")
+          .when(!col("_x.parse_ok"), "parse_error")
+          .otherwise("ok"))
+      .drop("_x")
 
   /** The corpus stage: sessionization + revisit features. One explicit HASH
     * repartition on url serves every window below it (all window specs are
@@ -302,6 +270,7 @@ object FeatureJob {
       }
 
       Files.createDirectories(Paths.get(cfg.outDir))
+      GraftShim.drainListeners(spark.sparkContext)
       Files.write(Paths.get(cfg.outDir, "metrics.json"),
         listener.toJson.getBytes(StandardCharsets.UTF_8))
       RunReport(todo, done.keys.toSeq.sorted, totalRows, System.currentTimeMillis() - t0)

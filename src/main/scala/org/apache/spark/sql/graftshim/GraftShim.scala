@@ -20,6 +20,12 @@ object GraftShim {
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sessionState.conf.autoBroadcastJoinThreshold
 
+  /** Block until the listener bus has delivered every event posted so far
+    * (the last TaskEnd events of a job can still be queued when the job's
+    * action returns).
+    */
+  def drainListeners(sc: org.apache.spark.SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+
   /** Register a SQL function into a running session's registry. */
   def registerFunction(spark: org.apache.spark.sql.SparkSession,
                        name: org.apache.spark.sql.catalyst.FunctionIdentifier,

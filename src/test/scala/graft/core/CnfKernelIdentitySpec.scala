@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.Literal
 import org.scalacheck.Gen
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.CnfExtract
+import graft.functions.{DocExtract, DocFormat}
 import graft.pages.PageGen
 
 /** Bit-identity of the single-pass CNF kernel against [[CnfOracle]], the
@@ -76,7 +76,7 @@ class CnfKernelIdentitySpec extends AnyFunSuite {
 
   private def bits(xs: Array[Double]): Seq[Long] = xs.toSeq.map(java.lang.Double.doubleToRawLongBits)
 
-  /** The fused outcome as the parent's CnfExtract computed it, with the
+  /** The fused outcome as the parent's cnf_extract computed it, with the
     * oracle kernels; a doc over the variable-array budget is `limit` (the
     * parent failed the task or ran out of heap there).
     */
@@ -85,13 +85,13 @@ class CnfKernelIdentitySpec extends AnyFunSuite {
       case Left(_) => ("parse_error", null, null)
       case Right(doc) => outcome(CnfOracle.Dimacs.gbdHashCnf(buf)) match {
         case Left(_) => ("parse_error", null, null)
-        case Right(_) if CnfExtract.overVarBudget(doc.nVars, CnfExtract.DefaultMaxBytes) => ("limit", null, null)
+        case Right(_) if KernelBudget.overVars(doc.nVars, DocExtract.DefaultMaxBytes) => ("limit", null, null)
         case Right(hash) => ("ok", hash, bits(CnfOracle.CnfBase.extract(doc)))
       }
     }
 
   private def fusedExtract(buf: Array[Byte]): (String, String, Seq[Long]) = {
-    val r = CnfExtract(Literal(buf)).eval(InternalRow.empty).asInstanceOf[InternalRow]
+    val r = DocExtract(Literal(buf), DocFormat.Cnf).eval(InternalRow.empty).asInstanceOf[InternalRow]
     val status =
       if (r.getBoolean(3)) "limit" else if (r.getBoolean(4)) "timeout"
       else if (!r.getBoolean(2)) "parse_error" else "ok"

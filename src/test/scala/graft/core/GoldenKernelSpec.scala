@@ -177,7 +177,7 @@ class IdentityKernelSpec extends AnyFunSuite {
     * under it (a value, or `ok`).
     */
   test("doc kernels: huge variable ids give null or limit") {
-    import graft.functions.{CnfExtract, DocKernels => K, GateExtract}
+    import graft.functions.{DocExtract, DocKernels => K, GateExtract}
     val none = org.apache.spark.unsafe.types.UTF8String.fromString(Compression.None)
     def value(f: Array[Byte] => AnyRef): Array[Byte] => String = d => if (f(d) == null) "null" else "value"
     // (kernel, its outcome on a doc, its outcome past the variable budget)
@@ -198,7 +198,7 @@ class IdentityKernelSpec extends AnyFunSuite {
       ("bip_transform", value(K.bip_transform), "null"),
       ("cnf_gate_extract", K.cnf_gate_extract(_, GateExtract.DefaultMaxOps).getUTF8String(1).toString, "limit"),
       ("cnf_extract", { d =>
-        val r = K.cnf_extract(d, CnfExtract.DefaultMaxBytes, CnfExtract.DefaultMaxOps, none)
+        val r = K.cnf_extract(d, DocExtract.DefaultMaxBytes, DocExtract.DefaultMaxOps, none)
         if (r.getBoolean(3)) "limit" else if (r.getBoolean(2)) "ok" else "parse_error"
       }, "limit"))
     val wcnf: Seq[(String, Array[Byte] => String, String)] = Seq(

@@ -95,8 +95,8 @@ class CompressionSpec extends SparkSpec {
         if (r.isNullAt(3)) -1.0 else r.getDouble(3))).toSet
     val p = rows(FeatureJob.extractStage(plain, "cnf"))
     val c = rows(FeatureJob.extractStage(comp, "cnf",
-      graft.functions.CnfExtract.DefaultMaxBytes,
-      graft.functions.CnfExtract.DefaultMaxOps, Compression.Auto))
+      graft.functions.DocExtract.DefaultMaxBytes,
+      graft.functions.DocExtract.DefaultMaxOps, Compression.Auto))
     assert(c.filter(_._1 != "u3") == p,
       "compressed corpus must extract identically to the plain corpus")
     assert(c.find(_._1 == "u3").map(_._3).contains("decode_error"))
@@ -105,14 +105,32 @@ class CompressionSpec extends SparkSpec {
     // (repartition below keeps ConvertToLocalRelation from pre-evaluating
     // the projection — over parquet the Project survives as in production)
     val planStr = FeatureJob.extractStage(comp.repartition(2), "cnf",
-      graft.functions.CnfExtract.DefaultMaxBytes,
-      graft.functions.CnfExtract.DefaultMaxOps, Compression.Auto)
+      graft.functions.DocExtract.DefaultMaxBytes,
+      graft.functions.DocExtract.DefaultMaxOps, Compression.Auto)
       .queryExecution.executedPlan.toString
     assert("cnf_extract".r.findAllIn(planStr).size == 1,
       s"expected exactly one fused cnf_extract in the plan:\n$planStr")
-    // wcnf/opb reject a codec (two-expression branch would decompress twice)
-    intercept[IllegalArgumentException](FeatureJob.extractStage(comp, "wcnf",
-      1 << 20, 1L << 20, Compression.Auto))
+  }
+
+  test("FeatureJob codec for wcnf and opb: compressed corpus == plain corpus in one fused kernel") {
+    import graft.runtime.FeatureJob
+    for ((format, path) <- Seq("wcnf" -> "/gbdc/wcnf_test.wcnf.xz", "opb" -> "/gbdc/opb_test.opb.xz")) {
+      val golden = graft.Fixtures.resourceBytes(path)
+      val small = (if (format == "wcnf") "p wcnf 2 2 9\n9 1 -2 0\n3 2 0\n" else "+1 x1 +1 x2 >= 1 ;\n")
+        .getBytes("UTF-8")
+      val plain = Seq(("u1", golden), ("u2", small)).toDF("url", "text")
+      val comp = Seq(("u1", xz(golden)), ("u2", zstd(small))).toDF("url", "text")
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.select("url", "instance_id", "status", "features").collect().toSet
+      val p = rows(FeatureJob.extractStage(plain, format))
+      assert(p.map(_.getString(2)) == Set("ok"), p)
+      assert(rows(FeatureJob.extractStage(comp, format, codec = Compression.Auto)) == p,
+        s"compressed $format corpus must extract identically to the plain corpus")
+      val planStr = FeatureJob.extractStage(comp.repartition(2), format, codec = Compression.Auto)
+        .queryExecution.executedPlan.toString
+      assert(s"${format}_extract".r.findAllIn(planStr).size == 1 && !planStr.contains("decompress_"),
+        s"expected exactly one fused ${format}_extract and no decompress_ in the plan:\n$planStr")
+    }
   }
 
   test("SQL registry path: decompress_xz usable from SQL text") {

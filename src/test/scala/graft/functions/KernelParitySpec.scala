@@ -177,7 +177,19 @@ class KernelParitySpec extends SparkSpec {
     ("cnf_extract(text, 4096)", cnfKinds :+ "hostile", cnf_extract(col("text"), 4096)),
     ("cnf_extract(text, 4096, 64)", cnfKinds :+ "hostile", cnf_extract(col("text"), 4096, 64L)),
     ("cnf_extract(bin, auto)", Seq("blob", "cnf", "null"),
-      cnf_extract(col("bin"), CnfExtract.DefaultMaxBytes, CnfExtract.DefaultMaxOps, Compression.Auto)),
+      cnf_extract(col("bin"), DocExtract.DefaultMaxBytes, DocExtract.DefaultMaxOps, Compression.Auto)),
+    ("wcnf_extract(text)", docKinds("wcnf_features"), doc_extract(col("text"), DocFormat.Wcnf)),
+    ("wcnf_extract(bin)", docKinds("wcnf_features"), doc_extract(col("bin"), DocFormat.Wcnf)),
+    ("wcnf_extract(n)", docKinds("wcnf_features"), doc_extract(col("n"), DocFormat.Wcnf)),
+    ("wcnf_extract(text, 4096, 64)", docKinds("wcnf_features"), doc_extract(col("text"), DocFormat.Wcnf, 4096, 64L)),
+    ("wcnf_extract(bin, auto)", Seq("blob", "wcnf", "null"),
+      doc_extract(col("bin"), DocFormat.Wcnf, codec = Compression.Auto)),
+    ("opb_extract(text)", docKinds("opb_features"), doc_extract(col("text"), DocFormat.Opb)),
+    ("opb_extract(bin)", docKinds("opb_features"), doc_extract(col("bin"), DocFormat.Opb)),
+    ("opb_extract(n)", docKinds("opb_features"), doc_extract(col("n"), DocFormat.Opb)),
+    ("opb_extract(text, 4096, 8)", docKinds("opb_features"), doc_extract(col("text"), DocFormat.Opb, 4096, 8L)),
+    ("opb_extract(bin, auto)", Seq("blob", "opb", "null"),
+      doc_extract(col("bin"), DocFormat.Opb, codec = Compression.Auto)),
     ("shingles(text, 3)", anyText, shingles(col("text"), 3)),
     ("shingles(n, 3)", anyText, shingles(col("n"), 3)),
     ("minhash_signature(text, 16, 3)", anyText, minhash_signature(col("text"), 16, 3)),
@@ -308,7 +320,9 @@ object KernelParitySpec {
     case other => other.simpleString
   }
 
-  /** Result types at the commit before kernels shared one expression shape. */
+  /** Result types at the commit before kernels shared one expression shape,
+    * plus the wcnf/opb extract kernels added since.
+    */
   val Types: Map[String, String] = Map(
     "bip_transform(bin)" -> "struct<string!,bigint!*2>",
     "bip_transform(n)" -> "struct<string!,bigint!*2>",
@@ -423,6 +437,11 @@ object KernelParitySpec {
     "normalize_wcnf(text)" -> "string",
     "normalize_webtext(n)" -> "string",
     "normalize_webtext(text)" -> "string",
+    "opb_extract(bin)" -> "struct<string,struct<double!*17>,boolean!*4>!",
+    "opb_extract(bin, auto)" -> "struct<string,struct<double!*17>,boolean!*4>!",
+    "opb_extract(n)" -> "struct<string,struct<double!*17>,boolean!*4>!",
+    "opb_extract(text)" -> "struct<string,struct<double!*17>,boolean!*4>!",
+    "opb_extract(text, 4096, 8)" -> "struct<string,struct<double!*17>,boolean!*4>!",
     "opb_features(bin)" -> "struct<double!*17>",
     "opb_features(n)" -> "struct<double!*17>",
     "opb_features(text)" -> "struct<double!*17>",
@@ -455,6 +474,11 @@ object KernelParitySpec {
     "warc_records(bin)" -> "array<struct<string!*4,bigint!,binary!>!>",
     "warc_records(n)" -> "array<struct<string!*4,bigint!,binary!>!>",
     "warc_records(text)" -> "array<struct<string!*4,bigint!,binary!>!>",
+    "wcnf_extract(bin)" -> "struct<string,struct<double!*73>,boolean!*4>!",
+    "wcnf_extract(bin, auto)" -> "struct<string,struct<double!*73>,boolean!*4>!",
+    "wcnf_extract(n)" -> "struct<string,struct<double!*73>,boolean!*4>!",
+    "wcnf_extract(text)" -> "struct<string,struct<double!*73>,boolean!*4>!",
+    "wcnf_extract(text, 4096, 64)" -> "struct<string,struct<double!*73>,boolean!*4>!",
     "wcnf_features(bin)" -> "struct<double!*73>",
     "wcnf_features(n)" -> "struct<double!*73>",
     "wcnf_features(text)" -> "struct<double!*73>",

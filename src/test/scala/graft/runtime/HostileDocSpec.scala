@@ -12,7 +12,7 @@ class HostileDocSpec extends SparkSpec {
   import spark.implicits._
 
   private def statuses(docs: Seq[(String, String)],
-                       maxDocBytes: Int = graft.functions.CnfExtract.DefaultMaxBytes): Map[String, (String, Double)] =
+                       maxDocBytes: Int = graft.functions.DocExtract.DefaultMaxBytes): Map[String, (String, Double)] =
     FeatureJob.extractStage(docs.toDF("url", "text"), "cnf", maxDocBytes)
       .select("url", "status", "features.ccs").collect()
       .map(r => r.getString(0) -> (r.getString(1), if (r.isNullAt(2)) -1.0 else r.getDouble(2))).toMap
