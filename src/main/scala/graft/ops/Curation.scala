@@ -1003,8 +1003,7 @@ object Curation {
   def bigramCoverage(df: DataFrame, idCol: String, textCol: String,
                      vocabSize: Int): DataFrame = {
     require(vocabSize > 0, "vocabSize must be positive")
-    val bgs = df.select(col(idCol),
-        regexp_extract_all(lower(col(textCol)), lit("[a-z0-9_']+"), lit(0)).as("_w"))
+    val bgs = df.select(col(idCol), Relevance.words(col(textCol)).as("_w"))
       .select(col(idCol), explode(expr(
         // greatest(.., 0): a 0- or 1-word doc has no bigrams, and slice
         // rejects a negative length outright. The array(_w) let-binding
@@ -1033,8 +1032,7 @@ object Curation {
                vocabSize: Int): DataFrame = {
     require(vocabSize > 0, "vocabSize must be positive")
     val toks = df.select(col(idCol),
-      explode(regexp_extract_all(lower(col(textCol)), lit("[a-z0-9_']+"), lit(0)))
-        .as("_tok"))
+      explode(Relevance.words(col(textCol))).as("_tok"))
     val vocab = toks.groupBy(col("_tok")).agg(count(lit(1)).as("_cnt"))
       .orderBy(col("_cnt").desc, col("_tok").asc)
       .limit(vocabSize)
@@ -1160,8 +1158,7 @@ object Curation {
     require(nBuckets > 0, "nBuckets must be positive")
     require(scale > 0, "scale must be positive")
     val toks = df.select(col(idCol), col(targetCol).cast("boolean").as("_tgt"),
-        explode(regexp_extract_all(lower(col(textCol)), lit("[a-z0-9_']+"), lit(0)))
-          .as("_tok"))
+        explode(Relevance.words(col(textCol))).as("_tok"))
       .select(col(idCol), col("_tgt"),
         (conv(substring(md5(col("_tok").cast("binary")), 1, 8), 16, 10)
           .cast("long") % nBuckets).as("_b"))
@@ -1260,9 +1257,7 @@ object Curation {
       .filter(_.nonEmpty).map(ws => (ws.mkString(" "), ws.length)).distinct
     require(normed.nonEmpty, "blocklist must contain at least one phrase")
     val phraseTable = normed.toDF("_phrase", "_len")
-    val words = df.select(col(idCol),
-      regexp_extract_all(lower(col(textCol)), lit("[a-z0-9_']+"), lit(0))
-        .as("_w"))
+    val words = df.select(col(idCol), Relevance.words(col(textCol)).as("_w"))
     val hits = normed.map(_._2).distinct.sorted.map { len =>
       words.where(size(col("_w")) >= len)
         .select(col(idCol), explode(expr(

@@ -15,11 +15,15 @@ import graft.functions._
   *                 a (band, bucket) meet) -> signature/Jaccard verify
   *  - simHash:     4x16-bit chunk banding (pigeonhole: hamming<=3 pairs must
   *                 share a chunk) -> popcount verify
-  *  - ngramJaccard: inverted shingle index with document-frequency pruning
-  *                 (hot shingles dropped -> bounded pair fanout)
   *  - embeddingCosine: hyperplane-LSH buckets -> exact cosine verify
+  *  - prefixJaccard / ngramJaccard: prefix-filtered shingle index -> exact
+  *                 Jaccard verify; ngramJaccard first drops hot shingles
+  *  - winnowedOverlap / weightedJaccard: df-capped fingerprint / word
+  *                 index -> per-pair overlap aggregate
   *
-  * Pair outputs are canonicalized (idA < idB) and distinct. Cluster
+  * Every near-duplicate pair operator above blocks the same way
+  * ([[sharedKeyPairs]]): one key row per doc and block, a self-join on the
+  * key, each pair once. Pair outputs are canonicalized (idA < idB). Cluster
   * assignment (connected components over the dup graph) is iterative
   * min-label propagation with a bounded round count — the standard
   * large-graph CC pattern expressed in DataFrames.
@@ -214,6 +218,48 @@ object Dedup {
     sigs.select(posexplode(lsh_bands(col("_sig"), numBands)).as(Seq("_band", "_bucket")),
       col("_id"))
 
+  /** The blocking step of every keyed pair operator: `rows` (`_id`, the
+    * `keys` columns, a payload) meet their own frame on equal keys, each
+    * unordered pair once per shared key row (`x._id < y._id`). Callers read
+    * `x.*` / `y.*`, then `distinct` (a pair can share several keys, and a
+    * repeated input id repeats its pairs) or aggregate per pair. Both join
+    * sides are one plan, so a shuffle join reads ONE exchange of `rows`
+    * (Spark reuses the identical exchange for the second side), and a join
+    * hint on `rows` holds for both sides. Work is the sum of squared block
+    * sizes: callers bound hot keys before ([[dropHotKeys]], bucket caps).
+    */
+  private def sharedKeyPairs(rows: DataFrame, keys: Seq[String]): DataFrame =
+    rows.as("x").join(rows.as("y"),
+      keys.map(k => col(s"x.$k") === col(s"y.$k")).reduce(_ && _) &&
+        col("x._id") < col("y._id"))
+
+  /** Attaches `rows` (`_id` plus `cols`) to both sides of an (id_a, id_b)
+    * pair frame, once on each id: column `c` arrives as `c + "a"` and
+    * `c + "b"`. Inner joins, so a repeated id repeats its pairs.
+    */
+  private def attachBothSides(pairs: DataFrame, rows: DataFrame, cols: Seq[String]): DataFrame = {
+    def side(s: String) = rows.select(col("_id").as(s"id_$s") +: cols.map(c => col(c).as(c + s)): _*)
+    pairs.join(side("a"), Seq("id_a")).join(side("b"), Seq("id_b"))
+  }
+
+  /** Postings per `key` value: one combinable count (a hot key's postings
+    * collapse to one counter per map task before the exchange).
+    */
+  private def keyCounts(postings: DataFrame, key: String): DataFrame =
+    postings.groupBy(col(key)).agg(count(lit(1)).as("_df"))
+
+  /** `postings` without the ones whose `key` occurs in more than `maxDf`
+    * postings (stopword shingles, boilerplate fingerprints: their pair
+    * fan-out is quadratic in df). The hot set joins by `left_anti` with no
+    * broadcast hint: it is usually tiny (Zipf head) and AQE broadcasts it
+    * then, but its worst case is postings/maxDf — corpus-scaled — where a
+    * forced broadcast would exhaust the driver and a shuffled anti-join
+    * degrades gracefully.
+    */
+  private def dropHotKeys(postings: DataFrame, key: String, maxDf: Int): DataFrame =
+    postings.join(keyCounts(postings, key).where(col("_df") > maxDf).select(col(key)),
+      Seq(key), "left_anti")
+
   /** MinHash + LSH near-duplicate PAIRS: (id_a, id_b, est_jaccard) with
     * est_jaccard >= threshold. numBands divides numHashes; rowsPerBand =
     * numHashes/numBands controls the S-curve.
@@ -235,22 +281,16 @@ object Dedup {
       minhash_signature(col(textCol), numHashes, shingleSize).as("_sig"))
       .localCheckpoint()
 
-    val banded = bandedFromSigs(sigs, numBands)
     // self-join within (band, bucket); skew-bounded: a bucket only contains
     // near-identical docs by construction. distinct BEFORE the estimate:
     // est_jaccard is a function of (id_a, id_b), so collapsing multi-band
     // agreement first computes it once per pair, not once per shared band.
-    val a = banded.select(col("_band"), col("_bucket"), col("_id").as("id_a"))
-    val b = banded.select(col("_band"), col("_bucket"), col("_id").as("id_b"))
-    val cands = a.join(b, Seq("_bucket", "_band"))
-      .where(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"))
+    val cands = sharedKeyPairs(bandedFromSigs(sigs, numBands), Seq("_bucket", "_band"))
+      .select(col("x._id").as("id_a"), col("y._id").as("id_b"))
       .distinct()
-    cands
-      .join(sigs.select(col("_id").as("id_a"), col("_sig").as("_sig_a")), Seq("id_a"))
-      .join(sigs.select(col("_id").as("id_b"), col("_sig").as("_sig_b")), Seq("id_b"))
+    attachBothSides(cands, sigs, Seq("_sig"))
       .select(col("id_a"), col("id_b"),
-        minhash_estimate(col("_sig_a"), col("_sig_b")).as("est_jaccard"))
+        minhash_estimate(col("_siga"), col("_sigb")).as("est_jaccard"))
       .where(col("est_jaccard") >= threshold)
       // pair-bounded; preserves the exact pre-refactor semantics when the
       // input carries duplicate ids (the sig join-back would fan out)
@@ -259,98 +299,44 @@ object Dedup {
 
   /** SimHash near-duplicate pairs with hamming distance <= maxHamming
     * (maxHamming <= 3 guaranteed complete by 4-chunk pigeonhole).
-    * tokenHash "md5" uses the SQL-mirrorable signature (exact DuckDB oracle).
+    * tokenHash "md5" uses the SQL-mirrorable signature (exact DuckDB oracle),
+    * "fnv" the fast one; any other value is rejected.
     */
   def simHashPairs(df0: DataFrame, idCol: String, textCol: String,
                    maxHamming: Int = 3, tokenHash: String = "fnv"): DataFrame = {
-    val sigFn = if (tokenHash == "md5") simhash64_md5 _ else simhash64 _
+    val sig = GraftShim.column(SimHash64(GraftShim.expression(col(textCol)), tokenHash))
     val df = Fanout.ensure(df0)
-    val sigs = df.select(col(idCol).as("_id"), sigFn(col(textCol)).as("_sh"))
+    val sigs = df.select(col(idCol).as("_id"), sig.as("_sh"))
     val chunked = sigs.select(col("_id"), col("_sh"),
       posexplode(array((0 until 4).map(k =>
         shiftrightunsigned(col("_sh"), k * 16).bitwiseAND(lit(0xffffL))): _*)).as(Seq("_chunk", "_ckey")))
-    val a = chunked.select(col("_chunk"), col("_ckey"), col("_id").as("id_a"), col("_sh").as("_sh_a"))
-    val b = chunked.select(col("_chunk"), col("_ckey"), col("_id").as("id_b"), col("_sh").as("_sh_b"))
-    a.join(b, Seq("_chunk", "_ckey"))
-      .where(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        bit_count(col("_sh_a").bitwiseXOR(col("_sh_b"))).as("hamming"))
+    sharedKeyPairs(chunked, Seq("_chunk", "_ckey"))
+      .select(col("x._id").as("id_a"), col("y._id").as("id_b"),
+        bit_count(col("x._sh").bitwiseXOR(col("y._sh"))).as("hamming"))
       .where(col("hamming") <= maxHamming)
       .distinct()
   }
 
-  /** Exact n-gram Jaccard pairs via an inverted shingle index. Shingles with
-    * document frequency > maxShingleDf are pruned (stopword shingles would
-    * otherwise create quadratic fanout) — pruning can only LOSE pairs whose
-    * remaining overlap is below threshold anyway when maxShingleDf is set
-    * well above threshold*|docs in a cluster|; the df column reports it.
+  /** Exact n-gram Jaccard pairs via a df-capped shingle index: shingles in
+    * more than `maxShingleDf` documents are dropped first ([[dropHotKeys]];
+    * stopword shingles would otherwise create quadratic fanout), then
+    * [[prefixJaccardPairs]]' candidate-and-verify body runs on what is
+    * left. The reported jaccard is
+    * |prunedA ∩ prunedB| / (fullA + fullB - |prunedA ∩ prunedB|): pruning
+    * can only LOSE pairs (and lower scores) through shared hot shingles,
+    * so set `maxShingleDf` at or above the corpus's largest shingle df, or
+    * use [[prefixJaccardPairs]], to get the exact predicate. A qualifying
+    * pair (jaccard >= t > 0) has pruned-set Jaccard >= reported >= t, so
+    * the prefix filter over pruned sets cannot drop it.
     */
   def ngramJaccardPairs(df: DataFrame, idCol: String, textCol: String,
                         n: Int = 5, threshold: Double = 0.8,
                         maxShingleDf: Int = 100): DataFrame = {
-    val sh = Fanout.ensure(df)
-      .select(col(idCol).as("_id"), shingles(col(textCol), n).as("_sh"))
-      .withColumn("_size", size(col("_sh")))
-    val inverted = sh.select(col("_id"), col("_size"), explode(col("_sh")).as("_g"))
-    // document frequency via groupBy (map-side combine: a hot shingle's
-    // postings collapse to one counter per map task BEFORE the exchange),
-    // then an anti-join drops postings of over-df shingles. The previous
-    // Window.partitionBy(_g) formulation shuffled and sorted every posting
-    // of exactly the shingles being pruned — at web scale the stopword
-    // shingles ARE the shuffle — and ran twice (once per self-join side).
-    // no broadcast HINT on the hot set: it is usually tiny (Zipf head) and
-    // AQE will broadcast it then, but its worst-case size is
-    // postings/maxShingleDf — corpus-scaled — and a forced broadcast of
-    // that would OOM the driver where a shuffled anti-join degrades
-    // gracefully
-    val dfTab = inverted.groupBy(col("_g")).agg(count(lit(1)).as("_df"))
-    val hot = dfTab.where(col("_df") > maxShingleDf).select(col("_g"))
-    val pruned = inverted.join(hot, Seq("_g"), "left_anti")
-    // Candidate generation is PREFIX-FILTERED (SSJoin/PPJoin, see
-    // [[prefixJaccardPairs]]) instead of the previous full postings
-    // self-join + per-pair occurrence count, whose pair stream is
-    // sum(df²) over shingles — the Zipf body dominates it even under the
-    // df cap. Result-equivalence: the reported jaccard is
-    // |prunedA ∩ prunedB| / (fullA + fullB - |prunedA ∩ prunedB|) exactly
-    // as before (verified per candidate by one merge scan); a qualifying
-    // pair (jaccard >= t > 0) has pruned-set Jaccard >= reported >= t, so
-    // the prefix filter over pruned sets at threshold t cannot drop it,
-    // and spurious candidates die in the verify. The PPJoin positional
-    // filter prunes candidates whose first shared canonical-prefix
-    // shingle sits too deep for the required overlap — lossless by the
-    // first-common-token bound (no common token precedes it, so
-    // |prunedA ∩ prunedB| <= min(remaining suffix lengths)).
-    val perDoc = pruned.join(dfTab, Seq("_g"))
-      .groupBy(col("_id"))
-      .agg(sort_array(collect_list(struct(col("_df"), col("_g")))).as("_ord"),
-        sort_array(collect_list(col("_g"))).as("_shp"),
-        min(col("_size")).as("_sizef"))
-      .localCheckpoint()
-    val prefixed = perDoc
-      .select(col("_id"), col("_sizef"), size(col("_ord")).as("_sp"),
-        posexplode(slice(expr("transform(_ord, x -> x._g)"), lit(1),
-          least(size(col("_ord")),
-            size(col("_ord")) - floor(lit(threshold) * size(col("_ord"))).cast("int") + 1))))
-      .select(col("_id"), col("_sizef"), col("_sp"), col("pos").as("_p"), col("col").as("_g"))
-    val cands = prefixed.as("x").join(prefixed.as("y"), col("x._g") === col("y._g"))
-      .where(col("x._id") < col("y._id"))
-      .groupBy(col("x._id").as("id_a"), col("y._id").as("id_b"),
-        col("x._sizef").as("_sa"), col("y._sizef").as("_sb"),
-        col("x._sp").as("_spa"), col("y._sp").as("_spb"))
-      .agg(min(col("x._p")).as("_px"), min(col("y._p")).as("_py"))
-      .where(least(col("_spa") - col("_px"), col("_spb") - col("_py")).cast("double") *
-        (1.0 + threshold) >= lit(threshold) * (col("_sa") + col("_sb")).cast("double") - 1e-9)
-      .select(col("id_a"), col("id_b"))
-    cands
-      .join(perDoc.select(col("_id").as("id_a"), col("_shp").as("_sha"),
-        col("_sizef").as("_sa")), Seq("id_a"))
-      .join(perDoc.select(col("_id").as("id_b"), col("_shp").as("_shb"),
-        col("_sizef").as("_sb")), Seq("id_b"))
-      .withColumn("_common", sorted_common_count(col("_sha"), col("_shb")))
-      .select(col("id_a"), col("id_b"),
-        (col("_common").cast("double") /
-          (col("_sa") + col("_sb") - col("_common")).cast("double")).as("jaccard"))
-      .where(col("jaccard") >= threshold)
+    val posted = shinglePostings(shingleSets(df, idCol, textCol, n))
+    // the pruned per-doc order is materialized ONCE: it feeds the index
+    // AND both verify sides
+    val perDoc = canonicalOrder(posted, dropHotKeys(posted, "_g", maxShingleDf)).localCheckpoint()
+    prefixFilteredJaccard(perDoc, perDoc, threshold)
   }
 
   /** Exact n-gram Jaccard pairs via PREFIX FILTERING (SSJoin, Chaudhuri et
@@ -364,76 +350,87 @@ object Dedup {
     * Because the canonical order puts RARE shingles in the prefix, the
     * postings lists being self-joined are the short ones — the Zipf head
     * that forces q37's cap never enters the index here at all.
-    *
-    * The prefix length uses `|x| - floor(t*|x|) + 1` (floor, not ceil):
-    * one shingle longer than canonical, so float dust in `t*|x|` can only
-    * ADD candidates, never drop a qualifying pair. Candidates are verified
-    * exactly (`array_intersect` on the full sets), so the output equals
-    * the brute-force Jaccard predicate.
-    *
-    * Shape for 100 TB: df is one combiner-friendly aggregate; the
-    * canonical per-doc sort is doc-local (`sort_array` after a
-    * collect_list bounded by the doc's own shingle count); the self-join
-    * touches only prefix postings of rare shingles; verification joins
-    * carry the two shingle arrays only for candidate ids (candidate-bounded,
-    * never corpus-quadratic). No driver materialization, no windows.
+    * Candidates are verified exactly, so the output equals the brute-force
+    * Jaccard predicate.
     */
   def prefixJaccardPairs(df: DataFrame, idCol: String, textCol: String,
                          n: Int = 5, threshold: Double = 0.8): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0, "threshold must be in (0,1]")
     // ONE shingling pass (the nearDupDedup materialization discipline):
-    // the projection feeds the posting explode AND both verify join sides
-    val sh = Fanout.ensure(df)
+    // the projection feeds the postings AND both verify sides
+    val sh = shingleSets(df, idCol, textCol, n).where(col("_size") > 0).localCheckpoint()
+    val posted = shinglePostings(sh)
+    prefixFilteredJaccard(canonicalOrder(posted, posted), sh.withColumnRenamed("_sh", "_set"),
+      threshold)
+  }
+
+  /** (_id, _sh = the doc's sorted distinct n-shingles, _size = their count). */
+  private def shingleSets(df: DataFrame, idCol: String, textCol: String, n: Int): DataFrame =
+    Fanout.ensure(df)
       .select(col(idCol).as("_id"), shingles(col(textCol), n).as("_sh"))
       .withColumn("_size", size(col("_sh")))
-      .where(col("_size") > 0)
-      .localCheckpoint()
-    val posted = sh.select(col("_id"), col("_size"), explode(col("_sh")).as("_g"))
-    val dfTab = posted.groupBy(col("_g")).agg(count(lit(1)).as("_df"))
-    // canonical order + per-doc prefix: sort (df, shingle) pairs doc-locally,
-    // keep the first size - floor(t*size) + 1 (clamped to size), REMEMBER
-    // each kept shingle's 0-based canonical position for the positional
-    // filter below
-    val prefixed = posted.join(dfTab, "_g")
+
+  /** (_id, _size, _g = one shingle) postings of a [[shingleSets]] frame. */
+  private def shinglePostings(sets: DataFrame): DataFrame =
+    sets.select(col("_id"), col("_size"), explode(col("_sh")).as("_g"))
+
+  /** Per doc of `indexed` (a subset of the `posted` postings: whole
+    * shingles dropped, or none): `_ord`, its indexed shingles in the
+    * canonical order (df in `posted`, shingle); `_set`, the same shingles
+    * sorted; `_size`, its FULL shingle count. The canonical sort is
+    * doc-local (`sort_array` after a collect_list bounded by the doc's own
+    * shingle count) and df is one combiner-friendly aggregate.
+    */
+  private def canonicalOrder(posted: DataFrame, indexed: DataFrame): DataFrame =
+    indexed.join(keyCounts(posted, "_g"), Seq("_g"))
       .groupBy(col("_id"))
       .agg(sort_array(collect_list(struct(col("_df"), col("_g")))).as("_ord"),
+        sort_array(collect_list(col("_g"))).as("_set"),
         min(col("_size")).as("_size"))
-      .select(col("_id"), col("_size"),
+
+  /** The candidate-and-verify body of the prefix-filtered Jaccard
+    * operators. `ord` is a [[canonicalOrder]] frame; `sets` holds each
+    * doc's `_set` and `_size` for the verify. A doc's PRUNED size (the
+    * length of its `_ord`) sets its prefix length and the suffix bound of
+    * the positional filter; its FULL size (`_size`) sets the overlap that
+    * bound must reach and the reported Jaccard. With nothing pruned the two
+    * sizes are equal.
+    *
+    * The prefix keeps `|x| - floor(t*|x|) + 1` shingles (floor, not ceil:
+    * one longer than canonical, so float dust in `t*|x|` can only ADD
+    * candidates). Candidates share >= 1 prefix shingle; the pair groupBy
+    * collapses multi-shingle agreement AND computes the PPJoin positional
+    * filter: for a qualifying pair the first shared canonical token g0 lies
+    * in both prefixes with NO common token before it, so
+    * |X ∩ Y| <= min(|X| - pos_x(g0), |Y| - pos_y(g0)) (0-based), and both
+    * position minima are achieved at g0 (canonical positions are monotone
+    * in the global order). Pairs whose bound cannot reach t(|X|+|Y|)/(1+t)
+    * are dropped before the verify; the 1e-9 slack makes float dust only
+    * ever ADD candidates. The verify is ONE merge scan per candidate
+    * (`sorted_common_count`) over the two sets, joined for candidate ids
+    * only.
+    */
+  private def prefixFilteredJaccard(ord: DataFrame, sets: DataFrame,
+                                    threshold: Double): DataFrame = {
+    val prefixed = ord
+      .select(col("_id"), col("_size"), size(col("_ord")).as("_sp"),
         posexplode(slice(expr("transform(_ord, x -> x._g)"), lit(1),
           least(size(col("_ord")),
             size(col("_ord")) - floor(lit(threshold) * size(col("_ord"))).cast("int") + 1))))
-      .select(col("_id"), col("_size"), col("pos").as("_p"), col("col").as("_g"))
-    // candidate pairs share >= 1 prefix shingle; the groupBy collapses
-    // multi-shingle agreement AND computes the PPJoin positional filter:
-    // for a qualifying pair (J >= t) the first shared canonical token g0
-    // lies in both prefixes with NO common token before it, so
-    // |X ∩ Y| <= min(|X| - pos_x(g0), |Y| - pos_y(g0)) (0-based), and both
-    // position minima are achieved at g0 (canonical positions are
-    // monotone in the global (df, shingle) order). Pairs whose bound
-    // cannot reach t(|X|+|Y|)/(1+t) are dropped BEFORE the verify join —
-    // only qualifying pairs are guaranteed kept, which is exactly the
-    // contract (the verify is exact). The 1e-9 slack makes float dust
-    // only ever ADD candidates.
-    val cands = prefixed.as("x").join(prefixed.as("y"), col("x._g") === col("y._g"))
-      .where(col("x._id") < col("y._id"))
+      .select(col("_id"), col("_size"), col("_sp"), col("pos").as("_p"), col("col").as("_g"))
+    val cands = sharedKeyPairs(prefixed, Seq("_g"))
       .groupBy(col("x._id").as("id_a"), col("y._id").as("id_b"),
-        col("x._size").as("_sa"), col("y._size").as("_sb"))
+        col("x._size").as("_sa"), col("y._size").as("_sb"),
+        col("x._sp").as("_spa"), col("y._sp").as("_spb"))
       .agg(min(col("x._p")).as("_px"), min(col("y._p")).as("_py"))
-      .where(least(col("_sa") - col("_px"), col("_sb") - col("_py")).cast("double") *
+      .where(least(col("_spa") - col("_px"), col("_spb") - col("_py")).cast("double") *
         (1.0 + threshold) >= lit(threshold) * (col("_sa") + col("_sb")).cast("double") - 1e-9)
       .select(col("id_a"), col("id_b"))
-    // exact verify: join the full sets back, ONE merge scan per candidate
-    // (sorted_common_count; array_intersect would build a hash set per row)
-    val full = sh.select(col("_id"), col("_sh"), col("_size"))
-    cands
-      .join(full.select(col("_id").as("id_a"), col("_sh").as("_sha"),
-        col("_size").as("_sa")), "id_a")
-      .join(full.select(col("_id").as("id_b"), col("_sh").as("_shb"),
-        col("_size").as("_sb")), "id_b")
-      .withColumn("_common", sorted_common_count(col("_sha"), col("_shb")))
+    attachBothSides(cands, sets, Seq("_set", "_size"))
+      .withColumn("_common", sorted_common_count(col("_seta"), col("_setb")))
       .select(col("id_a"), col("id_b"),
         (col("_common").cast("double") /
-          (col("_sa") + col("_sb") - col("_common")).cast("double")).as("jaccard"))
+          (col("_sizea") + col("_sizeb") - col("_common")).cast("double")).as("jaccard"))
       .where(col("jaccard") >= threshold)
   }
 
@@ -477,11 +474,9 @@ object Dedup {
           java.util.Arrays.asList(ovRows: _*), ovAgg.schema)
         sigs.join(broadcast(ovLocal), Seq("_t", "_bucket"), "left_anti")
       }
-    val a = bounded.select(col("_t"), col("_bucket"), col("_id").as("id_a"), col("_v").as("_va"))
-    val b = bounded.select(col("_t"), col("_bucket"), col("_id").as("id_b"), col("_v").as("_vb"))
-    a.join(b, Seq("_t", "_bucket"))
-      .where(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"), cosine_similarity(col("_va"), col("_vb")).as("cosine"))
+    sharedKeyPairs(bounded, Seq("_t", "_bucket"))
+      .select(col("x._id").as("id_a"), col("y._id").as("id_b"),
+        cosine_similarity(col("x._v"), col("y._v")).as("cosine"))
       .where(col("cosine") >= threshold)
       .distinct()
   }
@@ -763,22 +758,16 @@ object Dedup {
 
   /** LSH candidates of a pre-materialized (_sid, _sh) projection: the
     * distinct (id_a < id_b) pairs sharing any (band, bucket). The banded
-    * frame is computed and shuffled ONCE: both sides of the bucket
-    * self-join read the same exchange (Spark reuses an exchange whose
-    * subtree is identical), so each signature is computed once — a
-    * broadcast self-join evaluates it on both of its sides. The sort-merge
-    * hint keeps the planner from broadcasting one side and keeps the join
-    * streaming at any size.
+    * frame is computed and shuffled ONCE ([[sharedKeyPairs]]), so each
+    * signature is computed once — a broadcast self-join would evaluate it
+    * on both of its sides. The sort-merge hint keeps the planner from
+    * broadcasting one side and keeps the join streaming at any size.
     */
   private[graft] def candidatePairsPre(pre: DataFrame, numHashes: Int,
-                                       numBands: Int): DataFrame = {
-    val banded = bandedPre(pre, numHashes, numBands).hint("merge")
-    banded.as("_x").join(banded.as("_y"),
-        col("_x._bucket") === col("_y._bucket") && col("_x._band") === col("_y._band") &&
-          col("_x._id") < col("_y._id"))
-      .select(col("_x._id").as("id_a"), col("_y._id").as("id_b"))
+                                       numBands: Int): DataFrame =
+    sharedKeyPairs(bandedPre(pre, numHashes, numBands).hint("merge"), Seq("_bucket", "_band"))
+      .select(col("x._id").as("id_a"), col("y._id").as("id_b"))
       .distinct()
-  }
 
   /** LSH candidate generation + exact shingle-Jaccard verify from a
     * pre-materialized (_sid, _sh) projection — the shared pair stage of
@@ -789,10 +778,8 @@ object Dedup {
     */
   private[graft] def verifiedPairsPre(pre: DataFrame, numHashes: Int,
                                       numBands: Int, jaccard: Double): DataFrame = {
-    val sh = withShingles(pre)
-    candidatePairsPre(pre, numHashes, numBands)
-      .join(sh.select(col("_sid").as("id_a"), col("_sh").as("_sa")), Seq("id_a"))
-      .join(sh.select(col("_sid").as("id_b"), col("_sh").as("_sb")), Seq("id_b"))
+    val sh = withShingles(pre).select(col("_sid").as("_id"), col("_sh").as("_s"))
+    attachBothSides(candidatePairsPre(pre, numHashes, numBands), sh, Seq("_s"))
       .where(jaccard_sorted(col("_sa"), col("_sb")) >= jaccard)
       .select(col("id_a"), col("id_b"))
   }
@@ -856,11 +843,9 @@ object Dedup {
     * deque-optimal scan would not change what gets read or shuffled), and
     * winnowing's expected density is 2/(windowW+1) fingerprints per
     * token, so the inverted index is a FRACTION of the all-shingles q37
-    * index. Pairing is the same df-pruned inverted-index self-join as
-    * [[ngramJaccardPairs]]: hot fingerprints (site boilerplate) are
-    * dropped by the maxFpDf anti-join BEFORE the join fan-out, and the
-    * pruned postings join carries only (id, fingerprint) — text never
-    * rides an exchange.
+    * index. Hot fingerprints (site boilerplate) are dropped
+    * ([[dropHotKeys]], maxFpDf) BEFORE the postings self-join fan-out,
+    * which carries only (id, fingerprint) — text never rides an exchange.
     */
   def winnowedOverlapPairs(df0: DataFrame, idCol: String, textCol: String,
                            k: Int = 4, windowW: Int = 5, minShared: Int = 2,
@@ -891,14 +876,7 @@ object Dedup {
          |    END)), 1)), 1)""".stripMargin
     val fps = df.select(col(idCol).as("_id"), expr(fpExpr).as("_fp"))
       .select(col("_id"), explode(col("_fp")).as("_g"))
-    // document-frequency pruning before the self-join fan-out — same
-    // combiner-aggregate + anti-join shape (and rationale) as
-    // ngramJaccardPairs
-    val hot = fps.groupBy(col("_g")).agg(count(lit(1)).as("_df"))
-      .where(col("_df") > maxFpDf).select(col("_g"))
-    val pruned = fps.join(hot, Seq("_g"), "left_anti")
-    pruned.as("x").join(pruned.as("y"), col("x._g") === col("y._g"))
-      .where(col("x._id") < col("y._id"))
+    sharedKeyPairs(dropHotKeys(fps, "_g", maxFpDf), Seq("_g"))
       .groupBy(col("x._id").as("id_a"), col("y._id").as("id_b"))
       .agg(count(lit(1)).as("shared_fps"))
       .where(col("shared_fps") >= minShared)
@@ -1080,9 +1058,9 @@ object Dedup {
     * pages: J_w = Σ_t min(c_a(t), c_b(t)) / Σ_t max(c_a(t), c_b(t)), with
     * Σmax = tot_a + tot_b − Σmin, so only the shared-token join is ever
     * computed and every part is an exact bigint (one terminal division).
-    * Same inverted-index + df-cap discipline as the set variant (the cap
-    * trades hot-token postings for a lower-bounded score; set it above
-    * the corpus max-df to make the score exact).
+    * The word index is df-capped ([[dropHotKeys]]; the cap trades
+    * hot-token postings for a lower-bounded score; set it above the
+    * corpus max-df to make the score exact).
     *
     * Output: id_a, id_b, min_sum, weighted_jaccard (≥ threshold). Scale
     * shape: token counts by combiner groupBy, hot-token anti-join, one
@@ -1090,27 +1068,16 @@ object Dedup {
   def weightedJaccardPairs(df: DataFrame, idCol: String, textCol: String,
                            threshold: Double = 0.5,
                            maxTokenDf: Int = 1000): DataFrame = {
-    val words = regexp_extract_all(lower(col(textCol)),
-      lit("[a-z0-9_']+"), lit(0))
-    val counts = df.select(col(idCol).as("_id"), explode(words).as("_t"))
+    val counts = df.select(col(idCol).as("_id"), explode(Relevance.words(col(textCol))).as("_t"))
       .groupBy(col("_id"), col("_t")).agg(count(lit(1)).as("_c"))
     val tot = counts.groupBy(col("_id")).agg(sum(col("_c")).as("_tot"))
-    val hot = counts.groupBy(col("_t")).agg(count(lit(1)).as("_df"))
-      .where(col("_df") > maxTokenDf).select(col("_t"))
-    val pruned = counts.join(hot, Seq("_t"), "left_anti")
-    val shared = pruned.as("x")
-      .join(pruned.as("y"), col("x._t") === col("y._t"))
-      .where(col("x._id") < col("y._id"))
+    val shared = sharedKeyPairs(dropHotKeys(counts, "_t", maxTokenDf), Seq("_t"))
       .groupBy(col("x._id").as("id_a"), col("y._id").as("id_b"))
       .agg(sum(least(col("x._c"), col("y._c"))).as("min_sum"))
-    shared
-      .join(tot.select(col("_id").as("id_a"), col("_tot").as("_ta")),
-        Seq("id_a"))
-      .join(tot.select(col("_id").as("id_b"), col("_tot").as("_tb")),
-        Seq("id_b"))
+    attachBothSides(shared, tot, Seq("_tot"))
       .select(col("id_a"), col("id_b"), col("min_sum"),
         (col("min_sum").cast("double") /
-          (col("_ta") + col("_tb") - col("min_sum")).cast("double"))
+          (col("_tota") + col("_totb") - col("min_sum")).cast("double"))
           .as("weighted_jaccard"))
       .where(col("weighted_jaccard") >= threshold)
   }

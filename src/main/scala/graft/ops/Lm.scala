@@ -32,9 +32,7 @@ object Lm {
   val Scale: Long = 1000000L
 
   private def words(df: DataFrame, idCol: String, textCol: String) =
-    graft.ops.Fanout.ensure(df).select(col(idCol),
-      regexp_extract_all(lower(col(textCol)), lit("[a-z0-9_']+"), lit(0))
-        .as("_w"))
+    graft.ops.Fanout.ensure(df).select(col(idCol), Relevance.words(col(textCol)).as("_w"))
 
   /** Per-document fluency under an add-one-smoothed bigram LM trained on
     * `lmDf` (defaults to `df` itself — self-scoring; production passes the
@@ -139,9 +137,7 @@ object Lm {
     pairStats(wordTable(df, textCol))
 
   private def wordTable(df: DataFrame, textCol: String): DataFrame =
-    df.select(explode(
-        regexp_extract_all(lower(col(textCol)), lit("[a-z0-9_']+"), lit(0)))
-        .as("w"))
+    df.select(explode(Relevance.words(col(textCol))).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("freq"))
       .withColumn("syms", expr(
         "transform(sequence(1, length(w)), i -> substring(w, i, 1))"))

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -29,13 +29,20 @@ object Relevance {
     */
   val Scale: Long = 1000000L
 
+  /** The corpus's word tokenizer: the lowercased `[a-z0-9_']+` runs of
+    * `text`, as array<string>. Every Column-form word split in `graft.ops`
+    * calls this; SQL texts (lambda bodies, oracles) spell the same regex.
+    */
+  private[ops] def words(text: Column): Column =
+    regexp_extract_all(lower(text), lit("[a-z0-9_']+"), lit(0))
+
   /** Top-`k` salient terms per document by exact-integer tf-idf.
     *
-    * Tokens are the corpus's shared grammar (lowercased `[a-z0-9_']+`
-    * runs — the same tokenizer the simhash/minhash/oov family uses, so
-    * "term" means the same thing across every operator). For each
-    * (document, term): tf = occurrences in the document, df = number of
-    * documents containing the term, n_docs = rows in `df`, and
+    * Tokens are the corpus's shared grammar ([[words]]: lowercased
+    * `[a-z0-9_']+` runs — the same tokenizer the simhash/minhash/oov
+    * family uses, so "term" means the same thing across every operator).
+    * For each (document, term): tf = occurrences in the document, df =
+    * number of documents containing the term, n_docs = rows in `df`, and
     *
     *   score_int = tf * ((scale * n_docs) div df)
     *
@@ -55,8 +62,7 @@ object Relevance {
     require(k > 0, "k must be positive")
     require(scale > 0, "scale must be positive")
     val toks = df.select(col(idCol),
-      explode(regexp_extract_all(lower(col(textCol)), lit("[a-z0-9_']+"), lit(0)))
-        .as("term"))
+      explode(words(col(textCol))).as("term"))
     val tf = toks.groupBy(col(idCol), col("term")).agg(count(lit(1)).as("tf"))
     val dfreq = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
     val nDocs = df.select(count(lit(1)).as("n_docs"))
@@ -102,8 +108,7 @@ object Relevance {
     require(vocabSize > 0, "vocabSize must be positive")
     require(scale > 0, "scale must be positive")
     val toks = df.select(col(idCol),
-      explode(regexp_extract_all(lower(col(textCol)), lit("[a-z0-9_']+"), lit(0)))
-        .as("term"))
+      explode(words(col(textCol))).as("term"))
     val vocab = toks.groupBy(col("term")).agg(count(lit(1)).as("_cnt"))
       .orderBy(col("_cnt").desc, col("term").asc)
       .limit(vocabSize)
@@ -166,8 +171,7 @@ object Relevance {
                      signed: Boolean = true): DataFrame = {
     require(dim > 0, "dim must be positive")
     val toks = df.select(col(idCol),
-      explode(regexp_extract_all(lower(col(textCol)), lit("[a-z0-9_']+"), lit(0)))
-        .as("term"))
+      explode(words(col(textCol))).as("term"))
     val h = md5(col("term").cast("binary"))
     val bucket = pmod(conv(substring(h, 1, 8), 16, 10).cast("long"), lit(dim.toLong))
     val sign =
@@ -228,8 +232,7 @@ object Relevance {
                              k1Milli: Long, bMilli: Long,
                              scale: Long): DataFrame = {
     val toks = df.select(col(idCol),
-      explode(regexp_extract_all(lower(col(textCol)), lit("[a-z0-9_']+"), lit(0)))
-        .as("term"))
+      explode(words(col(textCol))).as("term"))
     val tf = toks.groupBy(col(idCol), col("term")).agg(count(lit(1)).as("tf"))
     val dl = tf.groupBy(col(idCol)).agg(sum(col("tf")).as("dl"))
     val dfreq = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
@@ -311,8 +314,7 @@ object Relevance {
                      blockSpan: Long = 1L << 20): DataFrame = {
     require(blockSpan > 0, "blockSpan must be positive")
     val toks = df.select(col(idCol).cast("long").as("_pb_id"),
-      explode(regexp_extract_all(lower(col(textCol)), lit("[a-z0-9_']+"), lit(0)))
-        .as("term"))
+      explode(words(col(textCol))).as("term"))
     val tf = toks.groupBy(col("term"), col("_pb_id"))
       .agg(count(lit(1)).as("_pb_tf"))
     tf.withColumn("block", floor(col("_pb_id") / blockSpan).cast("long"))

@@ -952,8 +952,7 @@ object Stats {
   def chiSquareKeyness(a: DataFrame, b: DataFrame, textCol: String,
                        minCount: Long = 5L): DataFrame = {
     def counts(df: DataFrame): DataFrame = df
-      .select(explode(expr(
-        s"regexp_extract_all(lower($textCol), '[a-z0-9_'']+', 0)")).as("term"))
+      .select(explode(Relevance.words(col(textCol))).as("term"))
       .groupBy(col("term")).agg(count(lit(1)).as("n"))
     val ca = counts(a).withColumnRenamed("n", "n_a")
     val cb = counts(b).withColumnRenamed("n", "n_b")

@@ -118,6 +118,23 @@ class DedupIdentitySpec extends SparkSpec {
     assert(!plan.contains("Broadcast"), plan)
   }
 
+  test("minHashPairs and simHashPairs: both sides of a shuffled bucket self-join read one exchange") {
+    val df = frame(corpus(5L, 20)).select(col("id"), col("text"))
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    spark.conf.set(key, "-1")
+    try {
+      for ((pairs, kernel) <- Seq(
+          Dedup.minHashPairs(df, "id", "text", numHashes = 64, numBands = 32, threshold = 0.5) -> "lsh_bands(",
+          Dedup.simHashPairs(df, "id", "text") -> "simhash64(")) {
+        pairs.collect()
+        val plan = pairs.queryExecution.executedPlan.toString.split("== Initial Plan ==").head
+        assert(plan.contains("== Final Plan =="), plan)
+        assert(plan.contains("SortMergeJoin") && plan.contains("ReusedExchange"), plan)
+        assert(java.util.regex.Pattern.quote(kernel).r.findAllMatchIn(plan).size == 1, plan)
+      }
+    } finally spark.conf.unset(key)
+  }
+
   test("nearDupIncremental ≡ oracle, on both cluster paths") {
     val rows = corpus(41L, 60)
     val (led, in) = rows.splitAt(rows.length / 2)

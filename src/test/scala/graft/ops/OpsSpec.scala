@@ -72,6 +72,11 @@ class DedupSpec extends SparkSpec {
     assert(!pairs.exists(p => Set(20L, 21L).contains(p._1) && Set(20L, 21L).contains(p._2)))
   }
 
+  test("simhash pairs: a token hash other than fnv or md5 is rejected") {
+    for (h <- Seq("MD5", "xxhash", ""))
+      intercept[IllegalArgumentException](Dedup.simHashPairs(docs, "id", "text", tokenHash = h))
+  }
+
   test("ngram jaccard pairs exact scores") {
     val pairs = Dedup.ngramJaccardPairs(docs, "id", "text", n = 5, threshold = 0.5, maxShingleDf = 1000)
       .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
@@ -92,11 +97,14 @@ class DedupSpec extends SparkSpec {
   }
 
   test("prefix jaccard pairs: output equals brute-force predicate") {
-    // lossless contract: same pairs AND same scores as the un-capped
-    // inverted-index path (whose output is the exact predicate)
-    val exact = Dedup.ngramJaccardPairs(docs, "id", "text", n = 5, threshold = 0.5,
-        maxShingleDf = 1000000)
-      .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
+    // lossless contract: the pairs AND scores of the Jaccard predicate over
+    // every doc pair's full 5-shingle sets
+    val sh = docs.collect().map(r => r.getLong(0) -> TextKernels.shingles(r.getString(1), 5).toSet).toMap
+    val exact = (for {
+      (a, sa) <- sh; (b, sb) <- sh if a < b && sa.nonEmpty && sb.nonEmpty
+      common = (sa & sb).size
+      jac = common.toDouble / (sa.size + sb.size - common).toDouble if jac >= 0.5
+    } yield (a, b) -> jac).toMap
     val pref = Dedup.prefixJaccardPairs(docs, "id", "text", n = 5, threshold = 0.5)
       .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
     assert(pref == exact, s"prefix=$pref exact=$exact")
