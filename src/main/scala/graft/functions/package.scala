@@ -146,13 +146,16 @@ package object functions {
 
   // ---- mergeable sketches (corpus-scale approximate analytics) ----
 
+  private def buildAgg[S](c: Column, params: SketchParams[S]): Column =
+    GraftShim.column(SketchBuild(GraftShim.expression(c), params).toAggregateExpression())
+  private def mergeAgg[S](c: Column, format: SketchFormat[S]): Column =
+    GraftShim.column(SketchMerge(GraftShim.expression(c), format).toAggregateExpression())
+
   /** HLL register aggregate over a string column (binary, 2^p bytes). */
-  def hll_sketch(c: Column, p: Int = 12): Column =
-    GraftShim.column(HllSketchAgg(GraftShim.expression(c), p).toAggregateExpression())
+  def hll_sketch(c: Column, p: Int = 12): Column = buildAgg(c, HllParams(p))
 
   /** Merge already-built sketches (rollup without rescanning data). */
-  def hll_merge(c: Column): Column =
-    GraftShim.column(HllMergeAgg(GraftShim.expression(c)).toAggregateExpression())
+  def hll_merge(c: Column): Column = mergeAgg(c, HllSketch)
 
   /** Exact-integer raw-HLL cardinality estimate of a sketch. */
   def hll_estimate(c: Column): Column = col1(HllEstimate(_))(c)
@@ -161,40 +164,32 @@ package object functions {
   def hll_distinct(c: Column, p: Int = 12): Column = hll_estimate(hll_sketch(c, p))
 
   /** Count-min sketch aggregate (binary; merge = elementwise sum). */
-  def cms_sketch(c: Column, width: Int, depth: Int): Column =
-    GraftShim.column(CmsSketchAgg(GraftShim.expression(c), width, depth)
-      .toAggregateExpression())
+  def cms_sketch(c: Column, width: Int, depth: Int): Column = buildAgg(c, CmsParams(width, depth))
 
   /** Frequency estimate of `v` in a CMS sketch (never underestimates). */
   def cms_query(sketch: Column, v: Column): Column =
     GraftShim.column(CmsQuery(GraftShim.expression(sketch), GraftShim.expression(v)))
 
   /** Merge stored CMS sketches (elementwise sum; shapes must agree). */
-  def cms_merge(c: Column): Column =
-    GraftShim.column(CmsMergeAgg(GraftShim.expression(c)).toAggregateExpression())
+  def cms_merge(c: Column): Column = mergeAgg(c, CmsCodec)
 
   /** Bloom filter aggregate (binary; merge = bitwise OR). */
-  def bloom_agg(c: Column, mBits: Int, k: Int): Column =
-    GraftShim.column(BloomAgg(GraftShim.expression(c), mBits, k)
-      .toAggregateExpression())
+  def bloom_agg(c: Column, mBits: Int, k: Int): Column = buildAgg(c, BloomParams(mBits, k))
 
   /** Membership probe (zero false negatives, deterministic false positives). */
   def bloom_contains(bloom: Column, v: Column): Column =
     GraftShim.column(BloomContains(GraftShim.expression(bloom), GraftShim.expression(v)))
 
   /** Merge stored Bloom filters (bitwise OR; shapes must agree). */
-  def bloom_merge(c: Column): Column =
-    GraftShim.column(BloomMergeAgg(GraftShim.expression(c)).toAggregateExpression())
+  def bloom_merge(c: Column): Column = mergeAgg(c, BloomCodec)
 
   /** Log2-histogram quantile sketch aggregate over a non-negative integral
     * column (binary; merge = counter sum; <= 2^-s relative value error).
     */
-  def qsketch_agg(c: Column, s: Int = 5): Column =
-    GraftShim.column(QSketchAgg(GraftShim.expression(c), s).toAggregateExpression())
+  def qsketch_agg(c: Column, s: Int = 5): Column = buildAgg(c, QSketchParams(s))
 
   /** Merge stored quantile sketches (resolutions must agree). */
-  def qsketch_merge(c: Column): Column =
-    GraftShim.column(QSketchMergeAgg(GraftShim.expression(c)).toAggregateExpression())
+  def qsketch_merge(c: Column): Column = mergeAgg(c, QSketch)
 
   /** Quantile from a sketch; `qPermille` in [1,1000] (500 = median). */
   def qsketch_quantile(sketch: Column, qPermille: Column): Column =
@@ -234,6 +229,10 @@ object GraftExtensions {
       require(args.length == 1, s"$name expects exactly one argument")
       f(args.head)
     }
+
+  /** The SQL merge aggregate of a sketch family, under its own name. */
+  private def sketchMerge(format: SketchFormat[_]): (String, Seq[Expression] => Expression) =
+    unary(format.mergeName)(SketchMerge(_, format).toAggregateExpression())
 
   private def intLit(name: String, e: Expression): Int = e match {
     case org.apache.spark.sql.catalyst.expressions.Literal(v, t)
@@ -302,31 +301,31 @@ object GraftExtensions {
       require(args.length == 1 || args.length == 2,
         "hll_sketch expects (value) or (value, precision)")
       val p = if (args.length == 2) intLit("hll_sketch precision", args(1)) else 12
-      HllSketchAgg(args.head, p).toAggregateExpression()
+      SketchBuild(args.head, HllParams(p)).toAggregateExpression()
     },
-    unary("hll_merge")(HllMergeAgg(_).toAggregateExpression()),
+    sketchMerge(HllSketch),
     unary("hll_estimate")(HllEstimate(_)),
     "cms_sketch" -> { args =>
       require(args.length == 3, "cms_sketch expects (value, width, depth)")
-      CmsSketchAgg(args(0), intLit("cms_sketch width", args(1)),
-        intLit("cms_sketch depth", args(2))).toAggregateExpression()
+      SketchBuild(args(0), CmsParams(intLit("cms_sketch width", args(1)),
+        intLit("cms_sketch depth", args(2)))).toAggregateExpression()
     },
     "cms_query" -> { args => require(args.length == 2); CmsQuery(args(0), args(1)) },
-    unary("cms_merge")(CmsMergeAgg(_).toAggregateExpression()),
-    unary("bloom_merge")(BloomMergeAgg(_).toAggregateExpression()),
+    sketchMerge(CmsCodec),
+    sketchMerge(BloomCodec),
     "bloom_agg" -> { args =>
       require(args.length == 3, "bloom_agg expects (value, mBits, k)")
-      BloomAgg(args(0), intLit("bloom_agg mBits", args(1)),
-        intLit("bloom_agg k", args(2))).toAggregateExpression()
+      SketchBuild(args(0), BloomParams(intLit("bloom_agg mBits", args(1)),
+        intLit("bloom_agg k", args(2)))).toAggregateExpression()
     },
     "bloom_contains" -> { args => require(args.length == 2); BloomContains(args(0), args(1)) },
     "qsketch_agg" -> { args =>
       require(args.length == 1 || args.length == 2,
         "qsketch_agg expects (value) or (value, subBucketBits)")
       val s = if (args.length == 2) intLit("qsketch_agg subBucketBits", args(1)) else 5
-      QSketchAgg(args.head, s).toAggregateExpression()
+      SketchBuild(args.head, QSketchParams(s)).toAggregateExpression()
     },
-    unary("qsketch_merge")(QSketchMergeAgg(_).toAggregateExpression()),
+    sketchMerge(QSketch),
     "qsketch_quantile" -> { args => require(args.length == 2); QSketchQuantile(args(0), args(1)) },
     unary("qsketch_count")(QSketchCount(_)),
     "zorder_key" -> { args => require(args.length == 2); ZOrderKey(args(0), args(1)) })

@@ -10,6 +10,127 @@ import org.apache.spark.sql.catalyst.trees.{BinaryLike, UnaryLike}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
+/** One family of the mergeable-sketch layer (HLL distinct counts, count-min
+  * frequencies, Bloom membership, log2 quantiles), stated once: its SQL
+  * names, the build's input check, `add` of one value, `combine` of two
+  * states and the byte layout. [[SketchBuild]] and [[SketchMerge]] are the
+  * only two aggregates, and every family runs through them; a family's
+  * parameters and empty state live in its [[SketchParams]] case class.
+  */
+trait SketchFormat[S] extends Serializable {
+  def buildName: String
+  def mergeName: String
+  /** The build's input check (strings unless the family says otherwise). */
+  def accepts(t: DataType): Boolean = t == StringType
+  def inputKind: String = "a string column"
+  /** What a merge input is called in its type-check message. */
+  def noun: String = "sketch"
+  /** Folds one non-null input value into `sk` in place. */
+  def add(sk: S, v: Any): Unit
+  /** `into` with `other` folded in; fails on a shape mismatch. */
+  def combine(into: S, other: S): S
+  def toBytes(sk: S): Array[Byte]
+  /** The state of a sketch's bytes; fails on malformed ones. */
+  def decode(bytes: Array[Byte]): S
+}
+
+object SketchFormat {
+  /** The count families' combine: elementwise counter sum. */
+  private[functions] def sumInto(into: Array[Long], other: Array[Long]): Unit = {
+    var i = 0
+    while (i < into.length) { into(i) += other(i); i += 1 }
+  }
+}
+
+/** A family's build parameters; equal calls build equal aggregates. */
+trait SketchParams[S] extends Product with Serializable {
+  def format: SketchFormat[S]
+  def empty(): S
+}
+
+/** Aggregate: a value column -> the sketch of `params` (binary). Partial
+  * states travel, and streaming state stores them, as the family's bytes,
+  * which are also the result.
+  */
+case class SketchBuild[S](child: Expression, params: SketchParams[S],
+                          mutableAggBufferOffset: Int = 0,
+                          inputAggBufferOffset: Int = 0)
+  extends TypedImperativeAggregate[S] with UnaryLike[Expression] {
+  private def format = params.format
+
+  override def createAggregationBuffer(): S = params.empty()
+  override def update(buffer: S, input: InternalRow): S = {
+    val v = child.eval(input)
+    if (v != null) format.add(buffer, v)
+    buffer
+  }
+  override def merge(buffer: S, other: S): S = format.combine(buffer, other)
+  override def eval(buffer: S): Any = format.toBytes(buffer)
+  override def serialize(buffer: S): Array[Byte] = format.toBytes(buffer)
+  override def deserialize(storage: Array[Byte]): S = format.decode(storage)
+
+  override def dataType: DataType = BinaryType
+  override def nullable: Boolean = false
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (child.dataType == NullType || format.accepts(child.dataType)) TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
+      s"${format.buildName} expects ${format.inputKind}, got ${child.dataType.simpleString}")
+  override def prettyName: String = format.buildName
+  override protected def stringArgs: Iterator[Any] = Iterator(child) ++
+    params.productIterator ++ Iterator(mutableAggBufferOffset, inputAggBufferOffset)
+  override def withNewMutableAggBufferOffset(newOffset: Int): SketchBuild[S] =
+    copy(mutableAggBufferOffset = newOffset)
+  override def withNewInputAggBufferOffset(newOffset: Int): SketchBuild[S] =
+    copy(inputAggBufferOffset = newOffset)
+  override protected def withNewChildInternal(newChild: Expression): SketchBuild[S] =
+    copy(child = newChild)
+}
+
+/** Aggregate: merge already-built sketches (binary -> binary) — the rollup
+  * path: per-shard/per-day sketches combine into any coarser grouping
+  * without rescanning data. The buffer holds the decoded state, so each
+  * input is decoded (and checked) once; null and empty inputs are skipped,
+  * and the first sketch sets the shape the rest must share. With no sketch
+  * at all the result is the empty binary.
+  */
+case class SketchMerge[S](child: Expression, format: SketchFormat[S],
+                          mutableAggBufferOffset: Int = 0,
+                          inputAggBufferOffset: Int = 0)
+  extends TypedImperativeAggregate[Option[S]] with UnaryLike[Expression] {
+
+  override def createAggregationBuffer(): Option[S] = None
+  override def update(buffer: Option[S], input: InternalRow): Option[S] = child.eval(input) match {
+    case null => buffer
+    case bytes: Array[Byte] => merge(buffer, deserialize(bytes))
+  }
+  override def merge(buffer: Option[S], other: Option[S]): Option[S] = (buffer, other) match {
+    case (Some(a), Some(b)) => Some(format.combine(a, b))
+    case _ => buffer.orElse(other)
+  }
+  override def eval(buffer: Option[S]): Any = serialize(buffer)
+  override def serialize(buffer: Option[S]): Array[Byte] =
+    buffer.fold(Array.emptyByteArray)(format.toBytes)
+  override def deserialize(storage: Array[Byte]): Option[S] =
+    if (storage.isEmpty) None else Some(format.decode(storage))
+
+  override def dataType: DataType = BinaryType
+  override def nullable: Boolean = false
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case BinaryType | NullType => TypeCheckResult.TypeCheckSuccess
+    case t => TypeCheckResult.TypeCheckFailure(
+      s"${format.mergeName} expects a binary ${format.noun} column, got ${t.simpleString}")
+  }
+  override def prettyName: String = format.mergeName
+  override protected def stringArgs: Iterator[Any] =
+    Iterator(child, mutableAggBufferOffset, inputAggBufferOffset)
+  override def withNewMutableAggBufferOffset(newOffset: Int): SketchMerge[S] =
+    copy(mutableAggBufferOffset = newOffset)
+  override def withNewInputAggBufferOffset(newOffset: Int): SketchMerge[S] =
+    copy(inputAggBufferOffset = newOffset)
+  override protected def withNewChildInternal(newChild: Expression): SketchMerge[S] =
+    copy(child = newChild)
+}
+
 /** Mergeable HyperLogLog distinct-count sketch — the cardinality machinery
   * a 100-TB corpus needs where exact COUNT(DISTINCT) is a full shuffle of
   * every key: distinct URLs per domain, distinct tokens per language,
@@ -41,7 +162,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * raise the register width by swapping the hash for 64-bit (the register
   * layout is width-agnostic; the oracle then needs int128 hex parsing).
   */
-object HllSketch {
+object HllSketch extends SketchFormat[Array[Byte]] {
+  val buildName = "hll_sketch"
+  val mergeName = "hll_merge"
+
   /** alpha_m as an exact rational (num, den) — the standard HLL constants. */
   def alpha(m: Int): (Long, Long) = m match {
     case 16 => (673L, 1000L)
@@ -103,107 +227,37 @@ object HllSketch {
         s"hll sketch length must be a power of two, got ${regs.length}")
       estimate(regs)
     }
-}
 
-/** Aggregate: string column -> 2^p-byte HLL register array (binary). */
-case class HllSketchAgg(child: Expression, p: Int,
-                        mutableAggBufferOffset: Int = 0,
-                        inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Array[Byte]] with UnaryLike[Expression] {
-  HllSketch.requireP(p)
+  def add(regs: Array[Byte], v: Any): Unit =
+    add(regs, hash32(v.asInstanceOf[UTF8String].getBytes), Integer.numberOfTrailingZeros(regs.length))
 
-  override def createAggregationBuffer(): Array[Byte] = new Array[Byte](1 << p)
-
-  override def update(buffer: Array[Byte], input: InternalRow): Array[Byte] = {
-    val v = child.eval(input)
-    if (v != null) {
-      HllSketch.add(buffer, HllSketch.hash32(v.asInstanceOf[UTF8String].getBytes), p)
-    }
-    buffer
-  }
-
-  override def merge(buffer: Array[Byte], other: Array[Byte]): Array[Byte] = {
+  /** Register max; the precisions must agree. */
+  def combine(into: Array[Byte], other: Array[Byte]): Array[Byte] = {
+    require(into.length == other.length,
+      s"cannot merge hll sketches of different precision " +
+        s"(${into.length} vs ${other.length} registers)")
     var i = 0
-    while (i < buffer.length) {
-      if (other(i) > buffer(i)) buffer(i) = other(i)
+    while (i < into.length) {
+      if (other(i) > into(i)) into(i) = other(i)
       i += 1
     }
-    buffer
+    into
   }
 
-  override def eval(buffer: Array[Byte]): Any = buffer
-  override def serialize(buffer: Array[Byte]): Array[Byte] = buffer
-  override def deserialize(storage: Array[Byte]): Array[Byte] = storage
-
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType | NullType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"hll_sketch expects a string column, got ${t.simpleString}")
+  /** The layout is the register array itself, 2^p bytes, p in [4,16]. */
+  def toBytes(regs: Array[Byte]): Array[Byte] = regs
+  def decode(bytes: Array[Byte]): Array[Byte] = {
+    val p = Integer.numberOfTrailingZeros(bytes.length)
+    require(bytes.length == 1 << p && p >= 4 && p <= 16, s"malformed hll sketch (len=${bytes.length})")
+    bytes.clone()
   }
-  override def prettyName: String = "hll_sketch"
-  override def withNewMutableAggBufferOffset(newOffset: Int): HllSketchAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): HllSketchAgg =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildInternal(newChild: Expression): HllSketchAgg =
-    copy(child = newChild)
 }
 
-/** Aggregate: merge already-built sketches (binary -> binary) — the rollup
-  * path: per-shard/per-day sketches combine into any coarser grouping
-  * without rescanning data. Register widths must agree.
-  */
-case class HllMergeAgg(child: Expression,
-                       mutableAggBufferOffset: Int = 0,
-                       inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Array[Byte]] with UnaryLike[Expression] {
-
-  // buffer starts empty and adopts the first sketch's width; a width
-  // mismatch afterwards is a caller error (two different precisions)
-  override def createAggregationBuffer(): Array[Byte] = Array.emptyByteArray
-
-  private def mergeInto(buffer: Array[Byte], other: Array[Byte]): Array[Byte] =
-    if (other.isEmpty) buffer
-    else if (buffer.isEmpty) other.clone()
-    else {
-      require(buffer.length == other.length,
-        s"cannot merge hll sketches of different precision " +
-          s"(${buffer.length} vs ${other.length} registers)")
-      var i = 0
-      while (i < buffer.length) {
-        if (other(i) > buffer(i)) buffer(i) = other(i)
-        i += 1
-      }
-      buffer
-    }
-
-  override def update(buffer: Array[Byte], input: InternalRow): Array[Byte] = {
-    val v = child.eval(input)
-    if (v == null) buffer else mergeInto(buffer, v.asInstanceOf[Array[Byte]])
-  }
-  override def merge(buffer: Array[Byte], other: Array[Byte]): Array[Byte] =
-    mergeInto(buffer, other)
-
-  override def eval(buffer: Array[Byte]): Any = buffer
-  override def serialize(buffer: Array[Byte]): Array[Byte] = buffer
-  override def deserialize(storage: Array[Byte]): Array[Byte] = storage
-
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType | NullType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"hll_merge expects a binary sketch column, got ${t.simpleString}")
-  }
-  override def prettyName: String = "hll_merge"
-  override def withNewMutableAggBufferOffset(newOffset: Int): HllMergeAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): HllMergeAgg =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildInternal(newChild: Expression): HllMergeAgg =
-    copy(child = newChild)
+/** HLL parameters: 2^p registers, p in [4,16]. */
+case class HllParams(p: Int) extends SketchParams[Array[Byte]] {
+  HllSketch.requireP(p)
+  def format: SketchFormat[Array[Byte]] = HllSketch
+  def empty(): Array[Byte] = new Array[Byte](1 << p)
 }
 
 /** Seeded 32-bit hash shared by the CMS and Bloom sketches: the first 32
@@ -215,10 +269,22 @@ object SeededHash {
     HllSketch.hash32((seed.toString + v.toString).getBytes("UTF-8"))
 }
 
-/** Count-min sketch codec: binary layout [width:int][depth:int][depth*width
-  * longs], big-endian.
+/** Mergeable count-min sketch — the frequency dual of the HLL sketch:
+  * per-key token/url/ngram frequency estimates in O(width x depth)
+  * counters instead of a full per-value aggregate. Estimates NEVER
+  * underestimate (min over depth rows of colliding sums); width bounds
+  * the overestimate (~ total_count / width with depth independent
+  * trials). Merging is elementwise sum, so per-shard/per-day sketches
+  * roll up losslessly. Same engine-portability discipline as the HLL:
+  * md5-seeded placement and pure integer counters — an external oracle
+  * replays every cell.
+  *
+  * Layout: [width:int][depth:int][depth*width longs], big-endian.
   */
-object CmsCodec {
+object CmsCodec extends SketchFormat[(Int, Int, Array[Long])] {
+  val buildName = "cms_sketch"
+  val mergeName = "cms_merge"
+
   def encode(w: Int, d: Int, counters: Array[Long]): Array[Byte] = {
     val bb = java.nio.ByteBuffer.allocate(8 + counters.length * 8)
     bb.putInt(w).putInt(d)
@@ -237,129 +303,49 @@ object CmsCodec {
     (w, d, counters)
   }
 
-  /** Entry of [[CmsQuery]]: min over the depth rows. */
-  def cms_query(sketch: Array[Byte], v: UTF8String): Long = {
-    val (w, d, counters) = decode(sketch)
-    var est = Long.MaxValue
+  def add(sk: (Int, Int, Array[Long]), v: Any): Unit = {
+    val s = v.asInstanceOf[UTF8String]
+    val w = sk._1
     var i = 0
-    while (i < d) {
-      val c = counters(i * w + (SeededHash.hash32(i, v) % w).toInt)
-      if (c < est) est = c
+    while (i < sk._2) {
+      sk._3(i * w + (SeededHash.hash32(i, s) % w).toInt) += 1L
       i += 1
     }
-    est
   }
-}
 
-/** Mergeable count-min sketch — the frequency dual of the HLL sketch:
-  * per-key token/url/ngram frequency estimates in O(width x depth)
-  * counters instead of a full per-value aggregate. Estimates NEVER
-  * underestimate (min over depth rows of colliding sums); width bounds
-  * the overestimate (~ total_count / width with depth independent
-  * trials). Merging is elementwise sum, so per-shard/per-day sketches
-  * roll up losslessly. Same engine-portability discipline as the HLL:
-  * md5-seeded placement and pure integer counters — an external oracle
-  * replays every cell.
-  */
-case class CmsSketchAgg(child: Expression, width: Int, depth: Int,
-                        mutableAggBufferOffset: Int = 0,
-                        inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Array[Long]] with UnaryLike[Expression] {
-  require(width > 0 && depth > 0 && width.toLong * depth <= (1 << 24),
-    s"cms dimensions out of range (width=$width depth=$depth)")
+  def combine(into: (Int, Int, Array[Long]), other: (Int, Int, Array[Long])): (Int, Int, Array[Long]) = {
+    require(into._1 == other._1 && into._2 == other._2, s"cannot merge cms sketches of different " +
+      s"shape (${into._1}x${into._2} vs ${other._1}x${other._2})")
+    SketchFormat.sumInto(into._3, other._3)
+    into
+  }
 
-  override def createAggregationBuffer(): Array[Long] = new Array[Long](width * depth)
+  def toBytes(sk: (Int, Int, Array[Long])): Array[Byte] = encode(sk._1, sk._2, sk._3)
 
-  override def update(buffer: Array[Long], input: InternalRow): Array[Long] = {
-    val v = child.eval(input)
-    if (v != null) {
-      val s = v.asInstanceOf[UTF8String]
+  /** Entry of [[CmsQuery]]: min over the depth rows; an empty sketch (an
+    * empty merge) counts 0.
+    */
+  def cms_query(sketch: Array[Byte], v: UTF8String): Long =
+    if (sketch.isEmpty) 0L
+    else {
+      val (w, d, counters) = decode(sketch)
+      var est = Long.MaxValue
       var i = 0
-      while (i < depth) {
-        buffer(i * width + (SeededHash.hash32(i, s) % width).toInt) += 1L
+      while (i < d) {
+        val c = counters(i * w + (SeededHash.hash32(i, v) % w).toInt)
+        if (c < est) est = c
         i += 1
       }
+      est
     }
-    buffer
-  }
-
-  override def merge(buffer: Array[Long], other: Array[Long]): Array[Long] = {
-    var i = 0
-    while (i < buffer.length) { buffer(i) += other(i); i += 1 }
-    buffer
-  }
-
-  override def eval(buffer: Array[Long]): Any = CmsCodec.encode(width, depth, buffer)
-  override def serialize(buffer: Array[Long]): Array[Byte] =
-    CmsCodec.encode(width, depth, buffer)
-  override def deserialize(storage: Array[Byte]): Array[Long] = CmsCodec.decode(storage)._3
-
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType | NullType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"cms_sketch expects a string column, got ${t.simpleString}")
-  }
-  override def prettyName: String = "cms_sketch"
-  override def withNewMutableAggBufferOffset(newOffset: Int): CmsSketchAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): CmsSketchAgg =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildInternal(newChild: Expression): CmsSketchAgg =
-    copy(child = newChild)
 }
 
-/** Aggregate: merge already-built CMS sketches (binary -> binary) — the
-  * rollup path: per-shard/per-day frequency sketches combine into any
-  * coarser grouping by elementwise counter addition without rescanning
-  * data. Headers (width, depth) must agree.
-  */
-case class CmsMergeAgg(child: Expression,
-                       mutableAggBufferOffset: Int = 0,
-                       inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Array[Byte]] with UnaryLike[Expression] {
-
-  override def createAggregationBuffer(): Array[Byte] = Array.emptyByteArray
-
-  private def mergeInto(buffer: Array[Byte], other: Array[Byte]): Array[Byte] =
-    if (other.isEmpty) buffer
-    else if (buffer.isEmpty) other.clone()
-    else {
-      val (w1, d1, acc) = CmsCodec.decode(buffer)
-      val (w2, d2, in) = CmsCodec.decode(other)
-      require(w1 == w2 && d1 == d2,
-        s"cannot merge cms sketches of different shape (${w1}x$d1 vs ${w2}x$d2)")
-      var i = 0
-      while (i < acc.length) { acc(i) += in(i); i += 1 }
-      CmsCodec.encode(w1, d1, acc)
-    }
-
-  override def update(buffer: Array[Byte], input: InternalRow): Array[Byte] = {
-    val v = child.eval(input)
-    if (v == null) buffer else mergeInto(buffer, v.asInstanceOf[Array[Byte]])
-  }
-  override def merge(buffer: Array[Byte], other: Array[Byte]): Array[Byte] =
-    mergeInto(buffer, other)
-
-  override def eval(buffer: Array[Byte]): Any = buffer
-  override def serialize(buffer: Array[Byte]): Array[Byte] = buffer
-  override def deserialize(storage: Array[Byte]): Array[Byte] = storage
-
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType | NullType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"cms_merge expects a binary sketch column, got ${t.simpleString}")
-  }
-  override def prettyName: String = "cms_merge"
-  override def withNewMutableAggBufferOffset(newOffset: Int): CmsMergeAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): CmsMergeAgg =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildInternal(newChild: Expression): CmsMergeAgg =
-    copy(child = newChild)
+/** Count-min parameters: `depth` rows of `width` counters. */
+case class CmsParams(width: Int, depth: Int) extends SketchParams[(Int, Int, Array[Long])] {
+  require(width > 0 && depth > 0 && width.toLong * depth <= (1 << 24),
+    s"cms dimensions out of range (width=$width depth=$depth)")
+  def format: SketchFormat[(Int, Int, Array[Long])] = CmsCodec
+  def empty(): (Int, Int, Array[Long]) = (width, depth, new Array[Long](width * depth))
 }
 
 /** Scalar: (cms sketch, value) -> frequency estimate (min over depth rows).
@@ -381,8 +367,22 @@ case class CmsQuery(left: Expression, right: Expression)
     copy(left = l, right = r)
 }
 
-/** Bloom codec: [mBits:int][k:int][mBits/8 bytes], big-endian header. */
-object BloomCodec {
+/** Mergeable Bloom filter — set membership with ZERO false negatives and a
+  * bounded false-positive rate (~(1 - e^(-kn/m))^k). The 100-TB use is
+  * decontamination and ledger probes where the reference set is too big to
+  * broadcast raw: the filter is m/8 bytes regardless of set size, merges
+  * by bitwise OR (per-shard builds roll up), and probes are a narrow map
+  * over the corpus. md5-seeded bit placement — an external oracle replays
+  * the exact bit set, so even the false positives are deterministic and
+  * verifiable.
+  *
+  * Layout: [mBits:int][k:int][mBits/8 bytes], big-endian header.
+  */
+object BloomCodec extends SketchFormat[(Int, Int, Array[Byte])] {
+  val buildName = "bloom_agg"
+  val mergeName = "bloom_merge"
+  override def noun: String = "filter"
+
   def encode(mBits: Int, k: Int, bits: Array[Byte]): Array[Byte] = {
     val bb = java.nio.ByteBuffer.allocate(8 + bits.length)
     bb.putInt(mBits).putInt(k).put(bits)
@@ -399,129 +399,50 @@ object BloomCodec {
     (m, k, bits)
   }
 
-  /** Entry of [[BloomContains]]. */
-  def bloom_contains(filter: Array[Byte], v: UTF8String): Boolean = {
-    val (m, k, bits) = decode(filter)
+  def add(sk: (Int, Int, Array[Byte]), v: Any): Unit = {
+    val s = v.asInstanceOf[UTF8String]
+    val bits = sk._3
     var i = 0
-    while (i < k) {
-      val pos = (SeededHash.hash32(i, v) % m).toInt
-      if ((bits(pos >> 3) & (1 << (pos & 7))) == 0) return false
+    while (i < sk._2) {
+      val pos = (SeededHash.hash32(i, s) % sk._1).toInt
+      bits(pos >> 3) = (bits(pos >> 3) | (1 << (pos & 7))).toByte
       i += 1
     }
-    true
   }
+
+  /** Bitwise OR; the headers must agree. */
+  def combine(into: (Int, Int, Array[Byte]), other: (Int, Int, Array[Byte])): (Int, Int, Array[Byte]) = {
+    require(into._1 == other._1 && into._2 == other._2, s"cannot merge bloom filters of different " +
+      s"shape (m=${into._1},k=${into._2} vs m=${other._1},k=${other._2})")
+    val (a, b) = (into._3, other._3)
+    var i = 0
+    while (i < a.length) { a(i) = (a(i) | b(i)).toByte; i += 1 }
+    into
+  }
+
+  def toBytes(sk: (Int, Int, Array[Byte])): Array[Byte] = encode(sk._1, sk._2, sk._3)
+
+  /** Entry of [[BloomContains]]; an empty filter (an empty merge) holds nothing. */
+  def bloom_contains(filter: Array[Byte], v: UTF8String): Boolean =
+    filter.nonEmpty && {
+      val (m, k, bits) = decode(filter)
+      var i = 0
+      while (i < k) {
+        val pos = (SeededHash.hash32(i, v) % m).toInt
+        if ((bits(pos >> 3) & (1 << (pos & 7))) == 0) return false
+        i += 1
+      }
+      true
+    }
 }
 
-/** Mergeable Bloom filter — set membership with ZERO false negatives and a
-  * bounded false-positive rate (~(1 - e^(-kn/m))^k). The 100-TB use is
-  * decontamination and ledger probes where the reference set is too big to
-  * broadcast raw: the filter is m/8 bytes regardless of set size, merges
-  * by bitwise OR (per-shard builds roll up), and probes are a narrow map
-  * over the corpus. md5-seeded bit placement — an external oracle replays
-  * the exact bit set, so even the false positives are deterministic and
-  * verifiable.
-  */
-case class BloomAgg(child: Expression, mBits: Int, k: Int,
-                    mutableAggBufferOffset: Int = 0,
-                    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Array[Byte]] with UnaryLike[Expression] {
+/** Bloom parameters: `mBits` bits (a multiple of 8), `k` probes. */
+case class BloomParams(mBits: Int, k: Int) extends SketchParams[(Int, Int, Array[Byte])] {
   require(mBits > 0 && mBits % 8 == 0 && mBits <= (1 << 30),
     s"mBits must be a positive multiple of 8, got $mBits")
   require(k > 0 && k <= 16, s"k must be in [1,16], got $k")
-
-  override def createAggregationBuffer(): Array[Byte] = new Array[Byte](mBits / 8)
-
-  override def update(buffer: Array[Byte], input: InternalRow): Array[Byte] = {
-    val v = child.eval(input)
-    if (v != null) {
-      val s = v.asInstanceOf[UTF8String]
-      var i = 0
-      while (i < k) {
-        val pos = (SeededHash.hash32(i, s) % mBits).toInt
-        buffer(pos >> 3) = (buffer(pos >> 3) | (1 << (pos & 7))).toByte
-        i += 1
-      }
-    }
-    buffer
-  }
-
-  override def merge(buffer: Array[Byte], other: Array[Byte]): Array[Byte] = {
-    var i = 0
-    while (i < buffer.length) { buffer(i) = (buffer(i) | other(i)).toByte; i += 1 }
-    buffer
-  }
-
-  override def eval(buffer: Array[Byte]): Any = BloomCodec.encode(mBits, k, buffer)
-  override def serialize(buffer: Array[Byte]): Array[Byte] =
-    BloomCodec.encode(mBits, k, buffer)
-  override def deserialize(storage: Array[Byte]): Array[Byte] = BloomCodec.decode(storage)._3
-
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType | NullType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"bloom_agg expects a string column, got ${t.simpleString}")
-  }
-  override def prettyName: String = "bloom_agg"
-  override def withNewMutableAggBufferOffset(newOffset: Int): BloomAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): BloomAgg =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildInternal(newChild: Expression): BloomAgg =
-    copy(child = newChild)
-}
-
-/** Aggregate: merge already-built Bloom filters (binary -> binary) by
-  * bitwise OR — per-shard/per-day membership filters roll up into any
-  * coarser grouping without rescanning data. Headers (mBits, k) must
-  * agree.
-  */
-case class BloomMergeAgg(child: Expression,
-                         mutableAggBufferOffset: Int = 0,
-                         inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Array[Byte]] with UnaryLike[Expression] {
-
-  override def createAggregationBuffer(): Array[Byte] = Array.emptyByteArray
-
-  private def mergeInto(buffer: Array[Byte], other: Array[Byte]): Array[Byte] =
-    if (other.isEmpty) buffer
-    else if (buffer.isEmpty) other.clone()
-    else {
-      val (m1, k1, _) = BloomCodec.decode(buffer)
-      val (m2, k2, _) = BloomCodec.decode(other)
-      require(m1 == m2 && k1 == k2,
-        s"cannot merge bloom filters of different shape (m=$m1,k=$k1 vs m=$m2,k=$k2)")
-      var i = 8 // headers verified equal; OR the bit payload in place
-      while (i < buffer.length) { buffer(i) = (buffer(i) | other(i)).toByte; i += 1 }
-      buffer
-    }
-
-  override def update(buffer: Array[Byte], input: InternalRow): Array[Byte] = {
-    val v = child.eval(input)
-    if (v == null) buffer else mergeInto(buffer, v.asInstanceOf[Array[Byte]])
-  }
-  override def merge(buffer: Array[Byte], other: Array[Byte]): Array[Byte] =
-    mergeInto(buffer, other)
-
-  override def eval(buffer: Array[Byte]): Any = buffer
-  override def serialize(buffer: Array[Byte]): Array[Byte] = buffer
-  override def deserialize(storage: Array[Byte]): Array[Byte] = storage
-
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType | NullType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"bloom_merge expects a binary filter column, got ${t.simpleString}")
-  }
-  override def prettyName: String = "bloom_merge"
-  override def withNewMutableAggBufferOffset(newOffset: Int): BloomMergeAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): BloomMergeAgg =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildInternal(newChild: Expression): BloomMergeAgg =
-    copy(child = newChild)
+  def format: SketchFormat[(Int, Int, Array[Byte])] = BloomCodec
+  def empty(): (Int, Int, Array[Byte]) = (mBits, k, new Array[Byte](mBits / 8))
 }
 
 /** Scalar: (bloom bytes, value) -> membership (no false negatives). */
@@ -585,7 +506,15 @@ case class HllEstimate(child: Expression) extends KernelExpression with UnaryLik
   * oracle. Layout: [s:int][numBuckets:int][count:long x numBuckets],
   * big-endian; numBuckets = (64-s)*2^s covers the full int64 range.
   */
-object QSketch {
+object QSketch extends SketchFormat[(Int, Array[Long])] {
+  val buildName = "qsketch_agg"
+  val mergeName = "qsketch_merge"
+  override def accepts(t: DataType): Boolean = t match {
+    case LongType | IntegerType | ShortType | ByteType => true
+    case _ => false
+  }
+  override def inputKind: String = "an integral column"
+
   def requireS(s: Int): Unit =
     require(s >= 1 && s <= 8, s"qsketch sub-bucket bits must be in [1,8], got $s")
 
@@ -664,106 +593,33 @@ object QSketch {
       while (i < counts.length) { n += counts(i); i += 1 }
       n
     }
-}
 
-/** Aggregate: long column -> log2-histogram quantile sketch (binary). */
-case class QSketchAgg(child: Expression, s: Int,
-                      mutableAggBufferOffset: Int = 0,
-                      inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Array[Long]] with UnaryLike[Expression] {
-  QSketch.requireS(s)
-
-  override def createAggregationBuffer(): Array[Long] =
-    new Array[Long](QSketch.numBuckets(s))
-
-  override def update(buffer: Array[Long], input: InternalRow): Array[Long] = {
-    val v = child.eval(input)
-    if (v != null) buffer(QSketch.bucketOf(toLong(v), s)) += 1L
-    buffer
-  }
-
-  override def merge(buffer: Array[Long], other: Array[Long]): Array[Long] = {
-    var i = 0
-    while (i < buffer.length) { buffer(i) += other(i); i += 1 }
-    buffer
-  }
-
-  override def eval(buffer: Array[Long]): Any = QSketch.encode(s, buffer)
-  override def serialize(buffer: Array[Long]): Array[Byte] =
-    QSketch.encode(s, buffer)
-  override def deserialize(storage: Array[Byte]): Array[Long] =
-    QSketch.decode(storage)._2
-
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case LongType | IntegerType | ShortType | ByteType | NullType =>
-      TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"qsketch_agg expects an integral column, got ${t.simpleString}")
-  }
   // integral widths narrower than long arrive as their own JVM types
-  private lazy val toLong: Any => Long = child.dataType match {
-    case LongType => _.asInstanceOf[Long]
-    case IntegerType => _.asInstanceOf[Int].toLong
-    case ShortType => _.asInstanceOf[Short].toLong
-    case _ => _.asInstanceOf[Byte].toLong
+  def add(sk: (Int, Array[Long]), v: Any): Unit = {
+    val x = v match {
+      case l: Long => l
+      case i: Int => i.toLong
+      case s: Short => s.toLong
+      case b: Byte => b.toLong
+    }
+    sk._2(bucketOf(x, sk._1)) += 1L
   }
-  override def prettyName: String = "qsketch_agg"
-  override def withNewMutableAggBufferOffset(newOffset: Int): QSketchAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): QSketchAgg =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildInternal(newChild: Expression): QSketchAgg =
-    copy(child = newChild)
+
+  def combine(into: (Int, Array[Long]), other: (Int, Array[Long])): (Int, Array[Long]) = {
+    require(into._1 == other._1,
+      s"cannot merge qsketches of different resolution (s=${into._1} vs s=${other._1})")
+    SketchFormat.sumInto(into._2, other._2)
+    into
+  }
+
+  def toBytes(sk: (Int, Array[Long])): Array[Byte] = encode(sk._1, sk._2)
 }
 
-/** Aggregate: merge stored qsketches (elementwise sum; `s` must agree). */
-case class QSketchMergeAgg(child: Expression,
-                           mutableAggBufferOffset: Int = 0,
-                           inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Array[Byte]] with UnaryLike[Expression] {
-
-  override def createAggregationBuffer(): Array[Byte] = Array.emptyByteArray
-
-  private def mergeInto(buffer: Array[Byte], other: Array[Byte]): Array[Byte] =
-    if (other.isEmpty) buffer
-    else if (buffer.isEmpty) other.clone()
-    else {
-      val (sb, cb) = QSketch.decode(buffer)
-      val (so, co) = QSketch.decode(other)
-      require(sb == so,
-        s"cannot merge qsketches of different resolution (s=$sb vs s=$so)")
-      var i = 0
-      while (i < cb.length) { cb(i) += co(i); i += 1 }
-      QSketch.encode(sb, cb)
-    }
-
-  override def update(buffer: Array[Byte], input: InternalRow): Array[Byte] = {
-    val v = child.eval(input)
-    if (v == null) buffer else mergeInto(buffer, v.asInstanceOf[Array[Byte]])
-  }
-  override def merge(buffer: Array[Byte], other: Array[Byte]): Array[Byte] =
-    mergeInto(buffer, other)
-
-  override def eval(buffer: Array[Byte]): Any = buffer
-  override def serialize(buffer: Array[Byte]): Array[Byte] = buffer
-  override def deserialize(storage: Array[Byte]): Array[Byte] = storage
-
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType | NullType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"qsketch_merge expects a binary sketch column, got ${t.simpleString}")
-  }
-  override def prettyName: String = "qsketch_merge"
-  override def withNewMutableAggBufferOffset(newOffset: Int): QSketchMergeAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): QSketchMergeAgg =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildInternal(newChild: Expression): QSketchMergeAgg =
-    copy(child = newChild)
+/** Quantile-sketch parameters: `s` sub-bucket bits, in [1,8]. */
+case class QSketchParams(s: Int) extends SketchParams[(Int, Array[Long])] {
+  QSketch.requireS(s)
+  def format: SketchFormat[(Int, Array[Long])] = QSketch
+  def empty(): (Int, Array[Long]) = (s, new Array[Long](QSketch.numBuckets(s)))
 }
 
 /** Scalar: (sketch, q permille) -> quantile value (bucket lower bound). */

@@ -396,7 +396,7 @@ object Curation {
                windowWords: Int = 128, strideWords: Int = 64): DataFrame = {
     require(strideWords > 0 && windowWords >= strideWords,
       "need windowWords >= strideWords > 0")
-    val words = filter(split(col(textCol), "\\s+"), w => w =!= "")
+    val words = Relevance.spaceTokens(col(textCol))
     val nw = size(words).cast("long")
     // floor((nw-1)/stride)*stride in exact integer arithmetic (`/` on
     // longs is double division in Spark SQL)
@@ -427,7 +427,7 @@ object Curation {
     * divisions — oracle-stable.
     */
   def repetitionStats(df: DataFrame, textCol: String): DataFrame = {
-    val words = filter(split(col(textCol), "\\s+"), w => w =!= "")
+    val words = Relevance.spaceTokens(col(textCol))
     val lines = filter(split(col(textCol), "\n"), l => l =!= "")
     val nw = size(words).cast("long")
     val nl = size(lines).cast("long")
@@ -555,7 +555,7 @@ object Curation {
                     minAlphaWordFrac: Double = 0.80,
                     stopwords: Seq[String] = GopherStopwords,
                     minStopwordHits: Int = 2): DataFrame = {
-    val words = filter(split(col(textCol), "\\s+"), w => w =!= "")
+    val words = Relevance.spaceTokens(col(textCol))
     val nw = col("n_words")
     val alphaFrac = when(nw > 0,
       size(filter(words, w => w.rlike("[a-zA-Z]"))).cast("double") / nw.cast("double"))
@@ -605,7 +605,7 @@ object Curation {
     val lines = split(col(textCol), "\n", -1)
     val keptLines = filter(lines, l =>
       l.rlike("[.!?\"]$") &&
-        size(filter(split(trim(l), "\\s+"), w => w =!= "")) >= minLineWords &&
+        size(Relevance.spaceTokens(l)) >= minLineWords &&
         !lower(l).contains("javascript"))
     val out = df
       .withColumn("c4_text", concat_ws("\n", keptLines))
@@ -1392,7 +1392,7 @@ object Curation {
     // empty gram array (explode drops them; the join-back below restores
     // the row with zeros)
     val grams = df.select(col(idCol), length(col(textCol)).as("_chars"),
-      filter(split(lower(col(textCol)), "\\s+"), w => w =!= "").as("_w"))
+      Relevance.spaceTokens(lower(col(textCol))).as("_w"))
       .select(col(idCol), col("_chars"), explode(expr(
         // array(_w) let-binding: see bigramCoverage
         s"""element_at(transform(array(_w), _ww ->
@@ -1469,7 +1469,7 @@ object Curation {
     */
   def lexicalDiversity(df: DataFrame, idCol: String, textCol: String): DataFrame = {
     val words = df.select(col(idCol),
-        explode(filter(split(lower(col(textCol)), "\\s+"), w => w =!= "")).as("_w"))
+        explode(Relevance.spaceTokens(lower(col(textCol)))).as("_w"))
     val typed = words.groupBy(col(idCol), col("_w")).agg(count(lit(1)).as("_cnt"))
     val perDoc = typed.groupBy(col(idCol)).agg(
       sum(col("_cnt")).as("n_tokens"),

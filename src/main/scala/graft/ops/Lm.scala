@@ -444,7 +444,7 @@ object Lm {
   def wordDropout(df: DataFrame, idCol: String, textCol: String,
                   dropOneIn: Int, seed: String): DataFrame = {
     require(dropOneIn >= 2, "dropOneIn must be >= 2")
-    val toks = filter(split(col(textCol), "\\s+"), t => length(t) > 0)
+    val toks = Relevance.spaceTokens(col(textCol))
     val kept = filter(toks, (_, i) =>
       conv(substring(md5(concat_ws("",
         col(idCol).cast("string"), i.cast("string"), lit(seed))

@@ -36,6 +36,14 @@ object Relevance {
   private[ops] def words(text: Column): Column =
     regexp_extract_all(lower(text), lit("[a-z0-9_']+"), lit(0))
 
+  /** The non-empty whitespace-separated tokens of `text` (split on `\s+`,
+    * the Gopher-rule convention), as array<string>. Every Column-form
+    * whitespace split in `graft.ops` whose tokens must be non-empty calls
+    * this.
+    */
+  private[ops] def spaceTokens(text: Column): Column =
+    filter(split(text, "\\s+"), w => w =!= "")
+
   /** Top-`k` salient terms per document by exact-integer tf-idf.
     *
     * Tokens are the corpus's shared grammar ([[words]]: lowercased

@@ -99,32 +99,47 @@ object Similarity {
     while (it < iters) {
       val sums = Array.fill(centroids.length)(new Array[Double](dim))
       val counts = new Array[Long](centroids.length)
-      sample.foreach { v =>
-        var best = 0
-        var bestSim = Double.MinValue
-        var ci = 0
-        while (ci < centroids.length) {
-          val s = graft.core.TextKernels.cosine(v, centroids(ci))
-          if (s > bestSim) { bestSim = s; best = ci }
-          ci += 1
-        }
-        counts(best) += 1
-        var d = 0
-        while (d < dim) { sums(best)(d) += v(d); d += 1 }
-      }
-      centroids = centroids.indices.map { ci =>
-        if (counts(ci) == 0) centroids(ci)
-        else {
-          val m = new Array[Float](dim)
-          var d = 0
-          while (d < dim) { m(d) = (sums(ci)(d) / counts(ci)).toFloat; d += 1 }
-          m
-        }
-      }.toArray
+      sample.foreach(assignNearest(centroids, _, sums, counts))
+      centroids = lloydMeans(centroids, sums, counts)
       it += 1
     }
     centroids
   }
+
+  /** Lloyd's assign step, shared by both trainers: `v` joins its nearest
+    * centroid by cosine (the first on a tie) in the running `sums` and
+    * `counts`.
+    */
+  private def assignNearest(cs: Array[Array[Float]], v: Array[Float],
+                            sums: Array[Array[Double]], counts: Array[Long]): Unit = {
+    var best = 0
+    var bestSim = Double.MinValue
+    var ci = 0
+    while (ci < cs.length) {
+      val sim = graft.core.TextKernels.cosine(v, cs(ci))
+      if (sim > bestSim) { bestSim = sim; best = ci }
+      ci += 1
+    }
+    counts(best) += 1
+    val acc = sums(best)
+    var d = 0
+    while (d < acc.length) { acc(d) += v(d); d += 1 }
+  }
+
+  /** Lloyd's update step, shared by both trainers: each centroid moves to
+    * its members' mean; an empty cluster keeps its centroid.
+    */
+  private def lloydMeans(cs: Array[Array[Float]], sums: Array[Array[Double]],
+                         counts: Array[Long]): Array[Array[Float]] =
+    Array.tabulate(cs.length) { ci =>
+      if (counts(ci) == 0) cs(ci)
+      else {
+        val m = new Array[Float](sums(ci).length)
+        var d = 0
+        while (d < m.length) { m(d) = (sums(ci)(d) / counts(ci)).toFloat; d += 1 }
+        m
+      }
+    }
 
   /** Distributed mini-batch-free Lloyd: ONE treeAggregate pass over the whole
     * corpus per iteration (centroids broadcast; per-partition partial sums
@@ -159,21 +174,7 @@ object Similarity {
       val bc = sc.broadcast(centroids)
       val zero = (Array.fill(k)(new Array[Double](dim)), new Array[Long](k))
       val (sums, counts) = vecs.treeAggregate(zero)(
-        seqOp = { case ((s, c), v) =>
-          val cs = bc.value
-          var best = 0
-          var bestSim = Double.MinValue
-          var ci = 0
-          while (ci < cs.length) {
-            val sim = graft.core.TextKernels.cosine(v, cs(ci))
-            if (sim > bestSim) { bestSim = sim; best = ci }
-            ci += 1
-          }
-          c(best) += 1
-          var d = 0
-          while (d < dim) { s(best)(d) += v(d); d += 1 }
-          (s, c)
-        },
+        seqOp = { case ((s, c), v) => assignNearest(bc.value, v, s, c); (s, c) },
         combOp = { case ((s1, c1), (s2, c2)) =>
           var ci = 0
           while (ci < k) {
@@ -185,15 +186,7 @@ object Similarity {
           (s1, c1)
         })
       bc.destroy()
-      centroids = Array.tabulate(k) { ci =>
-        if (counts(ci) == 0) centroids(ci)
-        else {
-          val m = new Array[Float](dim)
-          var d = 0
-          while (d < dim) { m(d) = (sums(ci)(d) / counts(ci)).toFloat; d += 1 }
-          m
-        }
-      }
+      centroids = lloydMeans(centroids, sums, counts)
       it += 1
     }
     vecs.unpersist(blocking = false)

@@ -199,7 +199,7 @@ object Stats {
   def zipfTable(df: DataFrame, textCol: String, topN: Int = 200): DataFrame = {
     require(topN >= 1, "topN must be >= 1")
     val words = df.select(explode(
-      filter(split(lower(col(textCol)), "\\s+"), w => w =!= "")).as("word"))
+      Relevance.spaceTokens(lower(col(textCol)))).as("word"))
     val top = words.groupBy(col("word")).agg(count(lit(1)).as("freq"))
       .orderBy(col("freq").desc, col("word").asc)
       .limit(topN)
